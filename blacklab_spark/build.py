@@ -888,13 +888,15 @@ def _dict_kernel(stats: pd.DataFrame, corr: pd.DataFrame) -> pd.DataFrame:
     order_i = np.lexsort((term, tf, annot))
     sort_pos_i = np.empty(len(order_i), np.int64)
     sort_pos_i[order_i] = np.arange(len(order_i))
+    # rows leave in (annot, term_fold, term) order: the file's row-group
+    # statistics then prune the driver-side term lookups (Segment.lookup)
     return pd.DataFrame(
         {
             "annot": annot, "term": term, "df": df, "cf": cf, "term_fold": tf,
             "fold_cf": fold_cf, "fold_df": fold_df, "term_id": term_id,
             "sort_pos_s": term_id, "sort_pos_i": sort_pos_i,
         }
-    )
+    ).iloc[order_i]
 
 
 # ------------------------------------------------------------------- build --
@@ -1197,6 +1199,7 @@ def build_index(
             (
                 terms0.join(fold_rank, "term_id")
                 .coalesce(max(1, n_shards // 4))
+                .sortWithinPartitions("sort_pos_i")  # term-sorted files, no shuffle
                 .write.mode("overwrite").parquet(f"{seg_dir}/terms")
             )
             cache1.unpersist()
@@ -1450,7 +1453,7 @@ def merge_segments(
             )[[
                 "annot", "term", "df", "cf", "term_fold", "fold_cf",
                 "fold_df", "term_id", "sort_pos_s", "sort_pos_i",
-            ]]
+            ]].iloc[order_i]  # (annot, term_fold, term) row order, as the build
 
         (
             merged.withColumn("_g", F.lit(1)).groupBy("_g")
@@ -1471,6 +1474,7 @@ def merge_segments(
         (
             t0d.withColumn("sort_pos_s", F.col("term_id"))
             .join(fr.select("term_id", "sort_pos_i"), "term_id")
+            .sortWithinPartitions("sort_pos_i")
             .write.mode("overwrite").parquet(f"{seg_dir}/terms")
         )
         c1.unpersist(), c2.unpersist()

@@ -1341,7 +1341,9 @@ class IcebergTable:
         md["current-snapshot-id"] = snap_id
         md["last-sequence-number"] = seq
         md["last-updated-ms"] = now_ms
-        md["refs"] = {"main": {"snapshot-id": snap_id, "type": "branch"}}
+        # merge, never replace: a replaced map drops every tag, and the next
+        # expire_snapshots would then delete the tagged snapshot's list
+        md["refs"] = {**md.get("refs", {}), "main": {"snapshot-id": snap_id, "type": "branch"}}
         self._write_metadata(self._meta_dir, self._version + 1, md)
         self.refresh()
         return snap_id

@@ -9,6 +9,14 @@ sort order, so row groups prune), grouped by shard, and a vectorized numpy
 kernel runs per shard with NO shuffle of posting data. Global top-k is a
 `orderBy().limit(k)` over n_shards × k candidate rows.
 
+The fixed cost of a ranked query is its Spark jobs and Python stages, not its
+data, so nothing on the blocking path of one runs a job or a Python stage
+that does not score postings: query terms resolve on the driver from the
+term-sorted terms files (pyarrow, Segment.lookup), each posting row gets its
+query index from one literal map expression, the head is ranked on the JVM
+(rank.rank_head), and topk_and intersects its AND set inside the scoring
+kernel — one Python stage per ranked term query.
+
 Sensitivity: postings are built over surface terms; an insensitive (folded)
 query expands to the OR of its surface variants via the terms dict — the same
 move as the reference's BLSpanMultiTermQueryWrapper term expansion
@@ -21,7 +29,7 @@ import json
 import os
 import re
 import weakref
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -52,6 +60,22 @@ class Segment:
     postings: DataFrame
     docs: DataFrame
     terms: DataFrame
+    path: str
+    _terms_ds: object = field(default=None, repr=False)
+
+    def lookup(self, annot: str, col: str, keys, columns: list[str]) -> pd.DataFrame:
+        """Terms-dict rows with `annot` and `col` in `keys`, read on the
+        driver with pyarrow: no Spark job. The files are written in
+        (annot, term_fold, term) order, so row-group statistics prune the
+        read to O(query terms) at any dictionary size; an unsorted file
+        still answers correctly, only with less pruning. The dataset is
+        opened once per Segment (reload() makes new Segments)."""
+        import pyarrow.dataset as pads
+
+        if self._terms_ds is None:
+            self._terms_ds = pads.dataset(f"{self.path}/terms", format="parquet")
+        flt = (pads.field("annot") == annot) & pads.field(col).isin(list(keys))
+        return self._terms_ds.to_table(columns=columns, filter=flt).to_pandas()
 
 
 # live Index instances per index dir — segment merges delete source segment
@@ -113,6 +137,7 @@ class Index:
                     spark.read.parquet(f"{base}/postings"),
                     spark.read.parquet(f"{base}/docs"),
                     spark.read.parquet(f"{base}/terms"),
+                    base,
                 )
             )
         # global corpus stats: doc sets of segments are disjoint, so stats add
@@ -179,9 +204,10 @@ class Index:
     ) -> list[pd.DataFrame]:
         """Per segment: (term_id, qidx, df) for each query term, qidx in
         sorted folded order (fixes the float association order vs the oracle).
-        Returns list aligned with self.segments; also attaches .attrs['df']
-        mapping qidx -> global df. annot selects the annotation layer
-        (reference: annotation select, cql.jj:625-637); every layer folds
+        Returns list aligned with self.segments; also attaches .attrs['gdf']
+        mapping qidx -> global df. The dict is read on the driver
+        (Segment.lookup), so resolving runs no Spark job. annot selects the
+        annotation layer (reference: annotation select, cql.jj:625-637); every layer folds
         its term_fold, so non-word layers match insensitively by default
         (the reference's i-only sensitivity for them).
 
@@ -199,60 +225,32 @@ class Index:
             sens, fold = None, False
         elif sens == "i":
             sens, fold = None, True
-        if sens in ("ci", "di"):
+        partial = sens in ("ci", "di")
+        if partial:
             vf = case_fold_token if sens == "ci" else accent_fold_token
             qs = sorted({vf(t) for t in terms})
-            base = sorted({fold_token(t) for t in terms})
-            qidx = {q: i for i, q in enumerate(qs)}
-            frames = [
-                seg.terms.filter(
-                    (F.col("annot") == annot) & F.col("term_fold").isin(base)
-                ).select(F.lit(i).alias("_seg"), "term_id", "term", "df")
-                for i, seg in enumerate(self.segments)
-            ]
-            u = frames[0]
-            for f in frames[1:]:
-                u = u.unionByName(f)
-            allr = u.toPandas()
-            allr["_v"] = allr["term"].map(vf)
-            allr = allr[allr["_v"].isin(qs)]
-            out, gdf = [], {}
-            for i in range(len(self.segments)):
-                rows = allr[allr["_seg"] == i].drop(columns=["_seg"]).copy()
-                rows["qidx"] = rows["_v"].map(qidx)
-                out.append(rows)
-                for q, grp in rows.groupby("qidx"):
-                    gdf[q] = gdf.get(q, 0) + int(grp["df"].sum())
-            for r in out:
-                r.attrs["gdf"] = gdf
-                r.attrs["n_q"] = len(qs)
-            return out
-        if fold:
-            qs = sorted({fold_token(t) for t in terms})
-            col = "term_fold"
+            keys, col = sorted({fold_token(t) for t in terms}), "term_fold"
+            cols = ["term_id", "term", "df"]
         else:
-            qs = sorted(set(terms))
-            col = "term"
+            qs = sorted({fold_token(t) for t in terms} if fold else set(terms))
+            keys, col = qs, "term_fold" if fold else "term"
+            cols = ["term_id", col, "df", "fold_df"]
         qidx = {q: i for i, q in enumerate(qs)}
-        frames = [
-            seg.terms.filter((F.col("annot") == annot) & F.col(col).isin(qs))
-            .select(F.lit(i).alias("_seg"), "term_id", col, "df", "fold_df")
-            for i, seg in enumerate(self.segments)
-        ]
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f)
-        allr = u.toPandas()  # ONE Spark job for all segments, not one each
-        out, gdf = [], {}
         dfc = "fold_df" if fold else "df"
-        for i in range(len(self.segments)):
-            rows = allr[allr["_seg"] == i].drop(columns=["_seg"]).copy()
-            rows["qidx"] = rows[col].map(qidx)
+        out, gdf = [], {}
+        for seg in self.segments:
+            rows = seg.lookup(annot, col, keys, cols)
+            if partial:
+                rows["_v"] = rows["term"].map(vf)
+                rows = rows[rows["_v"].isin(qs)].assign(qidx=lambda r: r["_v"].map(qidx))
+            else:
+                rows["qidx"] = rows[col].map(qidx)
             out.append(rows)
             for q, grp in rows.groupby("qidx"):
                 # within a segment, fold_df is already the distinct-doc count
                 # over all variants; across segments doc sets are disjoint
-                gdf[q] = gdf.get(q, 0) + int(grp[dfc].iloc[0])
+                d = grp["df"].sum() if partial else grp[dfc].iloc[0]
+                gdf[q] = gdf.get(q, 0) + int(d)
         for r in out:
             r.attrs["gdf"] = gdf
             r.attrs["n_q"] = len(qs)
@@ -262,25 +260,16 @@ class Index:
         self, qs: list[str], fold: bool = True, annot: str = "word"
     ) -> list[pd.DataFrame]:
         """Per-segment (term_id, key) rows for the given already-folded term
-        strings — ONE Spark job for all segments (the same union trick as
-        resolve()), so driver job count stays O(1) in segment count even on
-        an uncompacted many-segment index. Callers map key -> their own qidx
-        (phrase position, yes/no flag, ...)."""
+        strings, looked up on the driver (Segment.lookup: no Spark job, so
+        the cost stays O(query terms) in segment count and dictionary size).
+        Callers map key -> their own qidx (phrase position, yes/no flag,
+        ...)."""
         self._check_annot(annot)
         col = "term_fold" if fold else "term"
         uniq = sorted(set(qs))
-        frames = [
-            seg.terms.filter((F.col("annot") == annot) & F.col(col).isin(uniq))
-            .select(F.lit(i).alias("_seg"), "term_id", F.col(col).alias("key"))
-            for i, seg in enumerate(self.segments)
-        ]
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f)
-        allr = u.toPandas()
         return [
-            allr[allr["_seg"] == i].drop(columns=["_seg"]).reset_index(drop=True)
-            for i in range(len(self.segments))
+            seg.lookup(annot, col, uniq, ["term_id", col]).rename(columns={col: "key"})
+            for seg in self.segments
         ]
 
     def _postings_for(self, seg: Segment, tids: pd.DataFrame, need_pos: bool) -> DataFrame:
@@ -288,11 +277,18 @@ class Index:
             "shard", "term_id", "doc_count", "first_doc", "last_doc",
             "max_tf", "min_dl", "doc_ids", "tfs", "dls",
         ] + (["positions"] if need_pos else [])
-        p = seg.postings.select(*cols).filter(
-            F.col("term_id").isin([int(t) for t in tids["term_id"]])
+        qpos: dict[int, list[int]] = {}
+        for t, q in zip(tids["term_id"], tids["qidx"]):
+            qpos.setdefault(int(t), []).append(int(q))
+        # qidx as ONE literal map expression keyed by term_id, so attaching
+        # it costs no Spark job. A term repeated in a phrase maps to all its
+        # positions and explodes into one row per position.
+        qmap = ", ".join(f"{t}L, array({', '.join(map(str, q))})" for t, q in qpos.items())
+        return (
+            seg.postings.select(*cols)
+            .filter(F.col("term_id").isin(list(qpos)))
+            .withColumn("qidx", F.expr(f"explode(map({qmap})[term_id])"))
         )
-        qmap = self.spark.createDataFrame(tids[["term_id", "qidx"]])
-        return p.join(F.broadcast(qmap), "term_id")
 
     # ----------------------------------------------------------- span ops ---
     def term_hits(
@@ -381,16 +377,8 @@ class Index:
         col = "term_fold" if fold else "term"
         q = fold_token(term) if fold else term
         dfc = "fold_df" if fold else "df"
-        parts = [
-            seg.terms.filter((F.col("annot") == annot) & (F.col(col) == q)).agg(
-                F.max(dfc).alias("v")
-            )
-            for seg in self.segments
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return sum(int(r["v"] or 0) for r in u.collect())  # one job
+        rows = [seg.lookup(annot, col, [q], [dfc]) for seg in self.segments]
+        return sum(int(r[dfc].max()) for r in rows if len(r))
 
     def regex_stats(self, pattern: str, fold: bool = True) -> tuple[int, int]:
         """(n matching terms, total df) for a regex over the dict — the cost
@@ -527,16 +515,7 @@ class Index:
         reference reads term stats the same way, LuceneUtil.termFrequencies)."""
         col = "term_fold" if fold else "term"
         q = fold_token(term) if fold else term
-        parts = [
-            seg.terms.filter((F.col("annot") == "word") & (F.col(col) == q)).agg(
-                F.sum("cf").alias("cf")
-            )
-            for seg in self.segments
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return sum(int(r["cf"] or 0) for r in u.collect())  # one job
+        return sum(int(seg.lookup("word", col, [q], ["cf"])["cf"].sum()) for seg in self.segments)
 
     # ------------------------------------------------------------- ranking --
     def topk(
@@ -549,36 +528,17 @@ class Index:
     ) -> DataFrame:
         """BM25 top-k: shard-local scoring kernels (block-max skipping for
         single-term queries) + global orderBy(score desc, doc_id).limit(k)."""
-        avgdl = self.avgdl
-        n = self.n_docs
         parts = []
         for seg, tids in zip(self.segments, self.resolve(terms, fold)):
             if len(tids) == 0:
                 continue
-            gdf = tids.attrs["gdf"]
-            idf = {q: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5))) for q, d in gdf.items()}
-            p = self._postings_for(seg, tids, False)
-            if where_lang is None:
-                parts.append(
-                    p.groupBy("shard").applyInPandas(
-                        _score_kernel(idf, avgdl, k, quantize), SCORE_SCHEMA
-                    )
-                )
-            else:
+            kern = _score_kernel(self._idf(tids), self.avgdl, k, quantize)
+            p = self._postings_for(seg, tids, False).groupby("shard")
+            if where_lang is not None:
                 allowed = seg.docs.filter(F.col("lang") == where_lang).select("shard", "doc_id")
-                parts.append(
-                    p.groupby("shard")
-                    .cogroup(allowed.groupby("shard"))
-                    .applyInPandas(
-                        _score_kernel_filtered(idf, avgdl, k, quantize), SCORE_SCHEMA
-                    )
-                )
-        scored = self._union(parts, SCORE_SCHEMA)
-        from .rank import rank_head
-
-        top = rank_head(scored, [("score", False), ("doc_id", True)], 0, k, "rank")
-        urls = self.docs.select("doc_id", "url")
-        return top.join(urls, "doc_id").select("rank", "doc_id", "url", "score")
+                p, kern = p.cogroup(allowed.groupby("shard")), _cogrouped(kern)
+            parts.append(p.applyInPandas(kern, SCORE_SCHEMA))
+        return self._ranked(self._union(parts, SCORE_SCHEMA), k)
 
     def topk_and(
         self, terms: list[str], k: int = 10, fold: bool = True, quantize: bool = True
@@ -587,34 +547,30 @@ class Index:
         for docs containing ALL of them — the posting-list-intersection
         ranked query next to the disjunctive WAND path. Doc ids are
         segment-partitioned, so the conjunctive doc set is exact per
-        segment: the docset kernel computes it from the same postings and
-        feeds the filtered scoring kernel as the allowed set (the
-        block-max walk stays exact under a doc filter — see
-        _score_kernel_filtered)."""
-        avgdl = self.avgdl
-        n = self.n_docs
+        shard: the scoring kernel intersects it from the postings it was
+        handed and walks the blocks restricted to it (the block-max walk
+        stays exact under a doc filter — see _score_kernel). One Python
+        stage, no join with docs."""
         n_q = len({fold_token(t) if fold else t for t in terms})
         parts = []
         for seg, tids in zip(self.segments, self.resolve(terms, fold)):
             if len(tids) == 0 or tids["qidx"].nunique() < n_q:
                 continue  # a term is absent from this segment: no AND docs
-            gdf = tids.attrs["gdf"]
-            idf = {q: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5))) for q, d in gdf.items()}
+            kern = _score_kernel(self._idf(tids), self.avgdl, k, quantize, n_and=n_q)
             p = self._postings_for(seg, tids, False)
-            and_ids = p.groupBy("shard").applyInPandas(
-                _docset_kernel("and", n_q), "doc_id long"
-            )
-            allowed = seg.docs.select("shard", "doc_id").join(
-                and_ids, "doc_id", "left_semi"
-            )
-            parts.append(
-                p.groupby("shard")
-                .cogroup(allowed.groupby("shard"))
-                .applyInPandas(
-                    _score_kernel_filtered(idf, avgdl, k, quantize), SCORE_SCHEMA
-                )
-            )
-        scored = self._union(parts, SCORE_SCHEMA)
+            parts.append(p.groupby("shard").applyInPandas(kern, SCORE_SCHEMA))
+        return self._ranked(self._union(parts, SCORE_SCHEMA), k)
+
+    def _idf(self, tids: pd.DataFrame) -> dict:
+        n = self.n_docs
+        return {
+            q: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5)))
+            for q, d in tids.attrs["gdf"].items()
+        }
+
+    def _ranked(self, scored: DataFrame, k: int) -> DataFrame:
+        """The ranked-query tail: global (score desc, doc_id) top-k ranked
+        on the JVM (rank.rank_head), then the url join over <= k doc ids."""
         from .rank import rank_head
 
         top = rank_head(scored, [("score", False), ("doc_id", True)], 0, k, "rank")
@@ -636,8 +592,6 @@ class Index:
         TakeOrderedAndProject for the bounded top-k. Scores use exact doc
         lengths (no stored block-max is involved in live span scoring, so
         there is no quantized-norm parity to preserve)."""
-        from .rank import rank_head
-
         # materialize tf: BOTH the df-count branch and the scoring branch
         # read it, and without a materialization Spark re-evaluates the
         # whole hits subtree (span joins/kernels — the expensive part) once
@@ -669,9 +623,7 @@ class Index:
                 ).alias("score"),
             )
         )
-        top = rank_head(scored, [("score", False), ("doc_id", True)], 0, k, "rank")
-        urls = self.docs.select("doc_id", "url")
-        return top.join(urls, "doc_id").select("rank", "doc_id", "url", "score")
+        return self._ranked(scored, k)
 
     def topk_phrase(self, words: list[str], k: int = 10, fold: bool = True) -> DataFrame:
         """Ranked exact-phrase query: BM25 where the phrase is the unit."""
@@ -1286,17 +1238,27 @@ def _near_kernel(min_gap: int, max_gap: int, ordered: bool):
     return kernel
 
 
+def _cogrouped(kernel):
+    """Two-argument form of a kernel(pdf, *right) for cogroup().applyInPandas
+    (pyspark dispatches on the declared argument count)."""
+    return lambda left, right: kernel(left, right)
+
+
+def _and_docs(qidx: np.ndarray, doc: np.ndarray, n_q: int) -> np.ndarray:
+    """Sorted doc ids holding every qidx in 0..n_q-1."""
+    cur = np.unique(doc[qidx == 0])
+    for i in range(1, n_q):
+        cur = np.intersect1d(cur, np.unique(doc[qidx == i]), assume_unique=True)
+    return cur
+
+
 def _docset_kernel(op: str, n_q: int):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         qidx, doc, _, _ = _decode_group(pdf, False)
         if len(doc) == 0:
             return pd.DataFrame(columns=["doc_id"])
         if op == "and":
-            cur = None
-            for i in range(n_q):
-                s = np.unique(doc[qidx == i])
-                cur = s if cur is None else np.intersect1d(cur, s, assume_unique=True)
-            out = cur if cur is not None else np.empty(0, np.int64)
+            out = _and_docs(qidx, doc, n_q)
         else:  # andnot: qidx 0 minus qidx 1
             yes = np.unique(doc[qidx == 0])
             no = np.unique(doc[qidx == 1])
@@ -1552,131 +1514,90 @@ def _local_topk(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
     return pd.DataFrame({"doc_id": docs, "score": scores})
 
 
-def _score_kernel(idf: dict, avgdl: float, k: int, quantize: bool):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+def _score_kernel(idf: dict, avgdl: float, k: int, quantize: bool, n_and: int = 0):
+    """Per-shard BM25 top-k kernel over one shard's posting blocks.
+
+    kernel(pdf) scores every doc; kernel(pdf, allowed) — the cogroup form,
+    `allowed` a frame of doc_ids — scores only the allowed docs (pyspark
+    picks the call form from the declared argument count, so a cogroup
+    passes _cogrouped(kernel)). n_and > 1 restricts to docs holding all
+    n_and query terms (the AND set, intersected from the same postings: one
+    Python stage for topk_and).
+
+    Under a doc filter the block-max walks stay EXACT: blocks whose
+    [first_doc, last_doc] range holds no allowed doc are dropped before
+    anything decodes, and a block's bound over all its docs bounds the
+    allowed subset too."""
+
+    def kernel(pdf: pd.DataFrame, *right: pd.DataFrame) -> pd.DataFrame:
+        allowed = np.unique(right[0]["doc_id"].to_numpy(np.int64)) if right else None
+        if n_and > 1 and len(pdf):
+            qx = pdf["qidx"].to_numpy(np.int64)
+            dc = [delta_decode(decode_ints(b)) for b in pdf["doc_ids"]]
+            and_ids = _and_docs(np.repeat(qx, [len(d) for d in dc]), np.concatenate(dc), n_and)
+            allowed = and_ids if allowed is None else np.intersect1d(allowed, and_ids)
+        if allowed is not None and len(pdf):
+            fd = pdf["first_doc"].to_numpy(np.int64)
+            ld = pdf["last_doc"].to_numpy(np.int64)
+            pdf = pdf[np.searchsorted(allowed, ld, "right") > np.searchsorted(allowed, fd, "left")]
         if len(pdf) == 0:
             return pd.DataFrame(columns=["doc_id", "score"])
+
+        def scored(rows):
+            qx, dc, tf, dl = _decode_group(rows, False)
+            if allowed is not None:
+                m = np.isin(dc, allowed)
+                qx, dc, tf, dl = qx[m], dc[m], tf[m], dl[m]
+            return _score_arrays(qx, dc, tf, dl, idf, avgdl, quantize)
+
+        if len(idf) > 1:
+            d, s, _, _ = _wand_multi(pdf, idf, avgdl, k, quantize, allowed=allowed)
+            return _local_topk(d, s, k)
         # block-max skipping is valid only when each doc appears in exactly one
         # block: one query term AND one surface variant (one posting list)
-        if len(idf) == 1 and pdf["term_id"].nunique() == 1:
-            # block-max skipping: process blocks in upper-bound-desc order,
-            # stop when the bound can't beat the current kth score
-            q = next(iter(idf))
-            mt = pdf["max_tf"].to_numpy(np.float64)
-            # the bound must be computed over the SAME dl transform the scorer
-            # uses: quantize_dl rounds DOWN, so a raw min_dl bound could sit
-            # BELOW a block's true max score and wrongly prune it. quantize_dl
-            # is monotone, so quantize_dl(min_dl) is a valid per-block min.
-            ml_i = pdf["min_dl"].to_numpy(np.int64)
-            if quantize:
-                ml_i = quantize_dl(ml_i)
-            ml = ml_i.astype(np.float64)
-            bound = idf[q] * (K1 + 1) * mt / (mt + K1 * (1 - B + B * ml / avgdl))
-            order = np.argsort(-bound)
-            # decode in bound-descending CHUNKS, not block-at-a-time: one
-            # pandas slice + one _decode_group per chunk is ~6x cheaper than
-            # per-block iloc (measured 24ms -> 4ms on a 24-block head-term
-            # shard), and the skip test between chunks keeps the pruning —
-            # at most CHUNK-1 extra blocks decode vs the exact walk
-            best_docs, best_scores = [], []
-            kth = -np.inf
-            n_seen = 0
-            ci, chunk = 0, 4  # ramp 4 -> 32: tail terms stop after one tiny chunk
-            while ci < len(order):
-                take = order[ci : ci + chunk]
-                ci += chunk
-                chunk = 32
-                if n_seen >= k:
-                    # keep ties (>=): a block bounding exactly kth can hold a
-                    # doc tying the kth score with a smaller doc_id (the
-                    # global tie-break), same rule as _wand_multi's theta
-                    take = take[bound[take] >= kth]
-                    if len(take) == 0:
-                        break
-                rows = pdf.iloc[take]
-                qx, dc, tf, dl = _decode_group(rows, False)
-                d, s = _score_arrays(qx, dc, tf, dl, idf, avgdl, quantize)
-                best_docs.append(d)
-                best_scores.append(s)
-                n_seen += len(d)
-                if n_seen >= k:
-                    allsc = np.concatenate(best_scores)
-                    kth = np.partition(allsc, -k)[-k] if len(allsc) >= k else -np.inf
-            if not best_docs:
-                return pd.DataFrame(columns=["doc_id", "score"])
-            return _local_topk(np.concatenate(best_docs), np.concatenate(best_scores), k)
-        if len(idf) > 1:
-            d, s, _, _ = _wand_multi(pdf, idf, avgdl, k, quantize)
-            return _local_topk(d, s, k)
-        qx, dc, tf, dl = _decode_group(pdf, False)
-        d, s = _score_arrays(qx, dc, tf, dl, idf, avgdl, quantize)
-        return _local_topk(d, s, k)
-
-    return kernel
-
-
-def _score_kernel_filtered(idf: dict, avgdl: float, k: int, quantize: bool):
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=["doc_id", "score"])
-        allowed = np.unique(right["doc_id"].to_numpy(np.int64))
-        # single-term: the block-max walk stays EXACT under a doc filter —
-        # a block's bound is an upper bound over ALL its docs, hence over
-        # the allowed subset too. Two prunes the unfiltered path can't get:
-        # drop blocks whose [first_doc, last_doc] range contains no allowed
-        # doc at all (doc-sorted blocks, one searchsorted), then the same
-        # chunked bound-descending walk with the kth cutoff.
-        if len(idf) == 1 and left["term_id"].nunique() == 1:
-            q = next(iter(idf))
-            fd = left["first_doc"].to_numpy(np.int64)
-            ld = left["last_doc"].to_numpy(np.int64)
-            nonempty = np.searchsorted(allowed, ld, side="right") > np.searchsorted(
-                allowed, fd, side="left"
-            )
-            pdf = left[nonempty]
-            if len(pdf) == 0:
-                return pd.DataFrame(columns=["doc_id", "score"])
-            mt = pdf["max_tf"].to_numpy(np.float64)
-            ml_i = pdf["min_dl"].to_numpy(np.int64)
-            if quantize:
-                ml_i = quantize_dl(ml_i)
-            ml = ml_i.astype(np.float64)
-            bound = idf[q] * (K1 + 1) * mt / (mt + K1 * (1 - B + B * ml / avgdl))
-            order = np.argsort(-bound)
-            best_docs, best_scores = [], []
-            kth = -np.inf
-            n_seen = 0
-            ci, chunk = 0, 4
-            while ci < len(order):
-                take = order[ci : ci + chunk]
-                ci += chunk
-                chunk = 32
-                if n_seen >= k:
-                    take = take[bound[take] >= kth]  # keep ties (doc_id break)
-                    if len(take) == 0:
-                        break
-                qx, dc, tf, dl = _decode_group(pdf.iloc[take], False)
-                m = np.isin(dc, allowed)
-                d, s = _score_arrays(qx[m], dc[m], tf[m], dl[m], idf, avgdl, quantize)
-                best_docs.append(d)
-                best_scores.append(s)
-                n_seen += len(d)
-                if n_seen >= k:
-                    allsc = np.concatenate(best_scores)
-                    kth = np.partition(allsc, -k)[-k] if len(allsc) >= k else -np.inf
-            if not best_docs:
-                return pd.DataFrame(columns=["doc_id", "score"])
-            return _local_topk(
-                np.concatenate(best_docs), np.concatenate(best_scores), k
-            )
-        if len(idf) > 1:
-            # multi-term + filter: the WAND walk with the allowed set —
-            # range-pruned blocks, theta over allowed docs only
-            d, s, _, _ = _wand_multi(left, idf, avgdl, k, quantize, allowed=allowed)
-            return _local_topk(d, s, k)
-        qx, dc, tf, dl = _decode_group(left, False)
-        mask = np.isin(dc, allowed)
-        d, s = _score_arrays(qx[mask], dc[mask], tf[mask], dl[mask], idf, avgdl, quantize)
-        return _local_topk(d, s, k)
+        if pdf["term_id"].nunique() > 1:
+            return _local_topk(*scored(pdf), k)
+        # block-max skipping: process blocks in upper-bound-desc order,
+        # stop when the bound can't beat the current kth score
+        q = next(iter(idf))
+        mt = pdf["max_tf"].to_numpy(np.float64)
+        # the bound must be computed over the SAME dl transform the scorer
+        # uses: quantize_dl rounds DOWN, so a raw min_dl bound could sit
+        # BELOW a block's true max score and wrongly prune it. quantize_dl
+        # is monotone, so quantize_dl(min_dl) is a valid per-block min.
+        ml_i = pdf["min_dl"].to_numpy(np.int64)
+        if quantize:
+            ml_i = quantize_dl(ml_i)
+        ml = ml_i.astype(np.float64)
+        bound = idf[q] * (K1 + 1) * mt / (mt + K1 * (1 - B + B * ml / avgdl))
+        order = np.argsort(-bound)
+        # decode in bound-descending CHUNKS, not block-at-a-time: one
+        # pandas slice + one _decode_group per chunk is ~6x cheaper than
+        # per-block iloc (measured 24ms -> 4ms on a 24-block head-term
+        # shard), and the skip test between chunks keeps the pruning —
+        # at most CHUNK-1 extra blocks decode vs the exact walk
+        best_docs, best_scores = [], []
+        kth = -np.inf
+        n_seen = 0
+        ci, chunk = 0, 4  # ramp 4 -> 32: tail terms stop after one tiny chunk
+        while ci < len(order):
+            take = order[ci : ci + chunk]
+            ci += chunk
+            chunk = 32
+            if n_seen >= k:
+                # keep ties (>=): a block bounding exactly kth can hold a
+                # doc tying the kth score with a smaller doc_id (the
+                # global tie-break), same rule as _wand_multi's theta
+                take = take[bound[take] >= kth]
+                if len(take) == 0:
+                    break
+            d, s = scored(pdf.iloc[take])
+            best_docs.append(d)
+            best_scores.append(s)
+            n_seen += len(d)
+            if n_seen >= k:
+                allsc = np.concatenate(best_scores)
+                kth = np.partition(allsc, -k)[-k] if len(allsc) >= k else -np.inf
+        return _local_topk(np.concatenate(best_docs), np.concatenate(best_scores), k)
 
     return kernel

@@ -8,6 +8,8 @@ Asserts:
 3. the hit-window / top-k paths contain no single-partition WindowExec
 4. regex path: no driver-collected IN-list (no in(term_id, [...]) literal
    explosion), join against the dict instead
+5. ranked term queries (topk, topk_and): exactly one Python stage, the
+   shard scoring kernel, and none above TakeOrderedAndProject
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+import re  # noqa: E402
+
 from blacklab_spark.session import get_spark  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -25,6 +29,28 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def one_python_stage_below_topk(plan: str) -> bool:
+    """The plan tree holds exactly one FlatMapGroupsInPandas /
+    FlatMapCoGroupsInPandas node, and it sits under a TakeOrderedAndProject
+    (no Python stage between the top-k and the result)."""
+    tree = plan.split("\n\n")[0].splitlines()
+
+    def depth(i):
+        return len(tree[i]) - len(tree[i].lstrip(" :+-|"))
+
+    py = [i for i, ln in enumerate(tree) if re.search(r"FlatMap(Co)?GroupsInPandas \(", ln)]
+    if len(py) != 1:
+        return False
+    i = py[0]
+    # the nearest shallower lines above node i are its ancestors
+    anc, d = [], depth(i)
+    for j in range(i - 1, -1, -1):
+        if depth(j) < d:
+            anc.append(tree[j])
+            d = depth(j)
+    return any("TakeOrderedAndProject (" in a for a in anc)
 
 
 def main() -> None:
@@ -101,13 +127,11 @@ def main() -> None:
 
     # 7. ranked span queries: bounded top-k (TakeOrderedAndProject), no
     #    cartesian; BNLJ only for the 1-row df broadcast
-    import re as _re
-
     p = plan_of(ix.topk_phrase(["fast", "sort"], k=10))
     # formatted plans print each node twice (tree + details): count node
     # headers, not substring hits — exactly ONE BNLJ (the 1-row df
     # broadcast) is the allowed shape
-    n_bnlj = len(_re.findall(r"\) BroadcastNestedLoopJoin", p))
+    n_bnlj = len(re.findall(r"\) BroadcastNestedLoopJoin", p))
     check(
         "topk_phrase bounded + no cartesian",
         "TakeOrderedAndProject" in p and "CartesianProduct" not in p
@@ -121,6 +145,17 @@ def main() -> None:
         and ("Window" not in p or "PartitionBy" in p),
         p[:800],
     )
+
+    # 8. ranked term queries: ONE Python stage (the shard scoring kernel;
+    #    topk_and's AND set is computed inside it), ranks numbered on the JVM
+    for nm, df in (
+        ("topk", ix.topk(["table"], k=10)),
+        ("topk multi-term", ix.topk(["table", "vector"], k=10)),
+        ("topk where_lang", ix.topk(["table"], k=10, where_lang="en")),
+        ("topk_and", ix.topk_and(["table", "vector"], k=10)),
+    ):
+        p = plan_of(df)
+        check(f"{nm} one Python stage, below the top-k", one_python_stage_below_topk(p), p[:1200])
 
     print(f"\n{len(failures)} failures")
     spark.stop()

@@ -1056,3 +1056,19 @@ def test_tags_and_ref_reads(spark, tmp_path):
         t.read(spark, ref="crawl-2021", snapshot_id=s3)
     with pytest.raises(ValueError):
         t.tag("main")
+
+
+def test_append_keeps_tags_through_expiry(spark, tmp_path):
+    """An append merges the refs map instead of replacing it: a tag made
+    before the append still pins its snapshot through expire_snapshots."""
+    loc = str(tmp_path / "tag_append")
+    t = IcebergTable.create(loc, "url string, text string")
+    t.append(spark, spark.createDataFrame([("http://t/0", "row 0")], "url string, text string"))
+    s1 = t.snapshots()[0]["snapshot-id"]
+    t.tag("v1", s1)
+    t.append(spark, spark.createDataFrame([("http://t/1", "row 1")], "url string, text string"))
+    t.expire_snapshots(keep_last=1)
+    assert t.ref_snapshot_id("v1") == s1
+    assert s1 in {s["snapshot-id"] for s in t.snapshots()}
+    assert t.read(spark, ref="v1").count() == 1
+    assert t.read(spark, ref="main").count() == 2

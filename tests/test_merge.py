@@ -4,6 +4,7 @@ compact() rebuild, without re-tokenizing or re-encoding anything."""
 
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from blacklab_spark import bcql
@@ -64,6 +65,13 @@ def test_merge_matches_multisegment(spark, two_seg_dir, tmp_path_factory):
     assert meta["n_shards"] == 4
     for q, want in zip(QUERIES, before):
         assert hs(q(ix)) == want
+    # every terms file, built or merged, is in (annot, term_fold, term) order
+    for seg_dir in [f"{two_seg_dir}/segments/{s.name}" for s in multi.segments] + [
+        f"{merged_dir}/segments/{ix.segments[0].name}"
+    ]:
+        t = pq.read_table(f"{seg_dir}/terms", columns=["annot", "term_fold", "term"])
+        keys = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+        assert keys == sorted(keys), seg_dir
 
 
 def test_merge_matches_rebuild_compact(spark, two_seg_dir, tmp_path_factory):

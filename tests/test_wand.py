@@ -186,7 +186,7 @@ def test_filtered_single_term_chunked_exact():
     """Filtered single-term kernel (cogroup): block-range prefilter + the
     chunked bound walk must equal exhaustive filtered scoring, ties
     included."""
-    from blacklab_spark.query import _score_arrays, _score_kernel_filtered
+    from blacklab_spark.query import _score_arrays, _score_kernel
 
     rng = np.random.default_rng(23)
     n = 4000
@@ -201,7 +201,7 @@ def test_filtered_single_term_chunked_exact():
 
     for quantize in (False, True):
         for k in (5, 25):
-            out = _score_kernel_filtered(idf, avgdl, k, quantize)(pdf, right)
+            out = _score_kernel(idf, avgdl, k, quantize)(pdf, right)
             qx, dc, tf, dl = _decode_group(pdf, False)
             m = np.isin(dc, allowed)
             d_full, s_full = _score_arrays(
@@ -236,7 +236,7 @@ def test_filtered_single_term_prefilters_blocks(monkeypatch):
         return real(rows, need_pos)
 
     monkeypatch.setattr(Q, "_decode_group", counting)
-    out = Q._score_kernel_filtered({0: 1.0}, 100.0, 10, False)(pdf, right)
+    out = Q._score_kernel({0: 1.0}, 100.0, 10, False)(pdf, right)
     assert out["doc_id"].tolist() == [1234]
     assert calls["rows"] == 1, f"decoded {calls['rows']} blocks, expected 1"
 
@@ -274,3 +274,24 @@ def test_wand_filtered_prunes_blocks():
     # 2000 common docs / BLOCK=64 -> 32 blocks; only ~1 overlaps [100, 101]
     assert n_blocks <= 3, f"range prefilter kept {n_blocks} blocks"
     assert set(d_w) <= {100, 101}
+
+
+@pytest.mark.parametrize("quantize", [False, True])
+def test_and_kernel_matches_exhaustive(quantize):
+    """The fused AND kernel (n_and): the doc set intersected inside the
+    scoring kernel plus the filtered WAND walk equal exhaustive scoring of
+    the docs holding every term."""
+    from blacklab_spark.query import _score_kernel
+
+    pdf, idf, avgdl = _corpus(seed=9)
+    qx, dc, tf, dl = _decode_group(pdf, False)
+    both = np.intersect1d(dc[qx == 0], dc[qx == 1])
+    m = np.isin(dc, both)
+    d_full, s_full = _score_arrays(qx[m], dc[m], tf[m], dl[m], idf, avgdl, quantize)
+    for k in (3, 10, 50):
+        order = np.lexsort((d_full, -s_full))[:k]
+        exp = list(zip(d_full[order], np.round(s_full[order], 12)))
+        out = _score_kernel(idf, avgdl, k, quantize, n_and=2)(pdf)
+        oo = np.lexsort((out["doc_id"].to_numpy(), -out["score"].to_numpy()))[:k]
+        got = list(zip(out["doc_id"].to_numpy()[oo], np.round(out["score"].to_numpy()[oo], 12)))
+        assert got == exp, k
