@@ -1441,9 +1441,9 @@ def build_queries() -> dict:
             except OSError:  # concurrent synth won the race
                 shutil.rmtree(tmp, ignore_errors=True)
         t = IcebergTable(cache)
-        snap1 = t.snapshots()[0]["snapshot-id"]
-        a = t.read(s, snapshot_id=snap1).withColumn("batch", F.lit(1))
-        b = t.read_incremental(s, snap1).withColumn("batch", F.lit(2))
+        snap1 = t.snapshots()[0]
+        a = t.read(s, snapshot_id=snap1["snapshot-id"]).withColumn("batch", F.lit(1))
+        b = t.read_incremental(s, snap1["sequence-number"]).withColumn("batch", F.lit(2))
         return a.unionByName(b).select(
             "doc_id", F.col("batch").cast("int").alias("batch"), "text", "lang"
         )

@@ -14,10 +14,10 @@ blacklab_spark.avro_io:
 - manifest lists and manifest files as REAL Avro container files with the
   spec's field-ids (manifest_path=500 …, data_file.file_path=100 …), so
   the files are the format, not a look-alike;
-- commits via write-new-version + atomic version-hint rename, with
-  O_EXCL version-file creation as the optimistic-concurrency CAS (losers
-  refresh and re-commit; a catalog supplies the same swap on a real
-  deployment);
+- one commit path, ``IcebergTable._commit(mutate)``: each change is applied
+  to a fresh load of the current version and committed by creating
+  ``v{N+1}`` with O_EXCL (the swap a catalog supplies on a real deployment);
+  a writer that loses the race re-loads, re-validates and re-applies;
 - scan planning: snapshot-id / as-of-timestamp time travel and
   incremental (start, end] append scans by data sequence number — the
   planner returns the parquet file list and Spark reads it directly.
@@ -43,6 +43,7 @@ walk at cluster scale. Spec anchors: Apache Iceberg Table Spec v2
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
 import os
@@ -169,6 +170,12 @@ _MANIFEST_FILE_SCHEMA = {
 _STATUS_ADDED = 1
 _STATUS_DELETED = 2
 
+# attempts one commit gets before contention is reported as an error
+_COMMIT_ATTEMPTS = 8
+# the orphan sweep leaves files younger than this (Iceberg's default
+# olderThan): an append writes its data and manifests before it commits
+_ORPHAN_MIN_AGE_S = 3 * 24 * 3600
+
 
 # ---------------------------------------------------------------------------
 # partition transforms (spec "Partition Transforms" + Appendix B hashing)
@@ -211,15 +218,11 @@ def murmur3_32(data: bytes, seed: int = 0) -> int:
 
 
 def _bucket_bytes(value, ice_type: str) -> bytes:
-    """Spec Appendix B encodings: int/long as 8-byte little-endian
-    two's-complement (so hash(34) == hash(34L)), timestamps as micros-long,
-    strings as UTF-8, binary raw."""
-    if ice_type in ("int", "long"):
-        return int(value).to_bytes(8, "little", signed=True)
-    if ice_type in ("timestamp", "timestamptz"):
-        return _ts_micros(value).to_bytes(8, "little", signed=True)
-    if ice_type == "date":
-        return int(value).to_bytes(8, "little", signed=True)
+    """Spec Appendix B encodings: int/long/date as 8-byte little-endian
+    two's-complement (so hash(34) == hash(34L), dates as epoch days),
+    timestamps as micros-long, strings as UTF-8, binary raw."""
+    if ice_type in ("int", "long", "date", "timestamp", "timestamptz"):
+        return _ordinal(value, ice_type).to_bytes(8, "little", signed=True)
     if ice_type == "string":
         return str(value).encode("utf-8")
     if ice_type == "binary":
@@ -227,16 +230,21 @@ def _bucket_bytes(value, ice_type: str) -> bytes:
     raise ValueError(f"bucket transform unsupported for type {ice_type}")
 
 
-def _ts_micros(value) -> int:
-    import datetime as _dt
+_EPOCH_ORDINAL = datetime.date(1970, 1, 1).toordinal()
 
-    if isinstance(value, (int, float)):
-        return int(value)
-    if isinstance(value, _dt.datetime):
-        if value.tzinfo is None:  # naive = UTC (session convention)
-            value = value.replace(tzinfo=_dt.timezone.utc)
+
+def _ordinal(value, ice_type: str) -> int:
+    """The spec's integer form of an int/long/date/timestamp value: dates
+    are days since 1970-01-01, timestamps micros since the epoch (naive =
+    UTC, the session convention). Numbers are taken as already in that
+    form."""
+    if ice_type in ("timestamp", "timestamptz") and isinstance(value, datetime.datetime):
+        if value.tzinfo is None:
+            value = value.replace(tzinfo=datetime.timezone.utc)
         return int(value.timestamp() * 1_000_000)
-    raise ValueError(f"not a timestamp: {value!r}")
+    if ice_type == "date" and isinstance(value, datetime.date):
+        return value.toordinal() - _EPOCH_ORDINAL
+    return int(value)
 
 
 def parse_transform(expr: str) -> tuple[str, int | None, str]:
@@ -268,7 +276,8 @@ def apply_transform(transform: str, param: int | None, value, ice_type: str):
     if transform == "identity":
         return value
     if transform == "day":
-        return _ts_micros(value) // 86_400_000_000
+        n = _ordinal(value, ice_type)
+        return n if ice_type == "date" else n // 86_400_000_000
     if transform == "bucket":
         return (murmur3_32(_bucket_bytes(value, ice_type)) & 0x7FFFFFFF) % param
     if transform == "truncate":
@@ -288,19 +297,36 @@ def _local(path_or_uri: str) -> str:
     return path_or_uri
 
 
+def _write_json(path: str, obj) -> None:
+    """Replace `path` with `obj` as JSON through a temp file and
+    os.replace, so a reader or a crash sees the old or the new content,
+    never a truncated file."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _find_snapshot(md: dict, snapshot_id: int) -> dict:
+    for s in md["snapshots"]:
+        if s["snapshot-id"] == snapshot_id:
+            return s
+    raise KeyError(f"unknown snapshot-id {snapshot_id}")
+
+
 def _bound_bytes(value, ice_type: str) -> bytes:
     """Spec Appendix D single-value binary serialization (the encoding of
     lower_bounds/upper_bounds map values)."""
     import struct as _st
 
-    if ice_type == "int":
-        return int(value).to_bytes(4, "little", signed=True)
-    if ice_type == "long":
-        return int(value).to_bytes(8, "little", signed=True)
-    if ice_type in ("timestamp", "timestamptz"):
-        return _ts_micros(value).to_bytes(8, "little", signed=True)
-    if ice_type == "date":
-        return int(value).to_bytes(4, "little", signed=True)
+    if ice_type in ("int", "date"):
+        return _ordinal(value, ice_type).to_bytes(4, "little", signed=True)
+    if ice_type in ("long", "timestamp", "timestamptz"):
+        return _ordinal(value, ice_type).to_bytes(8, "little", signed=True)
     if ice_type == "float":
         return _st.pack("<f", float(value))
     if ice_type == "double":
@@ -317,14 +343,8 @@ def _bound_bytes(value, ice_type: str) -> bytes:
 def _bound_value(data: bytes, ice_type: str):
     import struct as _st
 
-    if ice_type == "int":
-        return int.from_bytes(data, "little", signed=True)
-    if ice_type == "long":
-        return int.from_bytes(data, "little", signed=True)
-    if ice_type in ("timestamp", "timestamptz"):
-        return int.from_bytes(data, "little", signed=True)  # micros
-    if ice_type == "date":
-        return int.from_bytes(data, "little", signed=True)
+    if ice_type in ("int", "long", "date", "timestamp", "timestamptz"):
+        return int.from_bytes(data, "little", signed=True)  # _ordinal form
     if ice_type == "float":
         return _st.unpack("<f", data)[0]
     if ice_type == "double":
@@ -397,8 +417,8 @@ def _stats_match(file_info: dict, flt, schema: dict) -> bool:
         lo = _bound_value(lower[fid], f["type"])
         hi = _bound_value(upper[fid], f["type"])
         op, val = cond if isinstance(cond, tuple) else ("=", cond)
-        if f["type"] in ("timestamp", "timestamptz") and not isinstance(val, (int, float)):
-            val = _ts_micros(val)
+        if f["type"] in ("date", "timestamp", "timestamptz") and not isinstance(val, (int, float)):
+            val = _ordinal(val, f["type"])
         if op in ("=", "=="):
             if val < lo or val > hi:
                 return False
@@ -471,12 +491,12 @@ def _partition_match(part: dict, flt) -> bool:
 
 
 class IcebergTable:
-    """One local Iceberg table (append-only subset). Single-writer commits;
-    a real catalog supplies compare-and-swap on a cluster."""
+    """One local Iceberg table (append-only subset). Every metadata change
+    goes through `_commit`, so writers in any number of processes may
+    commit at once and each change lands exactly once."""
 
     def __init__(self, location: str):
         self.location = os.path.abspath(location)
-        self.metadata: dict = {}
         self.refresh()
 
     # -- metadata ------------------------------------------------------
@@ -485,15 +505,19 @@ class IcebergTable:
     def _meta_dir(self) -> str:
         return os.path.join(self.location, "metadata")
 
-    def refresh(self) -> None:
+    def _load(self) -> tuple[int, dict]:
+        """(version, metadata) of the version the hint names, as a freshly
+        parsed dict the caller owns."""
         hint = os.path.join(self._meta_dir, "version-hint.text")
         if not os.path.exists(hint):
             raise FileNotFoundError(f"not an iceberg table: {self.location}")
         with open(hint) as f:
             v = int(f.read().strip())
         with open(os.path.join(self._meta_dir, f"v{v}.metadata.json")) as f:
-            self.metadata = json.load(f)
-        self._version = v
+            return v, json.load(f)
+
+    def refresh(self) -> None:
+        self._version, self.metadata = self._load()
 
     @classmethod
     def create(
@@ -560,19 +584,38 @@ class IcebergTable:
 
     @staticmethod
     def _write_metadata(meta_dir: str, version: int, md: dict) -> None:
-        """Commit one metadata version. The version file is created with
-        O_EXCL — the compare-and-swap a catalog provides: the LOSER of a
-        concurrent commit race gets FileExistsError and must refresh and
-        rebuild its commit on top of the winner (see commit_append's retry
-        loop) instead of silently clobbering it."""
+        """Write metadata version `version`. The version file is created
+        with O_EXCL, the compare-and-swap a catalog provides: when another
+        writer already made it, this raises FileExistsError and nothing is
+        overwritten."""
         path = os.path.join(meta_dir, f"v{version}.metadata.json")
         fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         with os.fdopen(fd, "w") as f:
             json.dump(md, f, indent=2)
-        tmp = os.path.join(meta_dir, f".version-hint.{os.getpid()}-{id(md)}")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(meta_dir, "version-hint.text"))
+        _write_json(os.path.join(meta_dir, "version-hint.text"), version)
+
+    def _commit(self, mutate):
+        """Commit one metadata change and return what `mutate` returned.
+        Each attempt applies `mutate` in place to a fresh load of version N
+        (so it re-reads and re-validates what it depends on) and creates
+        v{N+1}; a writer that lost the race to v{N+1} starts over from the
+        winner's version (Delta Lake's put-if-absent log). An exception
+        from mutate aborts the commit with nothing written."""
+        for _ in range(_COMMIT_ATTEMPTS):
+            version, md = self._load()
+            result = mutate(md)
+            base = os.path.join(self._meta_dir, f"v{version}.metadata.json")
+            md["metadata-log"].append(
+                {"timestamp-ms": md["last-updated-ms"], "metadata-file": _uri(base)}
+            )
+            md["last-updated-ms"] = int(time.time() * 1000)
+            try:
+                self._write_metadata(self._meta_dir, version + 1, md)
+            except FileExistsError:
+                continue
+            self._version, self.metadata = version + 1, md
+            return result
+        raise RuntimeError(f"commit contention: {_COMMIT_ATTEMPTS} CAS retries exhausted")
 
     # -- snapshot resolution -------------------------------------------
 
@@ -585,12 +628,8 @@ class IcebergTable:
 
     def snapshot(self, snapshot_id: int | None = None, as_of_ms: int | None = None) -> dict | None:
         """Resolve a snapshot: pinned id, time travel, or current."""
-        snaps = self.snapshots()
         if snapshot_id is not None:
-            for s in snaps:
-                if s["snapshot-id"] == snapshot_id:
-                    return s
-            raise KeyError(f"unknown snapshot-id {snapshot_id}")
+            return _find_snapshot(self.metadata, snapshot_id)
         if as_of_ms is not None:
             live = [e for e in self.metadata["snapshot-log"] if e["timestamp-ms"] <= as_of_ms]
             if not live:
@@ -598,18 +637,6 @@ class IcebergTable:
             return self.snapshot(live[-1]["snapshot-id"])
         cur = self.current_snapshot_id()
         return None if cur is None else self.snapshot(cur)
-
-    def _retry_cas(self, fn):
-        """Run one commit attempt; on a lost CAS race (FileExistsError
-        from the O_EXCL version write) refresh and rebuild the commit on
-        top of the winner. Orphaned manifest files from lost attempts are
-        harmless (uuid-named, unreferenced) — same as real Iceberg."""
-        for _ in range(8):
-            try:
-                return fn()
-            except FileExistsError:
-                continue
-        raise RuntimeError("commit contention: 8 CAS retries exhausted")
 
     # -- schema evolution / maintenance -----------------------------------
 
@@ -620,28 +647,23 @@ class IcebergTable:
         parquet read yields NULLs for them."""
         if spark_type not in _SPARK_TO_ICE:
             raise ValueError(f"unsupported type {spark_type}")
-        return self._retry_cas(lambda: self._add_column_once(name, spark_type))
 
-    def _add_column_once(self, name: str, spark_type: str) -> None:
-        self.refresh()
-        md = dict(self.metadata)
-        cur = md["schemas"][md["current-schema-id"]]
-        if any(f["name"] == name for f in cur["fields"]):
-            raise ValueError(f"column exists: {name}")
-        new_id = md["last-column-id"] + 1
-        new_schema = {
-            "type": "struct",
-            "schema-id": len(md["schemas"]),
-            "fields": cur["fields"]
-            + [{"id": new_id, "name": name, "required": False,
-                "type": _SPARK_TO_ICE[spark_type]}],
-        }
-        md["schemas"] = md["schemas"] + [new_schema]
-        md["current-schema-id"] = new_schema["schema-id"]
-        md["last-column-id"] = new_id
-        md["last-updated-ms"] = int(time.time() * 1000)
-        self._write_metadata(self._meta_dir, self._version + 1, md)
-        self.refresh()
+        def mutate(md):
+            cur = md["schemas"][md["current-schema-id"]]
+            if any(f["name"] == name for f in cur["fields"]):
+                raise ValueError(f"column exists: {name}")
+            new_id = md["last-column-id"] + 1
+            md["schemas"].append({
+                "type": "struct",
+                "schema-id": len(md["schemas"]),
+                "fields": cur["fields"]
+                + [{"id": new_id, "name": name, "required": False,
+                    "type": _SPARK_TO_ICE[spark_type]}],
+            })
+            md["current-schema-id"] = len(md["schemas"]) - 1
+            md["last-column-id"] = new_id
+
+        self._commit(mutate)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Expire all but the newest `keep_last` snapshots: they leave the
@@ -652,58 +674,48 @@ class IcebergTable:
         Returns the expired snapshot ids."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        return self._retry_cas(lambda: self._expire_once(keep_last))
 
-    def _expire_once(self, keep_last: int) -> list[int]:
-        self.refresh()
-        md = dict(self.metadata)
-        snaps = md["snapshots"]
-        if len(snaps) <= keep_last:
-            return []
-        # tagged snapshots survive expiry (spec: refs retain snapshots)
-        pinned = {
-            r["snapshot-id"] for r in md["refs"].values() if r.get("type") == "tag"
-        }
-        expired = [s for s in snaps[:-keep_last] if s["snapshot-id"] not in pinned]
-        expired_ids = {s["snapshot-id"] for s in expired}
-        kept = [s for s in snaps if s["snapshot-id"] not in expired_ids]
-        kept_lists = {s["manifest-list"] for s in kept}
-        md["snapshots"] = kept
-        kept_ids = {s["snapshot-id"] for s in kept}
-        md["snapshot-log"] = [
-            e for e in md["snapshot-log"] if e["snapshot-id"] in kept_ids
-        ]
-        md["last-updated-ms"] = int(time.time() * 1000)
-        self._write_metadata(self._meta_dir, self._version + 1, md)
+        def mutate(md):
+            # tagged snapshots survive expiry (spec: refs retain snapshots)
+            pinned = {
+                r["snapshot-id"] for r in md["refs"].values() if r.get("type") == "tag"
+            }
+            expired = [
+                s for s in md["snapshots"][:-keep_last] if s["snapshot-id"] not in pinned
+            ]
+            gone = {s["snapshot-id"] for s in expired}
+            md["snapshots"] = [s for s in md["snapshots"] if s["snapshot-id"] not in gone]
+            md["snapshot-log"] = [
+                e for e in md["snapshot-log"] if e["snapshot-id"] not in gone
+            ]
+            return expired
+
+        expired = self._commit(mutate)
+        kept_lists = {s["manifest-list"] for s in self.snapshots()}
         for s in expired:
             if s["manifest-list"] not in kept_lists:
                 try:
                     os.remove(self._resolve(s["manifest-list"]))
                 except FileNotFoundError:
                     pass
-        self.refresh()
         return [s["snapshot-id"] for s in expired]
 
     def tag(self, name: str, snapshot_id: int | None = None) -> None:
         """Create/update a named ref of type 'tag' pinning a snapshot
-        (spec: refs map — `VERSION AS OF <tag>` reads). Tagged snapshots
-        survive expire_snapshots."""
+        (default: the current one at commit time; spec: refs map —
+        `VERSION AS OF <tag>` reads). Tagged snapshots survive
+        expire_snapshots."""
         if name == "main":
             raise ValueError("'main' is the branch ref; pick another name")
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            raise ValueError("cannot tag an empty table")
-        self.refresh()
-        md = dict(self.metadata)
-        md["refs"] = {
-            **md["refs"],
-            name: {"snapshot-id": snap["snapshot-id"], "type": "tag"},
-        }
-        md["last-updated-ms"] = int(time.time() * 1000)
-        self._retry_cas(
-            lambda: self._write_metadata(self._meta_dir, self._version + 1, md)
-        )
-        self.refresh()
+
+        def mutate(md):
+            sid = md["current-snapshot-id"] if snapshot_id is None else snapshot_id
+            if sid == -1:
+                raise ValueError("cannot tag an empty table")
+            _find_snapshot(md, sid)  # KeyError for an unknown or expired id
+            md["refs"][name] = {"snapshot-id": sid, "type": "tag"}
+
+        self._commit(mutate)
 
     def ref_snapshot_id(self, ref: str) -> int:
         r = self.metadata["refs"].get(ref)
@@ -717,16 +729,15 @@ class IcebergTable:
         which is what makes per-file min/max bounds DISJOINT instead of
         overlapping — stats pruning goes from 'keeps most files' to
         'keeps the slice' on the sorted columns."""
-        schema = self.metadata["schemas"][self.metadata["current-schema-id"]]
-        by_name = {f["name"]: f for f in schema["fields"]}
-        for c in columns:
-            if c not in by_name:
-                raise ValueError(f"sort column not in schema: {c}")
-        self.refresh()
-        md = dict(self.metadata)
-        order_id = len(md["sort-orders"])
-        md["sort-orders"] = md["sort-orders"] + [
-            {
+
+        def mutate(md):
+            schema = md["schemas"][md["current-schema-id"]]
+            by_name = {f["name"]: f for f in schema["fields"]}
+            for c in columns:
+                if c not in by_name:
+                    raise ValueError(f"sort column not in schema: {c}")
+            order_id = len(md["sort-orders"])
+            md["sort-orders"].append({
                 "order-id": order_id,
                 "fields": [
                     {
@@ -737,14 +748,10 @@ class IcebergTable:
                     }
                     for c in columns
                 ],
-            }
-        ]
-        md["default-sort-order-id"] = order_id
-        md["last-updated-ms"] = int(time.time() * 1000)
-        self._retry_cas(
-            lambda: self._write_metadata(self._meta_dir, self._version + 1, md)
-        )
-        self.refresh()
+            })
+            md["default-sort-order-id"] = order_id
+
+        self._commit(mutate)
 
     def _sort_columns(self) -> list[str]:
         orders = {o["order-id"]: o for o in self.metadata["sort-orders"]}
@@ -794,6 +801,9 @@ class IcebergTable:
         """Delete metadata/data files not referenced by any RETAINED
         snapshot: manifest lists and manifests orphaned by lost CAS races
         or snapshot expiry, and data files whose commit never succeeded.
+        Files modified within the last _ORPHAN_MIN_AGE_S are kept: an
+        append writes its data files, manifest and manifest list before it
+        commits, and a sweep must not delete an append still in flight.
         Old vN.metadata.json versions are kept (they are the metadata log).
         Returns the deleted paths."""
         self.refresh()
@@ -808,22 +818,25 @@ class IcebergTable:
                     live_data.add(
                         os.path.realpath(self._resolve(e["data_file"]["file_path"]))
                     )
+        cutoff = time.time() - _ORPHAN_MIN_AGE_S
         deleted = []
+
+        def sweep(p: str, live: set) -> None:
+            if p not in live and os.path.getmtime(p) < cutoff:
+                os.remove(p)
+                deleted.append(p)
+
         for fn in os.listdir(self._meta_dir):
             p = os.path.realpath(os.path.join(self._meta_dir, fn))
-            if fn.startswith("snap-") and fn.endswith(".avro") and p not in live_lists:
-                os.remove(p)
-                deleted.append(p)
-            elif fn.startswith("m") and fn.endswith(".avro") and p not in live_manifests:
-                os.remove(p)
-                deleted.append(p)
+            if fn.startswith("snap-") and fn.endswith(".avro"):
+                sweep(p, live_lists)
+            elif fn.startswith("m") and fn.endswith(".avro"):
+                sweep(p, live_manifests)
         data_root = os.path.join(self.location, "data")
         for root, dirs, files in os.walk(data_root, topdown=False):
             for fn in files:
-                p = os.path.realpath(os.path.join(root, fn))
-                if fn.endswith(".parquet") and p not in live_data:
-                    os.remove(p)
-                    deleted.append(p)
+                if fn.endswith(".parquet"):
+                    sweep(os.path.realpath(os.path.join(root, fn)), live_data)
             for d in dirs:  # prune now-empty partition/commit dirs
                 dp = os.path.join(root, d)
                 if not os.listdir(dp):
@@ -1098,33 +1111,33 @@ class IcebergTable:
             if snapshot_id is not None:
                 raise ValueError("pass either ref or snapshot_id, not both")
             snapshot_id = self.ref_snapshot_id(ref)
-        files = self.data_files(
+        return self._scan(spark, self.data_files(
             snapshot_id, as_of_ms,
             partition_filter=partition_filter, stats_filter=stats_filter,
-        )
-        ddl = spark_ddl(self.metadata["schemas"][self.metadata["current-schema-id"]])
-        if not files:
-            return spark.createDataFrame([], ddl)
-        return spark.read.schema(ddl).parquet(*[f["path"] for f in files])
+        ))
 
     def read_incremental(
         self,
         spark: SparkSession,
-        start_snapshot_id: int,
+        after_seq: int,
         end_snapshot_id: int | None = None,
         partition_filter=None,
         stats_filter: dict | None = None,
     ) -> DataFrame:
-        """Rows appended AFTER start_snapshot_id up to end (default
-        current) — the incremental-ingest scan (spec: append scans by data
-        sequence number)."""
-        start_seq = self.snapshot(start_snapshot_id)["sequence-number"]
-        files = self.data_files(
+        """Rows appended AFTER sequence number `after_seq` up to the end
+        snapshot (default current) — the incremental-ingest scan (spec:
+        append scans by data sequence number). A start given as a number,
+        not a snapshot, keeps working after that snapshot has expired."""
+        return self._scan(spark, self.data_files(
             end_snapshot_id,
-            min_sequence_exclusive=start_seq,
+            min_sequence_exclusive=after_seq,
             partition_filter=partition_filter,
             stats_filter=stats_filter,
-        )
+        ))
+
+    def _scan(self, spark: SparkSession, files: list[dict]) -> DataFrame:
+        """Spark read of planned files under the current schema (an empty
+        plan is an empty frame with that schema)."""
         ddl = spark_ddl(self.metadata["schemas"][self.metadata["current-schema-id"]])
         if not files:
             return spark.createDataFrame([], ddl)
@@ -1201,152 +1214,136 @@ class IcebergTable:
     ) -> int:
         """Commit already-written parquet files as one append snapshot.
         `partitions` maps file path -> partition tuple (required fields per
-        the table's spec; omitted = all-null tuple). Optimistic
-        concurrency: a lost version race refreshes and re-commits on
-        top of the winner (the catalog-CAS analog)."""
-        return self._retry_cas(
-            lambda: self._commit_append_once(parquet_files, partitions)
-        )
-
-    def _commit_append_once(self, parquet_files, partitions=None) -> int:
+        the table's spec; omitted = all-null tuple). Each commit attempt
+        writes its own uuid-named manifest and manifest list against the
+        version it loaded; an attempt that loses the race leaves them as
+        unreferenced orphans (remove_orphan_files), as real Iceberg does."""
         import pyarrow.parquet as pq
 
-        self.refresh()
-        md = dict(self.metadata)
-        seq = md["last-sequence-number"] + 1
-        now_ms = int(time.time() * 1000)
-        snap_id = (
-            int.from_bytes(
-                hashlib.md5(
-                    f"{md['table-uuid']}:{seq}".encode()
-                ).digest()[:8],
-                "big",
-            )
-            & 0x3FFFFFFFFFFFFFFF
-        )
-        schema = md["schemas"][md["current-schema-id"]]
-        entries = []
-        added_rows = 0
-        for p in parquet_files:
-            nrows = pq.ParquetFile(p).metadata.num_rows
-            added_rows += nrows
-            lower, upper, nulls = _file_column_stats(p, schema)
-            entries.append(
-                {
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snap_id,
-                    # written as null: exercises the spec's sequence-number
-                    # inheritance on every read path
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": _uri(p),
-                        "file_format": "PARQUET",
-                        "partition": (partitions or {}).get(p, {}),
-                        "record_count": nrows,
-                        "file_size_in_bytes": os.path.getsize(p),
-                        "null_value_counts": [
-                            {"key": k, "value": v} for k, v in sorted(nulls.items())
-                        ],
-                        "lower_bounds": [
-                            {"key": k, "value": v} for k, v in sorted(lower.items())
-                        ],
-                        "upper_bounds": [
-                            {"key": k, "value": v} for k, v in sorted(upper.items())
-                        ],
-                    },
-                }
-            )
-        schema_json = json.dumps(md["schemas"][md["current-schema-id"]])
-        man_path = os.path.join(self._meta_dir, f"m{seq}-{uuid.uuid4().hex}.avro")
-        man_bytes = avro_io.write_container(
-            self._manifest_entry_schema(),
-            entries,
-            meta={
-                "schema": schema_json.encode(),
-                "schema-id": b"0",
-                "partition-spec": json.dumps(self.partition_spec).encode(),
-                "partition-spec-id": b"0",
-                "format-version": b"2",
-                "content": b"data",
-            },
-        )
-        with open(man_path, "wb") as f:
-            f.write(man_bytes)
-
-        prev = self.snapshot()
-        prev_manifests = self._manifest_files(prev) if prev else []
-        manifests = prev_manifests + [
-            {
-                "manifest_path": _uri(man_path),
-                "manifest_length": len(man_bytes),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_data_files_count": len(entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": added_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        ]
-        list_path = os.path.join(
-            self._meta_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro"
-        )
-        with open(list_path, "wb") as f:
-            f.write(
-                avro_io.write_container(
-                    _MANIFEST_FILE_SCHEMA,
-                    manifests,
-                    meta={
-                        "format-version": b"2",
-                        "snapshot-id": str(snap_id).encode(),
-                        "parent-snapshot-id": str(
-                            prev["snapshot-id"] if prev else "null"
-                        ).encode(),
-                        "sequence-number": str(seq).encode(),
-                    },
+        def mutate(md):
+            seq = md["last-sequence-number"] + 1
+            now_ms = int(time.time() * 1000)
+            snap_id = (
+                int.from_bytes(
+                    hashlib.md5(f"{md['table-uuid']}:{seq}".encode()).digest()[:8],
+                    "big",
                 )
+                & 0x3FFFFFFFFFFFFFFF
             )
-        snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": _uri(list_path),
-            "summary": {
-                "operation": "append",
-                "added-data-files": str(len(entries)),
-                "added-records": str(added_rows),
-            },
-            "schema-id": md["current-schema-id"],
-        }
-        if prev:
-            snap["parent-snapshot-id"] = prev["snapshot-id"]
-        md["snapshots"] = md["snapshots"] + [snap]
-        md["snapshot-log"] = md["snapshot-log"] + [
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        ]
-        md["metadata-log"] = md["metadata-log"] + [
-            {
-                "timestamp-ms": md["last-updated-ms"],
-                "metadata-file": _uri(
-                    os.path.join(self._meta_dir, f"v{self._version}.metadata.json")
-                ),
+            schema = md["schemas"][md["current-schema-id"]]
+            entries = []
+            added_rows = 0
+            for p in parquet_files:
+                nrows = pq.ParquetFile(p).metadata.num_rows
+                added_rows += nrows
+                lower, upper, nulls = _file_column_stats(p, schema)
+                entries.append(
+                    {
+                        "status": _STATUS_ADDED,
+                        "snapshot_id": snap_id,
+                        # written as null: exercises the spec's sequence-number
+                        # inheritance on every read path
+                        "sequence_number": None,
+                        "file_sequence_number": None,
+                        "data_file": {
+                            "content": 0,
+                            "file_path": _uri(p),
+                            "file_format": "PARQUET",
+                            "partition": (partitions or {}).get(p, {}),
+                            "record_count": nrows,
+                            "file_size_in_bytes": os.path.getsize(p),
+                            "null_value_counts": [
+                                {"key": k, "value": v} for k, v in sorted(nulls.items())
+                            ],
+                            "lower_bounds": [
+                                {"key": k, "value": v} for k, v in sorted(lower.items())
+                            ],
+                            "upper_bounds": [
+                                {"key": k, "value": v} for k, v in sorted(upper.items())
+                            ],
+                        },
+                    }
+                )
+            man_path = os.path.join(self._meta_dir, f"m{seq}-{uuid.uuid4().hex}.avro")
+            man_bytes = avro_io.write_container(
+                self._manifest_entry_schema(),
+                entries,
+                meta={
+                    "schema": json.dumps(schema).encode(),
+                    "schema-id": b"0",
+                    "partition-spec": json.dumps(self.partition_spec).encode(),
+                    "partition-spec-id": b"0",
+                    "format-version": b"2",
+                    "content": b"data",
+                },
+            )
+            with open(man_path, "wb") as f:
+                f.write(man_bytes)
+
+            prev = (
+                _find_snapshot(md, md["current-snapshot-id"]) if md["snapshots"] else None
+            )
+            prev_manifests = self._manifest_files(prev) if prev else []
+            manifests = prev_manifests + [
+                {
+                    "manifest_path": _uri(man_path),
+                    "manifest_length": len(man_bytes),
+                    "partition_spec_id": 0,
+                    "content": 0,
+                    "sequence_number": seq,
+                    "min_sequence_number": seq,
+                    "added_snapshot_id": snap_id,
+                    "added_data_files_count": len(entries),
+                    "existing_data_files_count": 0,
+                    "deleted_data_files_count": 0,
+                    "added_rows_count": added_rows,
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": 0,
+                }
+            ]
+            list_path = os.path.join(
+                self._meta_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro"
+            )
+            with open(list_path, "wb") as f:
+                f.write(
+                    avro_io.write_container(
+                        _MANIFEST_FILE_SCHEMA,
+                        manifests,
+                        meta={
+                            "format-version": b"2",
+                            "snapshot-id": str(snap_id).encode(),
+                            "parent-snapshot-id": str(
+                                prev["snapshot-id"] if prev else "null"
+                            ).encode(),
+                            "sequence-number": str(seq).encode(),
+                        },
+                    )
+                )
+            snap = {
+                "snapshot-id": snap_id,
+                "sequence-number": seq,
+                "timestamp-ms": now_ms,
+                "manifest-list": _uri(list_path),
+                "summary": {
+                    "operation": "append",
+                    "added-data-files": str(len(entries)),
+                    "added-records": str(added_rows),
+                },
+                "schema-id": md["current-schema-id"],
             }
-        ]
-        md["current-snapshot-id"] = snap_id
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = now_ms
-        # merge, never replace: a replaced map drops every tag, and the next
-        # expire_snapshots would then delete the tagged snapshot's list
-        md["refs"] = {**md.get("refs", {}), "main": {"snapshot-id": snap_id, "type": "branch"}}
-        self._write_metadata(self._meta_dir, self._version + 1, md)
-        self.refresh()
-        return snap_id
+            if prev:
+                snap["parent-snapshot-id"] = prev["snapshot-id"]
+            md["snapshots"].append(snap)
+            md["snapshot-log"].append({"timestamp-ms": now_ms, "snapshot-id": snap_id})
+            md["current-snapshot-id"] = snap_id
+            md["last-sequence-number"] = seq
+            # set one key, never replace the map: a replaced map drops every
+            # tag, and the next expire_snapshots would then delete the tagged
+            # snapshot's list
+            md["refs"]["main"] = {"snapshot-id": snap_id, "type": "branch"}
+            return snap_id
+
+        return self._commit(mutate)
 
 
 # ---------------------------------------------------------------------------
@@ -1408,11 +1405,7 @@ def index_iceberg(
     snap = tbl.snapshot(snapshot_id)
     if snap is None:
         raise ValueError("cannot index an empty table (no snapshots)")
-    stamp = {
-        "location": tbl.location,
-        "snapshot_id": snap["snapshot-id"],
-        "sequence_number": snap["sequence-number"],
-    }
+    stamp = _stamp(tbl, snap)
     seg_dir = os.path.join(out_dir, "segments", segment)
     stamp_path = os.path.join(seg_dir, "iceberg_source.json")
     if resume and os.path.exists(stamp_path):
@@ -1424,10 +1417,19 @@ def index_iceberg(
     pages = tbl.read(spark, snap["snapshot-id"])
     meta = build_index(spark, pages, out_dir, segment=segment, resume=resume, **kw)
     os.makedirs(seg_dir, exist_ok=True)
-    with open(stamp_path, "w") as f:
-        json.dump(stamp, f)
+    _write_json(stamp_path, stamp)
     _save_watermark(out_dir, stamp)
     return meta
+
+
+def _stamp(tbl: IcebergTable, snap: dict) -> dict:
+    """What an index records of the snapshot it read (iceberg_source.json
+    and the watermark)."""
+    return {
+        "location": tbl.location,
+        "snapshot_id": snap["snapshot-id"],
+        "sequence_number": snap["sequence-number"],
+    }
 
 
 def _watermark_path(out_dir: str) -> str:
@@ -1441,8 +1443,7 @@ def _save_watermark(out_dir: str, stamp: dict) -> None:
         with open(p) as f:
             cur = json.load(f)
     if cur is None or stamp["sequence_number"] >= cur["sequence_number"]:
-        with open(p, "w") as f:
-            json.dump(stamp, f)
+        _write_json(p, stamp)
 
 
 def index_iceberg_delta(
@@ -1468,17 +1469,12 @@ def index_iceberg_delta(
         raise ValueError("watermark belongs to a different table")
     if cur["snapshot-id"] == wm["snapshot_id"]:
         return None
-    pages = tbl.read_incremental(spark, wm["snapshot_id"], cur["snapshot-id"])
+    # by sequence number: the watermark snapshot itself may have expired
+    pages = tbl.read_incremental(spark, wm["sequence_number"], cur["snapshot-id"])
     segment = f"iceberg-{cur['snapshot-id']}"
     meta = add_segment(spark, pages, out_dir, segment=segment, **kw)
-    stamp = {
-        "location": tbl.location,
-        "snapshot_id": cur["snapshot-id"],
-        "sequence_number": cur["sequence-number"],
-    }
-    seg_dir = os.path.join(out_dir, "segments", segment)
-    with open(os.path.join(seg_dir, "iceberg_source.json"), "w") as f:
-        json.dump(stamp, f)
+    stamp = _stamp(tbl, cur)
+    _write_json(os.path.join(out_dir, "segments", segment, "iceberg_source.json"), stamp)
     _save_watermark(out_dir, stamp)
     return meta
 

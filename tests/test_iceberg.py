@@ -1,6 +1,7 @@
 """Avro container codec + Iceberg table layer (snapshot pinning, time
 travel, incremental scans, snapshot-checkpointed builds)."""
 
+import contextlib
 import io
 import json
 import time
@@ -205,12 +206,12 @@ def test_read_current_and_time_travel(spark, table):
 
 def test_read_incremental(spark, table):
     s1, s2 = table.snapshots()
-    inc = table.read_incremental(spark, s1["snapshot-id"])
+    inc = table.read_incremental(spark, s1["sequence-number"])
     assert inc.count() == 4
     urls_small4 = {r.url for r in _batch2(spark).collect()}
     assert {r.url for r in inc.collect()} == urls_small4
     # explicit end == start -> nothing
-    same = table.read_incremental(spark, s2["snapshot-id"])
+    same = table.read_incremental(spark, s2["sequence-number"])
     assert same.count() == 0
 
 
@@ -369,6 +370,21 @@ def test_index_iceberg_delta(spark, tmp_path):
 
     # watermark advanced: nothing further to ingest
     assert index_iceberg_delta(spark, loc, out, n_shards=2, block_size=8) is None
+
+    # the watermark snapshot expires: the next delta starts from its
+    # sequence number and indexes exactly the row appended after it
+    t.append(spark, spark.createDataFrame(
+        [("http://x.test/late", None, None, "yak quick", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ))
+    wm = json.load(open(f"{out}/iceberg_watermark.json"))
+    t.expire_snapshots(keep_last=1)
+    assert wm["snapshot_id"] not in {s["snapshot-id"] for s in t.snapshots()}
+    meta = index_iceberg_delta(spark, loc, out, n_shards=2, block_size=8)
+    assert meta is not None and meta["n_docs"] == 1
+    ix = Index(spark, out)
+    assert ix.docs.count() == 8
+    assert {r.doc_id for r in ix.term_hits("yak").collect()} == {7}
 
 
 def test_follow_iceberg_continuous_with_compaction(spark, tmp_path):
@@ -610,7 +626,7 @@ def test_partitioned_incremental_and_delta_index(spark, tmp_path):
     out = str(tmp_path / "ix")
     index_iceberg(spark, loc, out, n_shards=2, block_size=8)
     t.append(spark, _batch2(spark))
-    s1 = t.snapshots()[0]["snapshot-id"]
+    s1 = t.snapshots()[0]["sequence-number"]
     assert t.read_incremental(spark, s1).count() == 4
     meta = index_iceberg_delta(spark, loc, out, n_shards=2, block_size=8)
     assert meta["n_docs"] == 4
@@ -785,7 +801,7 @@ def test_expire_snapshots(spark, tmp_path):
     # data intact; retained time travel + incremental still work
     assert t.read(spark).count() == 3
     assert t.read(spark, snapshot_id=s2["snapshot-id"]).count() == 2
-    assert t.read_incremental(spark, s2["snapshot-id"]).count() == 1
+    assert t.read_incremental(spark, s2["sequence-number"]).count() == 1
     with pytest.raises(KeyError):
         t.read(spark, snapshot_id=s1["snapshot-id"])
     assert t.expire_snapshots(keep_last=2) == []
@@ -825,13 +841,17 @@ def test_concurrent_commit_cas_retry(spark, tmp_path):
     assert snaps[1]["parent-snapshot-id"] == snaps[0]["snapshot-id"]
     assert t.read(spark).count() == 6
     # the incremental scan sees exactly the second commit's rows
-    assert t.read_incremental(spark, snaps[0]["snapshot-id"]).count() == 3
+    assert t.read_incremental(spark, snaps[0]["sequence-number"]).count() == 3
 
 
 def test_remove_orphan_files(spark, tmp_path):
-    """Orphans (lost CAS races, failed commits) are swept; everything a
-    retained snapshot references survives and reads are unchanged."""
+    """Orphans (lost CAS races, failed commits) older than the sweep's
+    minimum age are swept; everything a retained snapshot references, and
+    a fresh file an append has written but not yet committed, survives."""
     import os as _os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     loc = str(tmp_path / "orph")
     t = IcebergTable.create(loc, "url string, text string")
@@ -849,6 +869,13 @@ def test_remove_orphan_files(spark, tmp_path):
     _os.makedirs(dead_dir)
     orphan_dat = _os.path.join(dead_dir, "part-00000-dead.parquet")
     open(orphan_dat, "wb").write(b"junk")
+    old = time.time() - 4 * 24 * 3600
+    for p in (orphan_list, orphan_man, orphan_dat):
+        _os.utime(p, (old, old))
+    # an append in flight: data written, commit not yet made
+    inflight = _os.path.join(loc, "data", "0123abcd", "part-00000-new.parquet")
+    _os.makedirs(_os.path.dirname(inflight))
+    pq.write_table(pa.table({"url": ["http://o/2"], "text": ["row 2"]}), inflight)
 
     before = t.read(spark).count()
     deleted = t.remove_orphan_files()
@@ -856,8 +883,11 @@ def test_remove_orphan_files(spark, tmp_path):
         "snap-999-1-deadbeef.avro", "m9-deadbeef.avro", "part-00000-dead.parquet",
     }
     assert not _os.path.exists(orphan_dat) and not _os.path.exists(dead_dir)
+    assert _os.path.exists(inflight)
     assert t.read(spark).count() == before == 2
     assert t.remove_orphan_files() == []
+    t.commit_append([inflight])
+    assert t.read(spark).count() == 3
     # retained time travel still works after the sweep
     s1 = t.snapshots()[0]
     assert t.read(spark, snapshot_id=s1["snapshot-id"]).count() == 1
@@ -912,8 +942,8 @@ def test_history_and_files_metadata_tables(spark, table):
 def test_transform_col_matches_python_transform(spark, tmp_path):
     """The Spark write-path column transforms and the python point-lookup
     transforms are independent implementations — one batch cross-check
-    over adversarial values (negatives, unicode, empty, None) keeps them
-    from drifting apart."""
+    over adversarial values (negatives, unicode, empty, None, dates before
+    and after the epoch) keeps them from drifting apart."""
     import datetime as dt
 
     from blacklab_spark.iceberg import apply_transform
@@ -925,43 +955,174 @@ def test_transform_col_matches_python_transform(spark, tmp_path):
         ts = dt.datetime(1969, 12, 28, tzinfo=dt.timezone.utc) + dt.timedelta(
             hours=i * 13, minutes=i
         )
-        rows.append((s, n, ts))
-    df = spark.createDataFrame(rows, "s string, n bigint, ts timestamp")
+        rows.append((s, n, ts, dt.date(1969, 11, 1) + dt.timedelta(days=i * 3)))
+    df = spark.createDataFrame(rows, "s string, n bigint, ts timestamp, d date")
 
     t = IcebergTable.create(
         str(tmp_path / "x"),
-        "s string, n bigint, ts timestamp",
+        "s string, n bigint, ts timestamp, d date",
         partition_by=["bucket(7, s)", "bucket(5, n)", "day(ts)",
-                      "truncate(3, s)", "truncate(100, n)"],
+                      "truncate(3, s)", "truncate(100, n)", "day(d)", "bucket(3, d)"],
     )
     spec = t._spec_parts()
     out = df.select(
-        "s", "n", "ts", *[t._transform_col(sp).alias(f"c{j}") for j, sp in enumerate(spec)]
+        "s", "n", "ts", "d",
+        *[t._transform_col(sp).alias(f"c{j}") for j, sp in enumerate(spec)],
     ).collect()
     for r in out:
-        raw = {"s": r.s, "n": r.n, "ts": r.ts.replace(tzinfo=dt.timezone.utc)}
+        raw = {"s": r.s, "n": r.n, "ts": r.ts.replace(tzinfo=dt.timezone.utc), "d": r.d}
         for j, sp in enumerate(spec):
             expect = apply_transform(sp["transform"], sp["param"], raw[sp["src"]], sp["src_type"])
             assert r[f"c{j}"] == expect, (sp, raw[sp["src"]], r[f"c{j}"], expect)
 
+    # a date-partitioned table commits (date column bounds) and prunes by
+    # a raw date on the python side
+    t = IcebergTable.create(str(tmp_path / "d"), "k bigint, d date", partition_by=["day(d)"])
+    t.append(spark, spark.createDataFrame(
+        [(1, dt.date(2020, 1, 2)), (2, dt.date(2020, 1, 2)), (3, dt.date(2020, 1, 5))],
+        "k bigint, d date",
+    ))
+    day = t.partition_value("d_day", dt.date(2020, 1, 2))
+    assert day == 18263
+    assert sorted(r.k for r in t.read(spark, partition_filter={"d_day": day}).collect()) == [1, 2]
+    assert t.data_files(stats_filter={"d": dt.date(2020, 1, 2)}) == t.data_files(
+        partition_filter={"d_day": day}
+    )
+
 
 # ---------------------------------------------------------------------------
-# model-based stateful fuzz (no Spark: appends via commit_append over
-# pyarrow-written files, so the state machine runs in milliseconds)
+# commits without Spark: appends via commit_append over pyarrow-written
+# files, so the race tests and the state machine run in milliseconds
+
+
+def _pq_file(loc, name, n):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = os.path.join(loc, "data", f"{name}.parquet")
+    pq.write_table(pa.table({"k": list(range(n)), "v": [f"x{i}" for i in range(n)]}), p)
+    return p
+
+
+@contextlib.contextmanager
+def _interleaved(competitor):
+    """Run `competitor()` (a whole commit through a second handle) just
+    before the next metadata version write: between the writer's load and
+    its O_EXCL create. Yields a dict that receives competitor's result."""
+    orig = IcebergTable.__dict__["_write_metadata"]
+    write = IcebergTable._write_metadata
+    got = {}
+
+    def racing(meta_dir, version, md):
+        if "result" not in got:
+            got["result"] = None  # the competitor's own write goes through
+            got["result"] = competitor()
+        write(meta_dir, version, md)
+
+    IcebergTable._write_metadata = staticmethod(racing)
+    try:
+        yield got
+    finally:
+        IcebergTable._write_metadata = orig
+
+
+@pytest.mark.parametrize(
+    "op", ["commit_append", "tag", "set_sort_order", "add_column", "expire_snapshots"]
+)
+def test_commit_lands_on_top_of_interleaved_append(tmp_path, op):
+    """Every metadata operation that loses the version race to another
+    handle's append re-applies its change on top of the winner: both
+    changes are in the final metadata, no snapshot lost or duplicated."""
+    loc = str(tmp_path / "t")
+    t = IcebergTable.create(loc, "k bigint, v string")
+    s1 = t.commit_append([_pq_file(loc, "a", 2)])
+    s2 = t.commit_append([_pq_file(loc, "b", 3)])
+    other = IcebergTable(loc)
+    late, mine = _pq_file(loc, "c", 4), _pq_file(loc, "d", 5)
+    with _interleaved(lambda: other.commit_append([late])) as race:
+        if op == "commit_append":
+            result = t.commit_append([mine])
+        elif op == "tag":
+            result = t.tag("v1", s1)
+        elif op == "set_sort_order":
+            result = t.set_sort_order(["k"])
+        elif op == "add_column":
+            result = t.add_column("w", "string")
+        else:
+            result = t.expire_snapshots(keep_last=1)
+    s3 = race["result"]
+    md = IcebergTable(loc).metadata
+    assert t.metadata == md  # the writer's view is what it committed
+    ids = [s["snapshot-id"] for s in md["snapshots"]]
+    if op == "commit_append":
+        assert ids == [s1, s2, s3, result]
+        assert [s["sequence-number"] for s in md["snapshots"]] == [1, 2, 3, 4]
+        assert md["snapshots"][-1]["parent-snapshot-id"] == s3
+        assert sum(f["record_count"] for f in t.data_files()) == 2 + 3 + 4 + 5
+    elif op == "expire_snapshots":
+        assert result == [s1, s2] and ids == [s3]
+        assert sum(f["record_count"] for f in t.data_files()) == 2 + 3 + 4
+    else:
+        assert ids == [s1, s2, s3]
+        assert sum(f["record_count"] for f in t.data_files()) == 2 + 3 + 4
+    assert md["refs"]["main"]["snapshot-id"] == md["current-snapshot-id"] == ids[-1]
+    if op == "tag":
+        assert md["refs"]["v1"] == {"snapshot-id": s1, "type": "tag"}
+    if op == "set_sort_order":
+        assert md["default-sort-order-id"] == 1 and t._sort_columns() == ["k"]
+    if op == "add_column":
+        assert [f["name"] for f in md["schemas"][md["current-schema-id"]]["fields"]] == [
+            "k", "v", "w",
+        ]
+
+
+def test_watermark_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A crash while a sidecar is being rewritten leaves the previous
+    content readable (temp file + os.replace), not a truncated file that
+    every later index_iceberg_delta would fail to parse."""
+    import os
+
+    from blacklab_spark.iceberg import _save_watermark
+
+    out = str(tmp_path)
+    first = {"location": "/t", "snapshot_id": 11, "sequence_number": 1}
+    _save_watermark(out, first)
+
+    def partial_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:7])
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", partial_dump)
+    with pytest.raises(OSError):
+        _save_watermark(out, {"location": "/t", "snapshot_id": 22, "sequence_number": 2})
+    monkeypatch.undo()
+    assert json.load(open(os.path.join(out, "iceberg_watermark.json"))) == first
+    assert os.listdir(out) == ["iceberg_watermark.json"]  # no temp file left
+
+
+# ---------------------------------------------------------------------------
+# model-based stateful fuzz
 
 from hypothesis import settings as _settings  # noqa: E402
 from hypothesis.stateful import (  # noqa: E402
     Bundle,
     RuleBasedStateMachine,
     initialize,
+    multiple,
+    precondition,
     rule,
 )
 
 
 class IcebergModel(RuleBasedStateMachine):
-    """Random append / expire / orphan-sweep sequences against a python
-    model: at every step, every retained snapshot's planned file set must
-    carry exactly the rows the model says were visible at that commit."""
+    """Random append / tag / expire / orphan-sweep sequences, and appends
+    and tags that race a second handle's append, against a python model: at every step,
+    every retained snapshot's planned file set must carry exactly the
+    rows the model says were visible at that commit, expiry must drop
+    exactly the untagged snapshots the model predicts, and the refs must
+    match the model's tags."""
 
     snapshots = Bundle("snapshots")
 
@@ -972,48 +1133,87 @@ class IcebergModel(RuleBasedStateMachine):
         self.dir = tempfile.mkdtemp(prefix="ice_model_")
         self.t = IcebergTable.create(self.dir, "k bigint, v string")
         self.model: dict[int, int] = {}  # snapshot_id -> visible row count
+        self.order: list[int] = []  # retained snapshot ids, oldest first
+        self.tags: dict[str, int] = {}
         self.total = 0
         self.counter = 0
 
-    @rule(target=snapshots, n=__import__("hypothesis").strategies.integers(0, 40))
-    def append(self, n):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    def _append(self, table, n):
         self.counter += 1
-        p = os.path.join(self.dir, "data", f"f{self.counter}.parquet")
-        pq.write_table(
-            pa.table({"k": list(range(n)), "v": [f"x{i}" for i in range(n)]}), p
-        )
-        sid = self.t.commit_append([p])
+        sid = table.commit_append([_pq_file(self.dir, f"f{self.counter}", n)])
         self.total += n
         self.model[sid] = self.total
+        self.order.append(sid)
         return sid
 
-    @rule(keep=__import__("hypothesis").strategies.integers(1, 3))
+    @rule(target=snapshots, n=st.integers(0, 40))
+    def append(self, n):
+        return self._append(self.t, n)
+
+    @rule(target=snapshots, n=st.integers(0, 40), m=st.integers(0, 40))
+    def interleaved_append(self, n, m):
+        """A second handle appends m rows between this handle's load and
+        its version write: this handle's append lands on top of it."""
+        other = IcebergTable(self.dir)
+        with _interleaved(lambda: self._append(other, m)) as race:
+            mine = self._append(self.t, n)
+        return multiple(race["result"], mine)
+
+    @precondition(lambda self: self.order)
+    @rule(target=snapshots, m=st.integers(0, 40), name=st.sampled_from(["a", "b"]))
+    def interleaved_tag(self, m, name):
+        """The same race under tag(): the current snapshot is resolved at
+        commit time, so the tag pins the competitor's snapshot."""
+        other = IcebergTable(self.dir)
+        with _interleaved(lambda: self._append(other, m)) as race:
+            self.t.tag(name)
+        self.tags[name] = race["result"]
+        return race["result"]
+
+    @rule(sid=snapshots, name=st.sampled_from(["a", "b"]))
+    def tag(self, sid, name):
+        if sid not in self.model:  # expired: nothing to pin
+            with pytest.raises(KeyError):
+                self.t.tag(name, sid)
+            return
+        self.t.tag(name, sid)
+        self.tags[name] = sid
+
+    @rule(keep=st.integers(1, 3))
     def expire(self, keep):
-        expired = self.t.expire_snapshots(keep_last=keep)
-        for sid in expired:
-            self.model.pop(sid, None)
+        pinned = set(self.tags.values())
+        want = [s for s in self.order[:-keep] if s not in pinned]
+        assert self.t.expire_snapshots(keep_last=keep) == want
+        for sid in want:
+            self.model.pop(sid)
+            self.order.remove(sid)
 
     @rule()
     def sweep(self):
+        import os
+
+        old = time.time() - 4 * 24 * 3600  # past the sweep's minimum age
+        for root, _dirs, files in os.walk(self.dir):
+            for fn in files:
+                os.utime(os.path.join(root, fn), (old, old))
         self.t.remove_orphan_files()
 
     @rule(sid=snapshots)
     def check(self, sid):
-        import pytest as _pytest
+        import pyarrow.parquet as pq
 
+        refs = IcebergTable(self.dir).metadata["refs"]
+        assert {k: r["snapshot-id"] for k, r in refs.items() if r["type"] == "tag"} \
+            == self.tags
+        assert refs.get("main", {}).get("snapshot-id") == (
+            self.order[-1] if self.order else None
+        )
         if sid not in self.model:  # expired: must raise, not misread
-            with _pytest.raises(KeyError):
+            with pytest.raises(KeyError):
                 self.t.data_files(sid)
             return
         files = self.t.data_files(sid)
         assert sum(f["record_count"] for f in files) == self.model[sid]
-        import pyarrow.parquet as pq
-
         assert sum(pq.ParquetFile(f["path"]).metadata.num_rows for f in files) \
             == self.model[sid]
 
