@@ -46,5 +46,4 @@ __all__ = [
     #                           stats pruning, delta indexing, follower)
     # .iceberg_stream         — Structured Streaming source over the table
     # .server                 — BlackLab Server HTTP analog + search cache
-    # .multimodal             — binary payload plumbing
 ]

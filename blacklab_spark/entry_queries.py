@@ -22,8 +22,10 @@ ranking orders by the ROUNDED value with a deterministic id tiebreak.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -879,461 +881,6 @@ def build_queries() -> dict:
         )
 
     q["rs_group_window"] = rs_group_window
-
-    # ---------------- multimodal plumbing (stubbed decode) ----------------
-    def mm_image_meta(s, d):
-        from . import multimodal as M
-
-        docs = _docs(s, d).filter(F.col("doc_id") < 200)
-        return M.image_metadata(M.attach_payload(docs)).select(
-            "doc_id", F.col("n_bytes").cast("int"), F.col("width").cast("int"),
-            F.col("height").cast("int"), F.col("channels").cast("int"),
-        )
-
-    q["mm_image_meta"] = mm_image_meta
-
-    def mm_frames(s, d):
-        from . import multimodal as M
-
-        docs = _docs(s, d).filter(F.col("doc_id") < 100)
-        return M.sample_frames(M.attach_payload(docs)).select(
-            "doc_id", F.col("frame_id").cast("int"), "frame_hash"
-        )
-
-    q["mm_frames"] = mm_frames
-
-    def mm_decode_bmp(s, d):
-        """REAL image decode round-trip: a deterministic uncompressed BMP is
-        encoded per doc_id (w=4+id%13, h=3+id%7, constant fill id%256), then
-        decoded by the pure-numpy BMP decoder (multimodal.decode_bmp) inside
-        an Arrow-batched mapInPandas. The oracle recomputes the closed-form
-        dims + mean pixel in SQL, so a decoder bug = a value-hash mismatch."""
-        import pandas as pd
-
-        from . import multimodal as M
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                yield pd.DataFrame({
-                    "doc_id": ids,
-                    "payload": [
-                        M.encode_bmp(4 + int(i) % 13, 3 + int(i) % 7, int(i) % 256)
-                        for i in ids
-                    ],
-                })
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.image_features(wp).select(
-            "doc_id", "width", "height", "channels",
-            F.round("mean_px", 6).alias("mean_px"),
-        )
-
-    q["mm_decode_bmp"] = mm_decode_bmp
-
-    def mm_decode_png(s, d):
-        """REAL PNG decode round-trip: per doc_id a constant-fill PNG with
-        deterministic dims (w=4+id%13, h=3+id%7), channel count
-        (1/3/4 by id%3), row filter (id%5 — so every inverse filter runs)
-        and interlace (Adam7 on odd ids), decoded by the pure zlib+numpy
-        decoder (multimodal.decode_png) inside image_features. Constant fill
-        -> mean_px == fill exactly; the oracle recomputes every field in
-        closed-form SQL, so any filter/interlace/codec bug is a hash
-        mismatch."""
-        import numpy as np
-        import pandas as pd
-
-        from . import multimodal as M
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    ch = (1, 3, 4)[i % 3]
-                    px = np.full((3 + i % 7, 4 + i % 13, ch), i % 256, np.uint8)
-                    payloads.append(M.encode_png(
-                        px, filters=[i % 5], interlace=i % 2,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.image_features(wp).select(
-            "doc_id", "width", "height", "channels",
-            F.round("mean_px", 6).alias("mean_px"),
-        )
-
-    q["mm_decode_png"] = mm_decode_png
-
-    def mm_decode_gif(s, d):
-        """REAL GIF decode round-trip: per doc_id a constant-fill GIF89a
-        (palette[0] = gray v = id%256, dims w=4+id%13, h=3+id%7), interlaced
-        on odd ids, with a transparent index (NOT the fill index) on
-        id%3==0 so channels flip 3->4 and the alpha plane is all 255 —
-        mean = (3v+255)/4 in closed form. Decoded by the pure python/numpy
-        LZW decoder (multimodal.decode_gif) inside image_features; the
-        oracle recomputes every field in SQL, so any LZW/interlace/GCE bug
-        is a value-hash mismatch."""
-        import numpy as np
-        import pandas as pd
-
-        from . import multimodal as M
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    v = i % 256
-                    pal = np.array([[v, v, v], [255 - v, v, 17]], np.uint8)
-                    fr = np.zeros((3 + i % 7, 4 + i % 13), np.uint8)
-                    payloads.append(M.encode_gif(
-                        [fr], pal, interlace=bool(i % 2),
-                        transparent_idx=1 if i % 3 == 0 else None,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.image_features(wp).select(
-            "doc_id", "width", "height", "channels",
-            F.round("mean_px", 6).alias("mean_px"),
-        )
-
-    q["mm_decode_gif"] = mm_decode_gif
-
-    def mm_decode_jpeg(s, d):
-        """REAL baseline-JPEG decode round-trip: per doc_id a constant-fill
-        JPEG at quality 75 (dims w=8+8*(id%3), h=8+8*(id%2); grayscale on
-        even ids, RGB + 4:2:0 subsampling on ids%4==1, RGB 4:4:4 otherwise;
-        restart markers every 2 MCUs on ids%5==0). At quality 75 the
-        luminance quantizer q00=8 makes a constant block's DC round-trip
-        EXACTLY (DC=8c/8=c), so decoded mean == fill v = id%256 in closed
-        form — the full Huffman/DCT/marker pipeline (jpeg.py) must be
-        bit-correct or the value hash mismatches."""
-        import numpy as np
-        import pandas as pd
-
-        from . import multimodal as M
-        from .jpeg import encode_jpeg
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    v = i % 256
-                    w, h = 8 + 8 * (i % 3), 8 + 8 * (i % 2)
-                    ch = 1 if i % 2 == 0 else 3
-                    px = np.full((h, w) if ch == 1 else (h, w, 3), v, np.uint8)
-                    payloads.append(encode_jpeg(
-                        px, quality=75, subsample=(i % 4 == 1),
-                        restart_interval=2 if i % 5 == 0 else 0,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.image_features(wp).select(
-            "doc_id", "width", "height", "channels",
-            F.round("mean_px", 6).alias("mean_px"),
-        )
-
-    q["mm_decode_jpeg"] = mm_decode_jpeg
-
-    def mm_audio_wav(s, d):
-        """REAL PCM-WAV decode round-trip: constant-signal WAVs with
-        deterministic rate/frames/channels/amplitude per doc_id, decoded by
-        multimodal.decode_wav (stdlib wave + numpy RMS); oracle recomputes
-        every field in SQL (constant signal -> RMS == amplitude exactly)."""
-        import pandas as pd
-
-        from . import multimodal as M
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                yield pd.DataFrame({
-                    "doc_id": ids,
-                    "payload": [
-                        M.encode_wav(
-                            8000 + int(i) % 3 * 4000, 100 + int(i) % 50,
-                            1 + int(i) % 2, 500 + int(i) % 100,
-                        )
-                        for i in ids
-                    ],
-                })
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.audio_metadata(wp).select(
-            "doc_id", "sample_rate", "n_channels", "n_frames", "duration_ms",
-            F.round("rms", 6).alias("rms"),
-        )
-
-    q["mm_audio_wav"] = mm_audio_wav
-
-    def mm_video_mp4(s, d):
-        """REAL MP4 container round-trip: per doc_id a structurally-complete
-        ISO-BMFF file (ftyp+mdat+moov; video track w=16*(1+id%4),
-        h=16*(1+id%3), 3+id%5 frames of varying size at 25 fps, keyframe
-        every 2; an audio track on even ids), written by mp4.build_mp4 and
-        parsed back by mp4.parse_mp4 (box tree + mvhd/tkhd/mdhd/hdlr/stsd +
-        stsz/stss) inside an Arrow-batched mapInPandas. The oracle
-        recomputes every field in closed-form SQL, so any box-walk or
-        sample-table bug is a value-hash mismatch."""
-        import pandas as pd
-
-        from . import multimodal as M
-        from . import mp4 as M4
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    frames = [
-                        (f"{i}:{fi}").encode() * (1 + fi)
-                        for fi in range(3 + i % 5)
-                    ]
-                    payloads.append(M4.build_mp4(
-                        frames, 16 * (1 + i % 4), 16 * (1 + i % 3),
-                        audio_samples=[b"a" * 20] * 2 if i % 2 == 0 else None,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.video_metadata(wp).select(
-            "doc_id", "brand", "n_tracks", "width", "height",
-            "n_samples", "n_keyframes", "duration_ms",
-        )
-
-    q["mm_video_mp4"] = mm_video_mp4
-
-    def mm_decode_webp(s, d):
-        """REAL WebP-lossless decode round-trip: per doc_id a constant-fill
-        VP8L stream (v=id%256, w=4+id%13, h=3+id%7; alpha plane 254 on odd
-        ids so channels=4) through a per-id transform combo — none /
-        subtract-green / predictor mode id%14 / color-indexing palette /
-        LZ77+color-cache (id%5), plus a meta-prefix image on id%3==0 —
-        decoded by the pure-python VP8L decoder (vp8l.decode_webp) inside
-        image_features. The oracle recomputes dims/channels/mean in
-        closed-form SQL, so any prefix-code/transform/cache/LZ77 bug is a
-        value-hash mismatch."""
-        import numpy as np
-        import pandas as pd
-
-        from . import multimodal as M
-        from .vp8l import encode_webp_lossless
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    v = i % 256
-                    w, h = 4 + i % 13, 3 + i % 7
-                    if i % 2 == 1:
-                        px = np.full((h, w, 4), v, np.uint8)
-                        px[:, :, 3] = 254
-                    else:
-                        px = np.full((h, w, 3), v, np.uint8)
-                    opts = {}
-                    if i % 5 == 1:
-                        opts["subtract_green"] = True
-                    elif i % 5 == 2:
-                        opts["predictor_mode"] = i % 14
-                    elif i % 5 == 3:
-                        opts["palette"] = True
-                    elif i % 5 == 4:
-                        opts["use_lz77"] = True
-                        opts["cache_bits"] = 4
-                    if i % 3 == 0:
-                        opts["meta_bits"] = 2
-                    payloads.append(encode_webp_lossless(px, **opts))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.image_features(wp).select(
-            "doc_id", "width", "height", "channels",
-            F.round("mean_px", 6).alias("mean_px"),
-        )
-
-    q["mm_decode_webp"] = mm_decode_webp
-
-    def mm_frames_mp4(s, d):
-        """REAL frame extraction from MP4: the same synth container as
-        mm_video_mp4 (video-only), then sample_frames resolves the sample
-        table and pulls each KEYFRAME's actual bytes out of mdat —
-        frame_hash is the md5 of the extracted payload, which the oracle
-        recomputes from the closed-form frame content
-        (repeat(id':'fi, 1+fi)), so a one-byte offset error anywhere in
-        stsc/stco/stsz resolution mismatches."""
-        import pandas as pd
-
-        from . import multimodal as M
-        from . import mp4 as M4
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    frames = [
-                        (f"{i}:{fi}").encode() * (1 + fi)
-                        for fi in range(3 + i % 5)
-                    ]
-                    payloads.append(M4.build_mp4(
-                        frames, 16 * (1 + i % 4), 16 * (1 + i % 3),
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.sample_frames(wp).select(
-            "doc_id", F.col("frame_id").cast("int"), "frame_hash"
-        )
-
-    q["mm_frames_mp4"] = mm_frames_mp4
-
-    def mm_audio_mp3(s, d):
-        """REAL MP3 frame-header scan round-trip: per doc_id a chain of
-        10+id%20 structurally-valid MPEG-1 Layer III frames (bitrate
-        32/64/128/192 by id%4, rate 44100/48000/32000 by id%3, mono/stereo
-        by id%2, ID3v2 tag on even ids, padding bit every 3rd frame on
-        id%5==0), written by mp3.build_mp3 and walked back by
-        mp3.parse_mp3. Duration is summed per-frame samples; the oracle
-        recomputes every field in closed-form SQL."""
-        import pandas as pd
-
-        from . import multimodal as M
-        from . import mp3 as M3
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    payloads.append(M3.build_mp3(
-                        10 + i % 20, (32, 64, 128, 192)[i % 4],
-                        (44100, 48000, 32000)[i % 3], 1 + i % 2,
-                        id3_tag=b"t" * (i % 30) if i % 2 == 0 else None,
-                        pad_every=3 if i % 5 == 0 else 0,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.mp3_metadata(wp).select(
-            "doc_id", "mpeg_version", "bitrate_kbps", "sample_rate",
-            "channels", "n_frames", "duration_ms",
-            F.col("has_id3").cast("int").alias("has_id3"),
-        )
-
-    q["mm_audio_mp3"] = mm_audio_mp3
-
-    def mm_audio_flac(s, d):
-        """REAL FLAC decode round-trip: per doc_id a constant-signal FLAC
-        (amplitude 500+id%100, rate 8000/16000/44100 by id%3, mono/stereo
-        by id%2, n = 64*(2+id%4) samples at blocksize 64) through a per-id
-        subframe/stereo combo — constant / fixed1 / fixed2 / lpc / verbatim
-        (id%5) and mid_side on stereo ids%4==3 — written by flac.encode_flac
-        (real Rice residuals + CRC-8/16) and decoded by flac.decode_flac
-        inside audio_metadata (CRCs verified). Constant signal -> RMS ==
-        amplitude exactly; the oracle recomputes every field in SQL."""
-        import numpy as np
-        import pandas as pd
-
-        from . import multimodal as M
-        from .flac import encode_flac
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    amp = 500 + i % 100
-                    rate = (8000, 16000, 44100)[i % 3]
-                    nch = 1 + i % 2
-                    n = 64 * (2 + i % 4)
-                    pcm = np.full((n, nch), amp, np.int64)
-                    mode = ("constant", "fixed1", "fixed2", "lpc", "verbatim")[i % 5]
-                    stereo = "mid_side" if (nch == 2 and i % 4 == 3) else "indep"
-                    payloads.append(encode_flac(
-                        pcm, rate, blocksize=64, mode=mode, stereo=stereo,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.audio_metadata(wp).select(
-            "doc_id", "sample_rate", "n_channels", "n_frames", "duration_ms",
-            F.round("rms", 6).alias("rms"),
-        )
-
-    q["mm_audio_flac"] = mm_audio_flac
-
-    def mm_video_avc(s, d):
-        """REAL H.264 SPS parse inside an MP4: per doc_id an avc1 track
-        whose avcC carries a built SPS (exp-Golomb, MB rounding expressed
-        as frame cropping; profile 66/100 by id%2) with display dims
-        w=2*(10+id%23), h=2*(6+id%11) — while the container's tkhd/sample
-        entry lie (dims+6/+4), so a correct result REQUIRES the bitstream
-        parse to override them. The oracle recomputes everything in
-        closed-form SQL."""
-        import pandas as pd
-
-        from . import h264 as H
-        from . import mp4 as M4
-        from . import multimodal as M
-
-        docs = s.read.parquet(f"{d}/documents.parquet").select("doc_id")
-
-        def synth(batches):
-            for pdf in batches:
-                ids = pdf["doc_id"].to_numpy()
-                payloads = []
-                for i in ids:
-                    i = int(i)
-                    w, h = 2 * (10 + i % 23), 2 * (6 + i % 11)
-                    prof = 100 if i % 2 else 66
-                    sps = H.build_sps(w, h, profile=prof, level=30 + i % 3)
-                    avcc = H.build_avcc(sps, profile=prof, level=30 + i % 3)
-                    frames = [f"{i}:{fi}".encode() for fi in range(2 + i % 3)]
-                    payloads.append(M4.build_mp4(
-                        frames, w + 6, h + 4, codec=b"avc1", avcc=avcc,
-                    ))
-                yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-        wp = docs.mapInPandas(synth, "doc_id long, payload binary")
-        return M.video_metadata(wp).select(
-            "doc_id", "brand", "n_tracks", "width", "height",
-            "n_samples", "n_keyframes", "duration_ms",
-        )
-
-    q["mm_video_avc"] = mm_video_avc
 
     def src_warc(s, d):
         """REAL web-archive ingestion round-trip: deterministic Common
@@ -2326,37 +1873,27 @@ def build_queries() -> dict:
     return _rotate_registration(q)
 
 
-# The per-round driver samples the FIRST 50 entries in registration order;
-# with 71 entries, a static order leaves the same 21-entry tail
-# driver-unchecked every round (r4 verdict "What's missing" #1:
-# sim_ann_multiprobe / txt_pii_scrub / txt_filter_pipeline had never been
-# sampled). Rotate coverage: entries the driver has checked least recently
-# register first. Round counter = number of CORRECTNESS_r*.json files in the
-# repo root (deterministic, no clock).
-_NEVER_DRIVER_CHECKED = [
-    "src_iceberg", "src_iceberg_part", "ix_topk_phrase", "ix_topk_near",
-    "ix_topk_and", "txt_decontam",  # new in r5 session 7
-    "dd_lsh_cluster", "txt_substr_dedup", "web_pagerank",  # new in r5 session 6
-    "txt_chunk_dedup", "txt_gopher_rep", "dd_url_canon",  # new in r5 session 6
-    "src_warc",  # new in r5 session 5
-    "mm_decode_webp", "mm_audio_flac", "mm_video_avc",  # new in r5 session 4
-    "mm_video_mp4", "mm_frames_mp4", "mm_audio_mp3",
-    "mm_decode_jpeg", "mm_decode_gif", "mm_decode_png",  # new in r5 session 3
-    "mm_decode_bmp", "mm_audio_wav", "sim_ann_ivf",  # new in r5
-    "sim_ann_multiprobe", "txt_pii_scrub", "txt_filter_pipeline",
-    # cut from the r4 sample (checked r1-r3 at best)
-    "ft_termfreq_top20", "ft_facet_source", "ft_window", "ft_sample",
-    "ft_doclen_hist", "dd_exact", "dd_ngram_jaccard", "dd_minhash_sig",
-    "dd_lsh_pairs", "dd_simhash", "sim_cosine_topk", "sim_ann_lsh",
-    "txt_tokcount", "txt_quality", "txt_langid", "txt_fingerprint",
-    "ev_window_counts", "ev_sessionize",
-]
+# Per-round correctness reports: one CORRECTNESS_r<N>.json per round in the
+# repo root, keyed by the entry names checked that round. Absent
+# from the --py-files zip.
+_REPORTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CORRECTNESS_r*.json"
+)
 
 
 def _rotate_registration(q: dict) -> dict:
-    front = [k for k in _NEVER_DRIVER_CHECKED if k in q]
-    rest = [k for k in q if k not in set(front)]
-    return {k: q[k] for k in front + rest}
+    """Order the registry for the per-round correctness check, which
+    samples the FIRST 50 entries: entries the reports checked least
+    recently (never checked first) register first, registration order
+    breaking ties. With no reports this is plain registration order."""
+    last = dict.fromkeys(q, 0)
+    for path in glob.glob(_REPORTS):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name in json.load(f):
+                if name in last:
+                    last[name] = max(last[name], rnd)
+    return {k: q[k] for k in sorted(q, key=last.__getitem__)}
 
 
 # ---------------------------------------------------------------------------
@@ -2704,90 +2241,6 @@ SELECT rank, doc_id, start, e AS "end" FROM (
   FROM h
 ) WHERE rank > 10 AND rank <= 30
 """
-    _H16 = (
-        "(instr('0123456789abcdef', substr(md5(text), 1, 1)) - 1) * 4096 + "
-        "(instr('0123456789abcdef', substr(md5(text), 2, 1)) - 1) * 256 + "
-        "(instr('0123456789abcdef', substr(md5(text), 3, 1)) - 1) * 16 + "
-        "(instr('0123456789abcdef', substr(md5(text), 4, 1)) - 1)"
-    )
-    o["mm_image_meta"] = f"""
-SELECT doc_id, CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-       CAST(1 + ({_H16}) % 64 AS INT) AS width,
-       CAST(1 + (({_H16}) // 64) % 64 AS INT) AS height,
-       CAST(3 AS INT) AS channels
-FROM documents WHERE doc_id < 200
-"""
-    o["mm_frames"] = f"""
-SELECT doc_id, CAST(f.fi AS INT) AS frame_id, md5(text || CAST(f.fi AS VARCHAR)) AS frame_hash
-FROM documents CROSS JOIN (SELECT unnest(range(4)) AS fi) f
-WHERE doc_id < 100 AND f.fi < 1 + ({_H16}) % 4
-"""
-    # REAL-codec round-trips: synth params are closed-form in doc_id, so the
-    # oracle recomputes what a CORRECT decoder must report
-    o["mm_decode_bmp"] = """
-SELECT doc_id,
-       CAST(4 + doc_id % 13 AS INT) AS width,
-       CAST(3 + doc_id % 7 AS INT) AS height,
-       CAST(3 AS INT) AS channels,
-       ROUND(CAST(doc_id % 256 AS DOUBLE), 6) AS mean_px
-FROM documents
-"""
-    o["mm_decode_png"] = """
-SELECT doc_id,
-       CAST(4 + doc_id % 13 AS INT) AS width,
-       CAST(3 + doc_id % 7 AS INT) AS height,
-       CAST(CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS INT) AS channels,
-       ROUND(CAST(doc_id % 256 AS DOUBLE), 6) AS mean_px
-FROM documents
-"""
-    o["mm_decode_gif"] = """
-SELECT doc_id,
-       CAST(4 + doc_id % 13 AS INT) AS width,
-       CAST(3 + doc_id % 7 AS INT) AS height,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN 4 ELSE 3 END AS INT) AS channels,
-       ROUND(CASE WHEN doc_id % 3 = 0
-                  THEN (3 * (doc_id % 256) + 255) / 4.0
-                  ELSE CAST(doc_id % 256 AS DOUBLE) END, 6) AS mean_px
-FROM documents
-"""
-    o["mm_decode_jpeg"] = """
-SELECT doc_id,
-       CAST(8 + 8 * (doc_id % 3) AS INT) AS width,
-       CAST(8 + 8 * (doc_id % 2) AS INT) AS height,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS INT) AS channels,
-       ROUND(CAST(doc_id % 256 AS DOUBLE), 6) AS mean_px
-FROM documents
-"""
-    o["mm_audio_wav"] = """
-SELECT doc_id,
-       CAST(8000 + (doc_id % 3) * 4000 AS INT) AS sample_rate,
-       CAST(1 + doc_id % 2 AS INT) AS n_channels,
-       CAST(100 + doc_id % 50 AS INT) AS n_frames,
-       CAST(((100 + doc_id % 50) * 1000) // (8000 + (doc_id % 3) * 4000) AS INT) AS duration_ms,
-       ROUND(CAST(500 + doc_id % 100 AS DOUBLE), 6) AS rms
-FROM documents
-"""
-    o["mm_video_avc"] = """
-SELECT doc_id, 'isom' AS brand, CAST(1 AS INT) AS n_tracks,
-       CAST(2 * (10 + doc_id % 23) AS INT) AS width,
-       CAST(2 * (6 + doc_id % 11) AS INT) AS height,
-       CAST(2 + doc_id % 3 AS INT) AS n_samples,
-       CAST((2 + doc_id % 3 + 1) // 2 AS INT) AS n_keyframes,
-       CAST(40 * (2 + doc_id % 3) AS INT) AS duration_ms
-FROM documents
-"""
-    o["mm_audio_flac"] = """
-SELECT doc_id,
-       CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-            ELSE 44100 END AS INT) AS sample_rate,
-       CAST(1 + doc_id % 2 AS INT) AS n_channels,
-       CAST(64 * (2 + doc_id % 4) AS INT) AS n_frames,
-       CAST((64 * (2 + doc_id % 4) * 1000)
-            // (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                ELSE 44100 END) AS INT) AS duration_ms,
-       ROUND(CAST(500 + doc_id % 100 AS DOUBLE), 6) AS rms
-FROM documents
-"""
     o["txt_decontam"] = f"""
 WITH {SQL_TOKS},
 g AS (
@@ -2831,47 +2284,6 @@ SELECT 'http://ex.test/' || CAST(doc_id AS VARCHAR) AS url,
                  || ' &amp; text</p><script>x()</script></body></html>')
             END AS html_len
 FROM documents WHERE doc_id < 300 AND doc_id % 7 <> 0
-"""
-    o["mm_decode_webp"] = """
-SELECT doc_id,
-       CAST(4 + doc_id % 13 AS INT) AS width,
-       CAST(3 + doc_id % 7 AS INT) AS height,
-       CAST(CASE WHEN doc_id % 2 = 1 THEN 4 ELSE 3 END AS INT) AS channels,
-       ROUND(CASE WHEN doc_id % 2 = 1
-                  THEN (3 * (doc_id % 256) + 254) / 4.0
-                  ELSE CAST(doc_id % 256 AS DOUBLE) END, 6) AS mean_px
-FROM documents
-"""
-    o["mm_video_mp4"] = """
-SELECT doc_id, 'isom' AS brand,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS INT) AS n_tracks,
-       CAST(16 * (1 + doc_id % 4) AS INT) AS width,
-       CAST(16 * (1 + doc_id % 3) AS INT) AS height,
-       CAST(3 + doc_id % 5 AS INT) AS n_samples,
-       CAST((3 + doc_id % 5 + 1) // 2 AS INT) AS n_keyframes,
-       CAST(40 * (3 + doc_id % 5) AS INT) AS duration_ms
-FROM documents
-"""
-    o["mm_frames_mp4"] = """
-SELECT d.doc_id, CAST(f.fi AS INT) AS frame_id,
-       md5(repeat(CAST(d.doc_id AS VARCHAR) || ':' || CAST(f.fi AS VARCHAR),
-                  1 + f.fi)) AS frame_hash
-FROM documents d CROSS JOIN (SELECT unnest(range(8)) AS fi) f
-WHERE f.fi % 2 = 0 AND f.fi < 3 + d.doc_id % 5
-"""
-    o["mm_audio_mp3"] = """
-SELECT doc_id, CAST(1 AS INT) AS mpeg_version,
-       CAST(CASE doc_id % 4 WHEN 0 THEN 32 WHEN 1 THEN 64 WHEN 2 THEN 128
-            ELSE 192 END AS INT) AS bitrate_kbps,
-       CAST(CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-            ELSE 32000 END AS INT) AS sample_rate,
-       CAST(1 + doc_id % 2 AS INT) AS channels,
-       CAST(10 + doc_id % 20 AS INT) AS n_frames,
-       CAST(((10 + doc_id % 20) * 1152 * 1000)
-            // (CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END) AS INT) AS duration_ms,
-       CAST(doc_id % 2 = 0 AS INT) AS has_id3
-FROM documents
 """
     o["dd_emb_neardup"] = f"""
 WITH {SQL_HP},

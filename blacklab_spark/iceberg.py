@@ -15,9 +15,10 @@ blacklab_spark.avro_io:
   spec's field-ids (manifest_path=500 …, data_file.file_path=100 …), so
   the files are the format, not a look-alike;
 - one commit path, ``IcebergTable._commit(mutate)``: each change is applied
-  to a fresh load of the current version and committed by creating
-  ``v{N+1}`` with O_EXCL (the swap a catalog supplies on a real deployment);
-  a writer that loses the race re-loads, re-validates and re-applies;
+  to a fresh load of the current version and committed by publishing a
+  complete ``v{N+1}`` with ``os.link`` (put-if-absent, the swap a catalog
+  supplies on a real deployment); a writer that loses the race re-loads,
+  re-validates and re-applies;
 - scan planning: snapshot-id / as-of-timestamp time travel and
   incremental (start, end] append scans by data sequence number — the
   planner returns the parquet file list and Spark reads it directly.
@@ -506,13 +507,18 @@ class IcebergTable:
         return os.path.join(self.location, "metadata")
 
     def _load(self) -> tuple[int, dict]:
-        """(version, metadata) of the version the hint names, as a freshly
-        parsed dict the caller owns."""
+        """(version, metadata) of the newest version, as a freshly parsed
+        dict the caller owns. The hint can lag the versions (a writer
+        publishes v{N+1} before it rewrites the hint, and may crash in
+        between), so the walk goes forward from it while a next version
+        exists, as Iceberg's Hadoop tables do."""
         hint = os.path.join(self._meta_dir, "version-hint.text")
         if not os.path.exists(hint):
             raise FileNotFoundError(f"not an iceberg table: {self.location}")
         with open(hint) as f:
             v = int(f.read().strip())
+        while os.path.exists(os.path.join(self._meta_dir, f"v{v + 1}.metadata.json")):
+            v += 1
         with open(os.path.join(self._meta_dir, f"v{v}.metadata.json")) as f:
             return v, json.load(f)
 
@@ -584,14 +590,21 @@ class IcebergTable:
 
     @staticmethod
     def _write_metadata(meta_dir: str, version: int, md: dict) -> None:
-        """Write metadata version `version`. The version file is created
-        with O_EXCL, the compare-and-swap a catalog provides: when another
-        writer already made it, this raises FileExistsError and nothing is
-        overwritten."""
+        """Publish metadata version `version`: the complete JSON goes to a
+        temp file that os.link then names v{version}.metadata.json. That is
+        put-if-absent of whole content, the compare-and-swap a catalog
+        provides (as in Delta Lake's log): when another writer already made
+        the version, this raises FileExistsError and nothing is
+        overwritten, and a crash leaves no version file or a complete one."""
         path = os.path.join(meta_dir, f"v{version}.metadata.json")
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            json.dump(md, f, indent=2)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(md, f, indent=2)
+            os.link(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
         _write_json(os.path.join(meta_dir, "version-hint.text"), version)
 
     def _commit(self, mutate):

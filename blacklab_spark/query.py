@@ -1268,13 +1268,26 @@ def _docset_kernel(op: str, n_q: int):
     return kernel
 
 
-def _score_arrays(qidx, doc, tf, dl, idf: dict, avgdl: float, quantize: bool):
-    """Exact BM25 with the oracle's float association order (qidx asc)."""
-    if len(doc) == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
+# Relative slack on every skip test whose sum runs in a different order than
+# the scorer's: a few ulps of reordering must not prune a block whose best
+# doc ties the kth score (and may win the doc_id tie-break).
+_SKIP_MARGIN = 1e-9
+
+
+def _bm25(idf, tf, dl, avgdl: float):
+    """BM25 term contribution in the oracle's float association order. Every
+    score and every block bound goes through it, so a bound at (max_tf,
+    min_dl) equals, bit for bit, the score of a doc that reaches it."""
+    tf = np.asarray(tf, np.float64)
+    dl = np.asarray(dl, np.float64)
+    return idf * (tf / (tf + K1 * (1 - B + B * dl / avgdl))) * (K1 + 1)
+
+
+def _contribs(qidx, doc, tf, dl, idf: dict, avgdl: float, quantize: bool):
+    """Per-(doc, qidx) BM25 contributions sorted by (doc, qidx); variant
+    term_ids sharing a qidx have their tfs summed per doc first."""
     if quantize:
         dl = quantize_dl(dl)
-    # merge variant term_ids sharing a qidx: sum tf per (doc, qidx)
     order = np.lexsort((qidx, doc))
     doc, qidx, tf, dl = doc[order], qidx[order], tf[order], dl[order]
     change = np.empty(len(doc), dtype=bool)
@@ -1286,46 +1299,30 @@ def _score_arrays(qidx, doc, tf, dl, idf: dict, avgdl: float, quantize: bool):
     idf_arr = np.zeros(max(idf.keys()) + 1 if idf else 1, dtype=np.float64)
     for q, v in idf.items():
         idf_arr[q] = v
-    tf_f = tf_sum.astype(np.float64)
-    tfnorm = tf_f / (tf_f + K1 * (1 - B + B * dl_g.astype(np.float64) / avgdl))
-    contrib = idf_arr[qidx_g] * tfnorm * (K1 + 1)
+    return doc_g, qidx_g, _bm25(idf_arr[qidx_g], tf_sum, dl_g, avgdl)
+
+
+def _score_arrays(qidx, doc, tf, dl, idf: dict, avgdl: float, quantize: bool):
+    """Exact BM25 with the oracle's float association order (qidx asc)."""
+    if len(doc) == 0:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    doc_g, _, contrib = _contribs(qidx, doc, tf, dl, idf, avgdl, quantize)
     # sum per doc in qidx order (rows already sorted by (doc, qidx))
     dchange = np.empty(len(doc_g), dtype=bool)
     dchange[0] = True
     np.not_equal(doc_g[1:], doc_g[:-1], out=dchange[1:])
     dstarts = np.flatnonzero(dchange)
-    scores = np.add.reduceat(contrib, dstarts)
-    return doc_g[dstarts], scores
+    return doc_g[dstarts], np.add.reduceat(contrib, dstarts)
 
 
 def _term_contribs(qidx, doc, tf, dl, idf: dict, avgdl: float, quantize: bool):
-    """Exact per-(term, doc) BM25 contributions (variant tfs merged per doc
-    first). Returns {qidx: (docs ascending, contributions)} — the tight
-    'already-decoded term' bound source for the WAND skip test."""
-    out: dict[int, tuple] = {}
+    """The per-qidx split of the contributions _score_arrays sums:
+    {qidx: (docs ascending, contributions)} — the exact 'already-decoded
+    term' bound source for the WAND skip test."""
     if len(doc) == 0:
-        return out
-    if quantize:
-        dl = quantize_dl(dl)
-    order = np.lexsort((qidx, doc))
-    doc, qidx, tf, dl = doc[order], qidx[order], tf[order], dl[order]
-    change = np.empty(len(doc), dtype=bool)
-    change[0] = True
-    np.logical_or(doc[1:] != doc[:-1], qidx[1:] != qidx[:-1], out=change[1:])
-    starts = np.flatnonzero(change)
-    tf_sum = np.add.reduceat(tf, starts).astype(np.float64)
-    doc_g, qidx_g, dl_g = doc[starts], qidx[starts], dl[starts]
-    idf_arr = np.zeros(max(idf.keys()) + 1 if idf else 1, dtype=np.float64)
-    for q, v in idf.items():
-        idf_arr[q] = v
-    contrib = (
-        idf_arr[qidx_g] * (K1 + 1) * tf_sum
-        / (tf_sum + K1 * (1 - B + B * dl_g.astype(np.float64) / avgdl))
-    )
-    for q in np.unique(qidx_g):
-        m = qidx_g == q
-        out[int(q)] = (doc_g[m], contrib[m])  # doc order preserved (asc)
-    return out
+        return {}
+    doc_g, qidx_g, contrib = _contribs(qidx, doc, tf, dl, idf, avgdl, quantize)
+    return {int(q): (doc_g[qidx_g == q], contrib[qidx_g == q]) for q in np.unique(qidx_g)}
 
 
 def _wand_multi(
@@ -1380,7 +1377,7 @@ def _wand_multi(
     fd = pdf["first_doc"].to_numpy(np.int64)
     ld = pdf["last_doc"].to_numpy(np.int64)
     idf_row = np.array([idf.get(int(q), 0.0) for q in qidx])
-    ub = idf_row * (K1 + 1) * mt / (mt + K1 * (1 - B + B * ml.astype(np.float64) / avgdl))
+    ub = _bm25(idf_row, mt, ml, avgdl)
     n_blocks = len(pdf)
 
     # terms with >1 surface variant in this shard: per-block bounds are not
@@ -1413,6 +1410,7 @@ def _wand_multi(
     theta = np.partition(s0, -k)[-k] if len(s0) >= k else -np.inf
 
     remaining = [q for q in present if q != seed_q and q not in multi_var]
+    theta_lo = theta * (1 - _SKIP_MARGIN)  # BM25 scores are >= 0
     skipped_rows: list[int] = []
     if np.isfinite(theta):
         # decoded terms: exact per-(term, doc) contributions — the skip test
@@ -1462,7 +1460,7 @@ def _wand_multi(
                     cummax_l2 = np.maximum.accumulate(l2)
                     has[nz] = cummax_l2[i[nz] - 1] >= fd[rows_q[nz]]
                 other += np.where(has, mx2, 0.0)
-            keep = ub[rows_q] + other >= theta  # keep ties (doc_id break)
+            keep = ub[rows_q] + other >= theta_lo  # keep ties (doc_id break)
             decode_mask[rows_q[keep]] = True
             skipped_rows.extend(rows_q[~keep].tolist())
             if keep.any():
@@ -1490,7 +1488,7 @@ def _wand_multi(
             hi, weights=ub[skipped], minlength=nd1
         )
         slack = np.cumsum(diff[:-1])
-        cand = scores_c + slack >= theta2
+        cand = scores_c + slack >= theta2 * (1 - _SKIP_MARGIN)
         if cand.any():
             cd = docs_c[cand]
             need = skipped[
@@ -1565,11 +1563,10 @@ def _score_kernel(idf: dict, avgdl: float, k: int, quantize: bool, n_and: int = 
         # uses: quantize_dl rounds DOWN, so a raw min_dl bound could sit
         # BELOW a block's true max score and wrongly prune it. quantize_dl
         # is monotone, so quantize_dl(min_dl) is a valid per-block min.
-        ml_i = pdf["min_dl"].to_numpy(np.int64)
+        ml = pdf["min_dl"].to_numpy(np.int64)
         if quantize:
-            ml_i = quantize_dl(ml_i)
-        ml = ml_i.astype(np.float64)
-        bound = idf[q] * (K1 + 1) * mt / (mt + K1 * (1 - B + B * ml / avgdl))
+            ml = quantize_dl(ml)
+        bound = _bm25(idf[q], mt, ml, avgdl)
         order = np.argsort(-bound)
         # decode in bound-descending CHUNKS, not block-at-a-time: one
         # pandas slice + one _decode_group per chunk is ~6x cheaper than

@@ -43,6 +43,13 @@ def get_spark(
         # local-small-corpus sizing, not a cluster assumption.
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        # Python workers import blacklab_spark from where this module was
+        # loaded (a checkout or the --py-files zip), whatever the working
+        # directory; Spark puts this ahead of the workers' inherited PYTHONPATH
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

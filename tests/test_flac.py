@@ -107,33 +107,3 @@ def test_wasted_bits_decode():
     bw.align()
     out = flac._read_subframe(flac._MSBReader(bw.getvalue()), 10, 16)
     assert (out == 8).all()
-
-
-def test_audio_metadata_dispatches_flac(spark):
-    import pandas as pd
-
-    from blacklab_spark import multimodal as M
-
-    df = spark.createDataFrame([(0,), (1,), (2,)], "doc_id long")
-
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i == 0:
-                    payloads.append(flac.encode_flac(
-                        np.full(200, 300), 16000, mode="constant", blocksize=100))
-                elif i == 1:
-                    payloads.append(M.encode_wav(8000, 50, 1, 250))
-                else:
-                    payloads.append(b"neither wav nor flac")
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    wp = df.mapInPandas(synth, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in M.audio_metadata(wp).collect()}
-    assert out[0]["sample_rate"] == 16000 and out[0]["rms"] == 300.0
-    assert out[0]["n_frames"] == 200 and out[0]["duration_ms"] == 12
-    assert out[1]["sample_rate"] == 8000 and out[1]["rms"] == 250.0
-    assert out[2]["sample_rate"] is None

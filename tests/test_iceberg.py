@@ -808,8 +808,8 @@ def test_expire_snapshots(spark, tmp_path):
 
 
 def test_concurrent_commit_cas_retry(spark, tmp_path):
-    """Two writers racing one commit: the version file is O_EXCL (the
-    catalog-CAS analog), so the loser refreshes and re-commits on top of
+    """Two writers racing one commit: the version file is put-if-absent
+    (the catalog-CAS analog), so the loser refreshes and re-commits on top of
     the winner — both snapshots land, no rows lost, sequence numbers
     strictly increase."""
     import threading
@@ -1010,7 +1010,7 @@ def _pq_file(loc, name, n):
 def _interleaved(competitor):
     """Run `competitor()` (a whole commit through a second handle) just
     before the next metadata version write: between the writer's load and
-    its O_EXCL create. Yields a dict that receives competitor's result."""
+    its put-if-absent publish. Yields a dict that receives competitor's result."""
     orig = IcebergTable.__dict__["_write_metadata"]
     write = IcebergTable._write_metadata
     got = {}
@@ -1076,6 +1076,65 @@ def test_commit_lands_on_top_of_interleaved_append(tmp_path, op):
         assert [f["name"] for f in md["schemas"][md["current-schema-id"]]["fields"]] == [
             "k", "v", "w",
         ]
+
+
+def _columns(md):
+    return [f["name"] for f in md["schemas"][md["current-schema-id"]]["fields"]]
+
+
+def test_crash_mid_version_write_leaves_no_version(tmp_path, monkeypatch):
+    """A writer that fails while writing v{N+1} leaves no v{N+1} (and no
+    temp file), so the next commit takes that version instead of finding a
+    truncated file in its way on every attempt."""
+    import os
+
+    loc = str(tmp_path / "t")
+    IcebergTable.create(loc, "k bigint, v string")
+    t = IcebergTable(loc)
+
+    def partial_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:7])
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", partial_dump)
+    with pytest.raises(OSError):
+        t.add_column("w", "string")
+    monkeypatch.undo()
+    meta = os.path.join(loc, "metadata")
+    assert sorted(os.listdir(meta)) == ["v1.metadata.json", "version-hint.text"]
+    t.add_column("w", "string")
+    assert t._version == 2 and IcebergTable(loc)._version == 2
+    assert _columns(t.metadata) == ["k", "v", "w"]
+
+
+def test_stale_hint_reads_newest_version(tmp_path, monkeypatch):
+    """A writer that dies after publishing v{N+1} but before rewriting the
+    hint leaves the hint at N: readers see v{N+1}, and the next commit
+    lands at N+2 instead of retrying v{N+1} until contention."""
+    import os
+
+    from blacklab_spark import iceberg as I
+
+    loc = str(tmp_path / "t")
+    IcebergTable.create(loc, "k bigint, v string")
+    t = IcebergTable(loc)
+    s1 = t.commit_append([_pq_file(loc, "a", 2)])  # v2
+
+    def crash(path, obj):
+        raise OSError("crash before the hint")
+
+    monkeypatch.setattr(I, "_write_json", crash)
+    with pytest.raises(OSError):
+        t.add_column("w", "string")  # v3 published, hint still 2
+    monkeypatch.undo()
+    meta = os.path.join(loc, "metadata")
+    assert open(os.path.join(meta, "version-hint.text")).read().strip() == "2"
+    fresh = IcebergTable(loc)
+    assert fresh._version == 3
+    assert _columns(fresh.metadata) == ["k", "v", "w"]
+    s2 = fresh.commit_append([_pq_file(loc, "b", 3)])
+    assert fresh._version == 4 and os.path.exists(os.path.join(meta, "v4.metadata.json"))
+    assert [s["snapshot-id"] for s in IcebergTable(loc).snapshots()] == [s1, s2]
 
 
 def test_watermark_survives_crash_mid_write(tmp_path, monkeypatch):

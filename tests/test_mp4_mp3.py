@@ -1,11 +1,9 @@
 """Media containers (mp4.py / mp3.py): REAL ISO-BMFF box-tree parsing +
 vectorized sample-table resolution + actual sample extraction from mdat,
 and REAL MPEG-1 Layer III frame-header walking — each round-tripped
-against its deterministic writer, plus the Arrow-batched Spark kernels
-(video_metadata / mp3_metadata / sample_frames MP4 path). Codec bitstream
-decode inside samples stays the honest boundary and is NOT attempted."""
+against its deterministic writer. Codec bitstream decode inside samples
+stays the honest boundary and is NOT attempted."""
 
-import hashlib
 import struct
 
 import numpy as np
@@ -13,7 +11,6 @@ import pytest
 
 from blacklab_spark import mp3 as M3
 from blacklab_spark import mp4 as M4
-from blacklab_spark import multimodal as M
 
 
 def _frames(n, tag="x"):
@@ -159,94 +156,3 @@ def test_mp3_rejects_non_mp3():
     assert M3.parse_mp3(b"RIFF....WAVE") is None
     assert M3.parse_mp3(b"") is None
     assert not M3.is_mp3(b"ID3" + bytes([4, 0, 0, 0, 0, 0, 10]) + b"\x00" * 20)
-
-
-# ------------------------------------------------- Spark kernels ----
-
-
-def test_video_metadata_kernel(spark):
-    rows = [(i,) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long")
-    import pandas as pd
-
-    def synth(batches):
-        def fr(n, tag):
-            return [f"{tag}:{fi}".encode() * (1 + fi) for fi in range(n)]
-
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "payload": [
-                    M4.build_mp4(fr(3 + int(i) % 5, str(int(i))),
-                                 16 * (1 + int(i) % 4), 16 * (1 + int(i) % 3))
-                    if i % 7 != 6 else b"not a video"
-                    for i in ids
-                ],
-            })
-
-    wp = df.mapInPandas(synth, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in M.video_metadata(wp).collect()}
-    assert len(out) == 20
-    for i in range(20):
-        r = out[i]
-        if i % 7 == 6:
-            assert r["brand"] is None and r["width"] is None
-        else:
-            assert r["brand"] == "isom"
-            assert r["width"] == 16 * (1 + i % 4)
-            assert r["n_samples"] == 3 + i % 5
-            assert r["duration_ms"] == 40 * (3 + i % 5)
-
-
-def test_sample_frames_real_mp4_path(spark):
-    import pandas as pd
-
-    df = spark.createDataFrame([(1,), (2,)], "doc_id long")
-
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "payload": [
-                    M4.build_mp4(
-                        [f"{int(i)}:{fi}".encode() * (1 + fi) for fi in range(5)],
-                        16, 16,
-                    )
-                    for i in ids
-                ],
-            })
-
-    wp = df.mapInPandas(synth, "doc_id long, payload binary")
-    got = sorted(
-        (r["doc_id"], r["frame_id"], r["frame_hash"])
-        for r in M.sample_frames(wp).collect()
-    )
-    exp = sorted(
-        (i, fi, hashlib.md5(f"{i}:{fi}".encode() * (1 + fi)).hexdigest())
-        for i in (1, 2) for fi in (0, 2, 4)  # keyframe_every=2 of 5 samples
-    )
-    assert got == exp
-
-
-def test_mp3_metadata_kernel_nulls_for_non_mp3(spark):
-    import pandas as pd
-
-    df = spark.createDataFrame([(0,), (1,)], "doc_id long")
-
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "payload": [
-                    M3.build_mp3(10, 128, 44100, 2) if i == 0 else b"plain text"
-                    for i in ids
-                ],
-            })
-
-    wp = df.mapInPandas(synth, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in M.mp3_metadata(wp).collect()}
-    assert out[0]["n_frames"] == 10 and out[0]["sample_rate"] == 44100
-    assert out[1]["n_frames"] is None and out[1]["has_id3"] is None

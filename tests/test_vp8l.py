@@ -10,7 +10,6 @@ import numpy as np
 import pytest
 
 from blacklab_spark import vp8l
-from blacklab_spark.multimodal import decode_image
 
 
 def _rt(px, **opts):
@@ -240,15 +239,6 @@ def test_webp_vp8x_wrapper_reaches_vp8l():
     b = b"RIFF" + struct.pack("<I", 4 + len(inner) + len(chunk)) + b"WEBP" + inner + chunk
     d = vp8l.decode_webp(b)
     assert d["width"] == 4 and float(d["pixels"].mean()) == 55.0
-
-
-def test_decode_image_dispatches_webp():
-    px = np.full((3, 4, 3), 200, np.uint8)
-    d = decode_image(vp8l.encode_webp_lossless(px))
-    assert (d["width"], d["height"], d["channels"]) == (4, 3, 3)
-    assert float(d["pixels"].mean()) == 200.0
-    # RIFF that is not WEBP (e.g. WAV) is not an image: None, no raise
-    assert decode_image(b"RIFF\x04\x00\x00\x00WAVEfmt ") is None
 
 
 # ------------------------------------------------------------ property ----

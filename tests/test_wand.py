@@ -13,18 +13,18 @@ from blacklab_spark.query import _score_arrays, _wand_multi, _decode_group
 BLOCK = 64
 
 
-def make_blocks(term_id, qidx, docs, tfs, dls):
+def make_blocks(term_id, qidx, docs, tfs, dls, block=BLOCK):
     rows = []
-    for i in range(0, len(docs), BLOCK):
-        d = docs[i : i + BLOCK]
-        t = tfs[i : i + BLOCK]
-        ln = dls[i : i + BLOCK]
+    for i in range(0, len(docs), block):
+        d = docs[i : i + block]
+        t = tfs[i : i + block]
+        ln = dls[i : i + block]
         rows.append(
             {
                 "shard": 0,
                 "term_id": term_id,
                 "qidx": qidx,
-                "block_id": i // BLOCK,
+                "block_id": i // block,
                 "doc_count": len(d),
                 "first_doc": int(d[0]),
                 "last_doc": int(d[-1]),
@@ -295,3 +295,55 @@ def test_and_kernel_matches_exhaustive(quantize):
         oo = np.lexsort((out["doc_id"].to_numpy(), -out["score"].to_numpy()))[:k]
         got = list(zip(out["doc_id"].to_numpy()[oo], np.round(out["score"].to_numpy()[oo], 12)))
         assert got == exp, k
+
+
+# One idf/avgdl draw where BM25 computed as idf*(K1+1)*tf/den rounds 1 ulp
+# below idf*(tf/den)*(K1+1) at (tf 2, dl 118): a block bound written the
+# first way sits under the score of a doc that reaches it.
+TIE_IDF = 3.6312479004579954
+TIE_AVGDL = 200.0
+TIE_TOP4 = [0, 10, 20, 30]  # all score 5.643762190750683; doc 40 ties too
+
+
+def _tie_blocks(term_id, qidx, docs, tfs, dls):
+    a = lambda x: np.array(x, dtype=np.int64)  # noqa: E731
+    return make_blocks(term_id, qidx, a(docs), a(tfs), a(dls), block=2)
+
+
+def _top(d, s, k):
+    o = np.lexsort((d, -s))[:k]
+    return [int(x) for x in d[o]]
+
+
+def test_single_term_bound_keeps_tied_block():
+    """Block 0 bounds exactly the kth score and holds doc 0, which wins the
+    doc_id tie-break: the chunked walk must decode it, not stop before it."""
+    from blacklab_spark.query import _score_kernel
+
+    docs, tfs, dls = [0, 1], [2, 1], [118, 3000]
+    for base in (10, 20, 30, 40):
+        docs += [base, base + 1]
+        tfs += [2, 7]
+        dls += [118, 5000]
+    pdf = pd.DataFrame(_tie_blocks(0, 0, docs, tfs, dls))
+    idf = {0: TIE_IDF}
+    qx, dc, tf, dl = _decode_group(pdf, False)
+    d_full, s_full = _score_arrays(qx, dc, tf, dl, idf, TIE_AVGDL, False)
+    assert _top(d_full, s_full, 4) == TIE_TOP4
+    out = _score_kernel(idf, TIE_AVGDL, 4, False)(pdf)
+    assert _top(out["doc_id"].to_numpy(), out["score"].to_numpy(), 4) == TIE_TOP4
+
+
+def test_wand_multi_keeps_tied_block():
+    """Two terms of equal idf: the seed term's docs 10..40 set theta, and the
+    other term's only block holds doc 0, whose score ties theta with a
+    smaller doc_id. The skip test must keep that block."""
+    seed = _tie_blocks(0, 0, [10, 20, 30, 40], [2, 2, 2, 2], [118] * 4)
+    other = _tie_blocks(1, 1, [0, 1], [2, 1], [118, 3000])
+    pdf = pd.DataFrame(seed + other)
+    idf = {0: TIE_IDF, 1: TIE_IDF}
+    qx, dc, tf, dl = _decode_group(pdf, False)
+    d_full, s_full = _score_arrays(qx, dc, tf, dl, idf, TIE_AVGDL, False)
+    assert _top(d_full, s_full, 4) == TIE_TOP4
+    d_w, s_w, _, _ = _wand_multi(pdf, idf, TIE_AVGDL, 4, False)
+    assert _top(d_w, s_w, 4) == TIE_TOP4
