@@ -9,7 +9,7 @@ A from-scratch rebuild of the capabilities of the reference corpus search engine
   from the CoNLL-U reader), the reference's primary ingestion model
 - build: vectorized Arrow UDF extraction/tokenization + per-annotation
   parallel layers -> docs / terms / postings (delta+varint doc-sorted
-  blocks, block-max scores) / manifest tables; opt-in markup tag spans,
+  blocks, block-max scores) tables + meta.json; opt-in markup tag spans,
   char offsets and dependency relations
 - query: term / regex / fuzzy / OR / AND / phrase / proximity / repetition
   (unbounded) / relation span queries, markup tags with attribute filters

@@ -1,4 +1,4 @@
-"""Index build pipeline: pages -> docs / terms / postings / manifest (+ meta).
+"""Index build pipeline: pages -> docs / terms / postings (+ meta).
 
 Spark-first re-expression of the reference's index build (IndexTool ->
 IndexerImpl -> BlackLab40PostingsWriter, see SURVEY.md §3.3): where the
@@ -52,6 +52,8 @@ from .codec import (
     varint_encode,
     varint_lengths,
 )
+from .rank import assign_dense_ids
+from .storage import parquet_rows, read_parquet, write_json
 from .tokenize import (
     TOKENIZER_VERSION,
     extract_text_series,
@@ -119,6 +121,10 @@ BLOCKS_SCHEMA = (
     "last_doc long, max_tf int, min_dl int, tf_sum long, doc_ids binary, "
     "tfs binary, dls binary, positions binary"
 )
+# blocks rows with a negative block_id post nothing: a FOLD_MARKER row holds
+# a fold's df overcount in doc_count, a SUMMARY_BLOCK row one shard's counts
+# as JSON in `positions` (block_summaries)
+FOLD_MARKER, SUMMARY_BLOCK = -1, -2
 
 
 # ------------------------------------------------------------ tokenization --
@@ -409,51 +415,6 @@ def tokenized_docs(
     return pages.mapInPandas(kernel, schema=docs_schema(par_fields))
 
 
-# -------------------------------------------------------- dense id assigner --
-def assign_dense_ids(df: DataFrame, order_col: str, id_col: str, n_parts: int) -> tuple[DataFrame, int, DataFrame]:
-    """Deterministic dense ids = row_number over global sort of `order_col`,
-    without a single-partition window: range-repartition + per-partition
-    offsets (two light passes). Values of `order_col` must be unique.
-
-    The repartitioned frame is persisted before counting: the id pass MUST see
-    the exact partitions the count pass saw (repartitionByRange samples its
-    boundaries from upstream row order, which is not deterministic across
-    recomputations after a groupBy). Returns (df_with_ids, total, cached_df) —
-    caller unpersists cached_df once downstream results are materialized.
-
-    Scale: the per-partition count table collected to the driver is
-    n_parts rows — trivially small at any corpus size.
-    """
-    d = df.repartitionByRange(n_parts, order_col).sortWithinPartitions(order_col)
-    d = d.withColumn("_pid", F.spark_partition_id()).persist()
-    counts = {r["_pid"]: r["n"] for r in d.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
-    boff = spark.sparkContext.broadcast(offsets)
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in d.schema.fields if f.name != "_pid"
-    ) + f", {id_col} long"
-
-    def add_ids(batches):
-        seen = 0
-        pid = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["_pid"].iloc[0])
-            base = boff.value.get(pid, 0)
-            ids = np.arange(seen, seen + len(pdf), dtype=np.int64) + base
-            seen += len(pdf)
-            yield pdf.drop(columns=["_pid"]).assign(**{id_col: ids})
-
-    return d.mapInPandas(add_ids, schema=out_schema), acc, d
-
-
 # ---------------------------------------------------------- posting encoder --
 def _encode_shard_kernel(
     block_size: int,
@@ -518,6 +479,7 @@ def _encode_shard_kernel(
         vals, docs_l, dls_l, shs_l, counts_l = [], [], [], [], []
         in_vals = {a: [] for a in input_layers}
         mv_p_l, mv_v_l, mv_counts_l = [], [], []
+        all_sh, all_dl, all_mv = [], [], []  # every row, for the shard summary
         for b in batches:
             if b.num_rows == 0:
                 continue
@@ -532,6 +494,11 @@ def _encode_shard_kernel(
                 if mvc is not None
                 else np.zeros(b.num_rows, dtype=np.int64)
             )
+            shs = b.column("shard").to_numpy(zero_copy_only=False).astype(np.int64)
+            dls = b.column("doc_len").to_numpy(zero_copy_only=False).astype(np.int64)
+            all_sh.append(shs)
+            all_dl.append(dls)
+            all_mv.append(mv_counts)
             if counts.sum() == 0 and mv_counts.sum() == 0:
                 continue
             vals.append(toks.flatten())
@@ -548,10 +515,36 @@ def _encode_shard_kernel(
             for a in input_layers:
                 in_vals[a].append(b.column(f"_{a}_eff").flatten())
             docs_l.append(b.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64))
-            dls_l.append(b.column("doc_len").to_numpy(zero_copy_only=False).astype(np.int64))
-            shs_l.append(b.column("shard").to_numpy(zero_copy_only=False).astype(np.int64))
+            dls_l.append(dls)
+            shs_l.append(shs)
             counts_l.append(counts)
+        if not all_sh:
+            return
+        # per-shard summary, emitted last as one block_id = SUMMARY_BLOCK
+        # row per shard (block_summaries): the docs' stats and the blocks'
+        # counts the build records in meta.json, with no job of their own
+        rows_sh = np.concatenate(all_sh)
+        summ_sh, summ_inv = np.unique(rows_sh, return_inverse=True)
+        tally = {
+            "n_docs": np.bincount(summ_inv, minlength=len(summ_sh)),
+            "sum_dl": np.zeros(len(summ_sh), np.int64),
+            "n_mv": np.zeros(len(summ_sh), np.int64),
+            "n_blocks": np.zeros(len(summ_sh), np.int64),
+            "n_postings": np.zeros(len(summ_sh), np.int64),
+            "n_terms": np.zeros(len(summ_sh), np.int64),
+        }
+        np.add.at(tally["sum_dl"], summ_inv, np.concatenate(all_dl))
+        np.add.at(tally["n_mv"], summ_inv, np.concatenate(all_mv))
+
+        def summary():
+            return emit([
+                (int(sh), None, None, SUMMARY_BLOCK, 0, 0, 0, 0, 0, 0, b"", b"", b"",
+                 json.dumps({k: int(v[i]) for k, v in tally.items()}).encode())
+                for i, sh in enumerate(summ_sh)
+            ])
+
         if not vals:
+            yield summary()
             return
         doc_arr = np.concatenate(docs_l)      # per-doc
         dl_arr = np.concatenate(dls_l)
@@ -755,7 +748,7 @@ def _encode_shard_kernel(
                             if overcount > 0:
                                 markers.append(
                                     (int(sh_small[si]), "word", str(f_uniq[f_id]),
-                                     -1, int(overcount), 0, 0, 0, 0, 0,
+                                     FOLD_MARKER, int(overcount), 0, 0, 0, 0, 0,
                                      b"", b"", b"", b"")
                                 )
                 if markers:
@@ -795,6 +788,12 @@ def _encode_shard_kernel(
             blk_shard = sh_small[blk_grp // n_codes]
             blk_code = blk_grp % n_codes
             block_id = (rel[bstarts] // block_size).astype(np.int64)
+            blk_at = np.searchsorted(summ_sh, blk_shard)
+            np.add.at(tally["n_blocks"], blk_at, 1)
+            np.add.at(tally["n_postings"], blk_at, doc_count)
+            np.add.at(
+                tally["n_terms"], np.searchsorted(summ_sh, sh_small[g_grp[gstarts] // n_codes]), 1
+            )
             terms_py = vocab.tolist()
             nb = len(bstarts)
             out: list[tuple] = []
@@ -842,8 +841,39 @@ def _encode_shard_kernel(
         for annot in annotations:
             codes, vocab = layer_codes(annot)
             yield from encode_layer(annot, codes, vocab)
+        yield summary()
 
     return kernel
+
+
+def block_summaries(blocks_dir: str) -> tuple[dict, list[dict]]:
+    """The encode kernels' SUMMARY_BLOCK rows of a blocks table, read on the
+    driver with pyarrow: each kernel task emits them last, so row-group
+    statistics skip every other row group. Returns the totals (n_docs,
+    sum_dl, n_mv) of the main token stream, whose rows have a null annot
+    (a parallel field's kernel counts its own stream under f_<field>), and
+    per shard the docs, posting blocks, postings and distinct terms of
+    every layer and field."""
+    import pyarrow.dataset as pads
+
+    rows = pads.dataset(blocks_dir, format="parquet").to_table(
+        columns=["shard", "annot", "positions"],
+        filter=pads.field("block_id") == SUMMARY_BLOCK,
+    ).to_pylist()
+    totals = dict.fromkeys(("n_docs", "sum_dl", "n_mv"), 0)
+    shards: dict[int, dict] = {}
+    for r in rows:
+        s = json.loads(r["positions"])
+        sh = shards.setdefault(
+            r["shard"], dict.fromkeys(("n_docs", "n_blocks", "n_postings", "n_terms"), 0)
+        )
+        for k in ("n_blocks", "n_postings", "n_terms"):
+            sh[k] += s[k]
+        if r["annot"] is None:
+            sh["n_docs"] += s["n_docs"]
+            for k in totals:
+                totals[k] += s[k]
+    return totals, [{"shard": k, **v} for k, v in sorted(shards.items())]
 
 
 # ------------------------------------------------------- dict finish kernel --
@@ -939,7 +969,7 @@ def build_index(
     resume=True: stages whose parquet committed under identical build params
     (docs / blocks / terms / postings) are reused, not recomputed — the
     north-rule "resumable from checkpoint" (each stage write is a snapshot;
-    the manifest carries per-shard lineage + metrics)."""
+    meta.json carries per-shard counts)."""
     t0 = time.time()
     stage_s: dict[str, float] = {}
     _last = [t0]
@@ -954,9 +984,9 @@ def build_index(
 
     # --- resume support: a stage whose parquet committed (_SUCCESS) under
     # identical build params is never recomputed. Mirrors the north rule's
-    # "resumable from checkpoint": each stage write is the checkpoint, the
-    # manifest carries per-shard lineage, and parquet commit protocol makes
-    # the _SUCCESS marker atomic-enough for a restarted driver.
+    # "resumable from checkpoint": each stage write is the checkpoint, and
+    # parquet commit protocol makes the _SUCCESS marker atomic-enough for a
+    # restarted driver.
     annotations = tuple(annotations)
     assert annotations[0] == "word" and set(annotations) <= {"word", "lemma", "pos"}
     if codec not in ("varint", "pfor"):
@@ -998,15 +1028,14 @@ def build_index(
 
         _sh.rmtree(seg_dir, ignore_errors=True)
         os.makedirs(seg_dir, exist_ok=True)
-        with open(params_path, "w") as f:
-            json.dump(params, f)
+        write_json(params_path, params)
 
     def _done(name: str) -> bool:
         return resume and os.path.exists(f"{seg_dir}/{name}/_SUCCESS")
 
     if _done("docs"):
-        docs = spark_.read.parquet(f"{seg_dir}/docs")
-        n_docs = docs.count()
+        docs = read_parquet(spark_, f"{seg_dir}/docs")
+        n_docs = parquet_rows(f"{seg_dir}/docs")
         per_shard = max(1, -(-n_docs // n_shards))
         stage_s["docs_resumed"] = True
     else:
@@ -1014,11 +1043,10 @@ def build_index(
         # the heavy page payload (html/text) never moves through the rank
         # shuffle; ids join back by url (broadcast small, sort-merge at 10^12)
         ids, n_docs, cache0 = assign_dense_ids(
-            pages.select("url"), "url", "doc_id", id_parts or max(4, min(n_shards, 64))
+            pages.select("url"), ["url"], "doc_id",
+            id_parts or max(4, min(n_shards, 64)), base=base_doc_id,
         )
         tick("doc_ids")
-        if base_doc_id:
-            ids = ids.withColumn("doc_id", F.col("doc_id") + F.lit(base_doc_id))
         per_shard = max(1, -(-n_docs // n_shards))  # ceil
         ids = ids.withColumn(
             "shard",
@@ -1047,21 +1075,8 @@ def build_index(
         docs0.write.mode("overwrite").parquet(f"{seg_dir}/docs")
         cache0.unpersist()
         # read-back = lineage cut: later stages see one stable snapshot
-        docs = spark_.read.parquet(f"{seg_dir}/docs")
+        docs = read_parquet(spark_, f"{seg_dir}/docs")
     tick("docs")
-    # one stats job: sum_dl + whether any position carries secondary
-    # (multi-value) values — queries must know (meta.multi_value) because
-    # mv breaks the one-token-per-position premise behind the no-dedupe
-    # fast paths (term/or/regex hits can then repeat a (doc,start,end))
-    if "mv" in docs.columns:
-        _st = docs.agg(
-            F.sum("doc_len").alias("dl"), F.sum(F.size("mv")).alias("nmv")
-        ).collect()[0]
-        sum_dl, has_mv = int(_st["dl"] or 0), bool(int(_st["nmv"] or 0) > 0)
-    else:
-        sum_dl = int(docs.agg(F.sum("doc_len")).collect()[0][0] or 0)
-        has_mv = False
-    tick("stats")
 
     # ---- blocks: THE one big shuffle — but of COMPACT doc rows, not exploded
     # tokens. A JVM explode of the token stream (10^2 x the row count) pays
@@ -1077,8 +1092,15 @@ def build_index(
     # 32 partitions collides (some tasks get 3 shards, some 0 — measured 3x
     # task skew); range boundaries put ~1 shard per partition
     postings_done = _done("postings") and _done("terms")
-    if _done("blocks") or postings_done:
-        blocksr = None if postings_done else spark_.read.parquet(f"{seg_dir}/blocks")
+    prev = None
+    if postings_done and not _done("blocks") and os.path.exists(f"{seg_dir}/meta.json"):
+        # a completed build (blocks go after postings): its stats stand
+        with open(f"{seg_dir}/meta.json") as f:
+            prev = json.load(f)
+    if _done("blocks"):
+        blocksr = read_parquet(spark_, f"{seg_dir}/blocks")
+    elif prev is not None:
+        blocksr = None
     else:
         row_cols = [F.col("shard"), F.col("doc_id"), F.col("doc_len"), F.col("tokens")]
         if "lemma" in input_layers:
@@ -1119,30 +1141,46 @@ def build_index(
             ).withColumn("annot", F.lit(f"f_{fld}"))
             blocks = blocks.unionByName(pblocks)
         # lineage cut + resume checkpoint: blocks feed 3 consumers (dict,
-        # remap, manifest) — recomputing the shuffle per consumer would
-        # triple the cost
+        # remap, the shard summaries) — recomputing the shuffle per
+        # consumer would triple the cost
         blocks.write.mode("overwrite").parquet(f"{seg_dir}/blocks")
-        blocksr = spark_.read.parquet(f"{seg_dir}/blocks")
+        blocksr = read_parquet(spark_, f"{seg_dir}/blocks")
     tick("blocks")
+    # sum_dl and whether any position carries secondary (multi-value)
+    # values — queries must know (meta.multi_value) because mv breaks the
+    # one-token-per-position premise behind the no-dedupe fast paths
+    # (term/or/regex hits can then repeat a (doc,start,end)) — come from
+    # the kernels' shard summaries, read on the driver: no Spark job
+    if prev is not None:
+        sum_dl, has_mv, shards = prev["sum_dl"], prev["multi_value"], prev.get("shards")
+    else:
+        totals, shards = block_summaries(f"{seg_dir}/blocks")
+        if totals["n_docs"] != n_docs:
+            raise RuntimeError(
+                f"blocks of {seg_dir} summarize {totals['n_docs']} of {n_docs} docs "
+                "(a checkpoint written before shard summaries?); rebuild with resume=False"
+            )
+        sum_dl, has_mv = totals["sum_dl"], totals["n_mv"] > 0
+    tick("stats")
 
     TERMS_SCHEMA = (
         "annot string, term string, df long, cf long, term_fold string, "
         "fold_cf long, fold_df long, term_id long, sort_pos_s long, sort_pos_i long"
     )
     if _done("terms"):
-        terms = spark_.read.parquet(f"{seg_dir}/terms")
-        n_terms = terms.count()
+        terms = read_parquet(spark_, f"{seg_dir}/terms")
+        n_terms = parquet_rows(f"{seg_dir}/terms")
         tick("terms")
     else:
         # ---- terms dictionary from block stats ----
-        # real posting rows only; block_id = -1 rows are fold-df correction
+        # real posting rows only; FOLD_MARKER rows are fold-df correction
         # markers emitted by the kernel (term = fold string, doc_count =
         # overcount of docs holding >1 surface variant of the fold)
         stats = blocksr.filter(F.col("block_id") >= 0).groupBy("annot", "term").agg(
             F.sum("doc_count").alias("df"), F.sum("tf_sum").alias("cf")
         )
         corr = (
-            blocksr.filter(F.col("block_id") < 0)
+            blocksr.filter(F.col("block_id") == FOLD_MARKER)
             .groupBy("annot", F.col("term").alias("term_fold"))
             .agg(F.sum("doc_count").alias("overcount"))
         )
@@ -1159,8 +1197,8 @@ def build_index(
                 .applyInPandas(_dict_kernel, TERMS_SCHEMA)
             )
             terms_fin.write.mode("overwrite").parquet(f"{seg_dir}/terms")
-            terms = spark_.read.parquet(f"{seg_dir}/terms")
-            n_terms = terms.count()
+            terms = read_parquet(spark_, f"{seg_dir}/terms")
+            n_terms = parquet_rows(f"{seg_dir}/terms")
             tick("terms")
         else:
             # LARGE-DICT PATH: distributed ranks (any dict size)
@@ -1172,7 +1210,7 @@ def build_index(
                 refold, schema="annot string, term string, df long, cf long, term_fold string"
             ).withColumn("_tk", F.concat_ws(chr(0), "annot", "term"))
             terms0, n_terms, cache1 = assign_dense_ids(
-                surf, "_tk", "term_id", max(4, min(n_shards, 32))
+                surf, ["_tk"], "term_id", max(4, min(n_shards, 32))
             )
             terms0 = terms0.drop("_tk")
             tick("term_ids")
@@ -1192,7 +1230,7 @@ def build_index(
                     "term_id",
                     F.concat_ws(chr(0), "annot", "term_fold", "term").alias("_k"),
                 ),
-                "_k", "sort_pos_i", max(4, min(n_shards, 32)),
+                ["_k"], "sort_pos_i", max(4, min(n_shards, 32)),
             )
             fold_rank = fold_rank.select("term_id", "sort_pos_i")
             tick("fold_rank")
@@ -1204,7 +1242,7 @@ def build_index(
             )
             cache1.unpersist()
             cache2.unpersist()
-            terms = spark_.read.parquet(f"{seg_dir}/terms")
+            terms = read_parquet(spark_, f"{seg_dir}/terms")
             tick("terms")
 
     # ---- postings: remap term string -> term_id on the COMPACT blocks table
@@ -1232,20 +1270,8 @@ def build_index(
     shutil.rmtree(f"{seg_dir}/blocks", ignore_errors=True)
     tick("postings")
 
-    # ---- manifest: per-shard lineage + metrics
-    man = (
-        spark.read.parquet(f"{seg_dir}/postings")
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("n_blocks"),
-            F.sum("doc_count").alias("n_postings"),
-            F.countDistinct("term_id").alias("n_terms"),
-        )
-        .withColumn("segment_id", F.lit(segment))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
-    )
-    man.coalesce(1).write.mode("overwrite").parquet(f"{seg_dir}/manifest")
+    # ---- manifest: the per-shard counts (meta "shards") came with the
+    # shard summaries above, so this stage reads and writes nothing
     tick("manifest")
 
     meta = {
@@ -1265,6 +1291,7 @@ def build_index(
         "n_terms": int(n_terms),
         "n_shards": n_shards,
         "per_shard": int(per_shard),
+        "shards": shards,
         "base_doc_id": base_doc_id,
         "block_size": block_size,
         "tokenizer_version": TOKENIZER_VERSION,
@@ -1272,9 +1299,7 @@ def build_index(
         "b": B,
         "build_wall_s": time.time() - t0,
     }
-    os.makedirs(seg_dir, exist_ok=True)
-    with open(f"{seg_dir}/meta.json", "w") as f:
-        json.dump(meta, f, indent=2)
+    write_json(f"{seg_dir}/meta.json", meta, indent=2)
     # segment registry at the index root
     _register_segment(out_dir, segment)
     return meta
@@ -1288,8 +1313,7 @@ def _register_segment(out_dir: str, segment: str) -> None:
             reg = json.load(f)
     if segment not in reg["segments"]:
         reg["segments"].append(segment)
-    with open(reg_path, "w") as f:
-        json.dump(reg, f, indent=2)
+    write_json(reg_path, reg, indent=2)
 
 
 def add_segment(spark, pages: DataFrame, out_dir: str, segment: str, **kw) -> dict:
@@ -1395,16 +1419,20 @@ def merge_segments(
     # ---- docs: union with renumbered shards (contiguous doc ranges stay
     # one-to-one with shards, the kernel grouping key)
     shard_off = 0
+    # per-shard counts carry over: blocks move verbatim under renumbered
+    # shards, and each segment's term_id remap is one-to-one (None when a
+    # source was built before meta.json recorded them)
+    shards = [] if all(m.get("shards") is not None for m in metas) else None
     docs_u = None
     terms_u = None
     posts_u = None
     for i, (s, m) in enumerate(zip(segs, metas)):
         base = f"{out_dir}/segments/{s}"
-        d = spark.read.parquet(f"{base}/docs").withColumn(
+        d = read_parquet(spark, f"{base}/docs").withColumn(
             "shard", (F.col("shard") + F.lit(shard_off)).cast("int")
         )
-        t = spark.read.parquet(f"{base}/terms").withColumn("_seg", F.lit(i))
-        p = spark.read.parquet(f"{base}/postings").withColumn(
+        t = read_parquet(spark, f"{base}/terms").withColumn("_seg", F.lit(i))
+        p = read_parquet(spark, f"{base}/postings").withColumn(
             "shard", (F.col("shard") + F.lit(shard_off)).cast("int")
         ).withColumn("_seg", F.lit(i))
         docs_u = d if docs_u is None else docs_u.unionByName(
@@ -1412,6 +1440,8 @@ def merge_segments(
         )
         terms_u = t if terms_u is None else terms_u.unionByName(t)
         posts_u = p if posts_u is None else posts_u.unionByName(p)
+        if shards is not None:
+            shards += [{**sh, "shard": sh["shard"] + shard_off} for sh in m["shards"]]
         shard_off += int(m["n_shards"])
     docs_u.write.mode("overwrite").parquet(f"{seg_dir}/docs")
     tick("docs")
@@ -1462,14 +1492,14 @@ def merge_segments(
         )
     else:
         merged = merged.withColumn("_tk", F.concat_ws(chr(0), "annot", "term"))
-        t0d, _n, c1 = assign_dense_ids(merged, "_tk", "term_id", 32)
+        t0d, _n, c1 = assign_dense_ids(merged, ["_tk"], "term_id", 32)
         t0d = t0d.drop("_tk")
         fr, _n2, c2 = assign_dense_ids(
             t0d.select(
                 "term_id",
                 F.concat_ws(chr(0), "annot", "term_fold", "term").alias("_k"),
             ),
-            "_k", "sort_pos_i", 32,
+            ["_k"], "sort_pos_i", 32,
         )
         (
             t0d.withColumn("sort_pos_s", F.col("term_id"))
@@ -1478,8 +1508,8 @@ def merge_segments(
             .write.mode("overwrite").parquet(f"{seg_dir}/terms")
         )
         c1.unpersist(), c2.unpersist()
-    terms = spark.read.parquet(f"{seg_dir}/terms")
-    n_terms = terms.count()
+    terms = read_parquet(spark, f"{seg_dir}/terms")
+    n_terms = parquet_rows(f"{seg_dir}/terms")
     tick("terms")
 
     # ---- postings: remap (annot, old term_id) -> new term_id per segment
@@ -1503,21 +1533,7 @@ def merge_segments(
         .write.mode("overwrite").parquet(f"{seg_dir}/postings")
     )
     tick("postings")
-
-    man = (
-        spark.read.parquet(f"{seg_dir}/postings")
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("n_blocks"),
-            F.sum("doc_count").alias("n_postings"),
-            F.countDistinct("term_id").alias("n_terms"),
-        )
-        .withColumn("segment_id", F.lit(segment))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
-    )
-    man.coalesce(1).write.mode("overwrite").parquet(f"{seg_dir}/manifest")
-    tick("manifest")
+    tick("manifest")  # the per-shard counts carried over with the docs above
 
     p0 = params[0]
     merged_params = {
@@ -1539,8 +1555,7 @@ def merge_segments(
             else "mixed"
         ),
     }
-    with open(f"{seg_dir}/build_params.json", "w") as f:
-        json.dump(merged_params, f)
+    write_json(f"{seg_dir}/build_params.json", merged_params)
     meta = {
         "stage_s": stage_s,
         "format_version": FORMAT_VERSION,
@@ -1563,6 +1578,7 @@ def merge_segments(
         "n_terms": int(n_terms),
         "n_shards": shard_off,
         "per_shard": max(int(m.get("per_shard", 1)) for m in metas),
+        "shards": shards,
         "base_doc_id": 0,
         "block_size": metas[0]["block_size"],
         # propagate, don't stamp: validated equal across sources above
@@ -1571,12 +1587,10 @@ def merge_segments(
         "b": B,
         "build_wall_s": time.time() - t0,
     }
-    with open(f"{seg_dir}/meta.json", "w") as f:
-        json.dump(meta, f, indent=2)
+    write_json(f"{seg_dir}/meta.json", meta, indent=2)
     merged_set = set(segs)
     new_reg = [x for x in all_segs if x not in merged_set] + [segment]
-    with open(reg_path, "w") as f:
-        json.dump({"segments": new_reg}, f, indent=2)
+    write_json(reg_path, {"segments": new_reg}, indent=2)
     # Source segments are dead after the registry commit — remove them so
     # streaming compaction (which merges on a cadence) doesn't leak one full
     # index copy per merge. Registry write above is the commit point: a
@@ -1638,7 +1652,7 @@ def compact(
                     )
         docs = None
         for seg in segs:
-            d = spark.read.parquet(f"{out_dir}/segments/{seg}/docs")
+            d = read_parquet(spark, f"{out_dir}/segments/{seg}/docs")
             docs = d if docs is None else docs.unionByName(d)
         # re-derive a pages-shaped frame (text already extracted; html
         # unused). Annotated-input segments pass their stored token streams
@@ -1698,6 +1712,5 @@ def compact(
         index_relations=bool(p0.get("index_relations", False)),
         codec=_codec if _codec != "mixed" else "pfor",
     )
-    with open(reg_path, "w") as f:
-        json.dump({"segments": ["compacted"]}, f, indent=2)
+    write_json(reg_path, {"segments": ["compacted"]}, indent=2)
     return meta

@@ -54,6 +54,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_io
+from .storage import write_json as _write_json
 
 FORMAT_VERSION = 2
 
@@ -296,20 +297,6 @@ def _local(path_or_uri: str) -> str:
     if path_or_uri.startswith("file://"):
         return path_or_uri[len("file://") :]
     return path_or_uri
-
-
-def _write_json(path: str, obj) -> None:
-    """Replace `path` with `obj` as JSON through a temp file and
-    os.replace, so a reader or a crash sees the old or the new content,
-    never a truncated file."""
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    try:
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
 
 
 def _find_snapshot(md: dict, snapshot_id: int) -> dict:

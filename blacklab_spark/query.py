@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from . import B, K1
 from .codec import decode_ints, delta_decode, delta_decode_segmented
 from .oracle.engine import byte4_to_int
+from .storage import read_parquet
 from .tokenize import accent_fold_token, case_fold_token, fold_token
 
 HITS_SCHEMA = "doc_id long, start int, end int"
@@ -130,13 +131,14 @@ class Index:
                     f"{meta.get('format_version')} (< 12, untagged posting "
                     "blobs); rebuild or compact() the index with this version"
                 )
+            # schemas from the parquet footers: opening runs no Spark job
             self.segments.append(
                 Segment(
                     s,
                     meta,
-                    spark.read.parquet(f"{base}/postings"),
-                    spark.read.parquet(f"{base}/docs"),
-                    spark.read.parquet(f"{base}/terms"),
+                    read_parquet(spark, f"{base}/postings"),
+                    read_parquet(spark, f"{base}/docs"),
+                    read_parquet(spark, f"{base}/terms"),
                     base,
                 )
             )

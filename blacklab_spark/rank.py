@@ -9,17 +9,15 @@ ranking distributed:
 - rank_head:  orderBy().limit(first+n) plans as TakeOrderedAndProject
   (per-partition top-k + one merge of <= first+n rows); ranks assigned on the
   JVM over the small head (no Python stage, no extra exchange).
-- ranked_all: the assign_dense_ids pattern (build.py:145-186) generalized to
-  arbitrary multi-column sort keys — range repartition, per-partition sort,
-  one n_partitions-row count collect, offsets added map-side.
+- assign_dense_ids / ranked_all: dense ids over arbitrary multi-column sort
+  keys — range repartition, per-partition sort, one n_partitions-row count
+  collect, ids numbered on the JVM from monotonically_increasing_id.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 # keys spec: list of column name (ascending) or (name, ascending) tuples
 _KeySpec = "list[str | tuple[str, bool]]"
@@ -74,38 +72,48 @@ def _comparator(ks: list[tuple[str, bool]]) -> str:
     return f"CASE {' '.join(whens)} ELSE 0 END"
 
 
-def ranked_all(df: DataFrame, keys, rank_col: str = "rank") -> DataFrame:
-    """Global rank over ALL rows without a single-partition window: the
-    assign_dense_ids pattern (build.py:145-186) — range-repartition by the
-    sort keys, sort within partitions, collect the n_partitions-row count
-    table, add per-partition offsets in an Arrow kernel. Scales to any row
-    count (the only driver traffic is one count per partition)."""
+def assign_dense_ids(
+    df: DataFrame, keys, id_col: str, n_parts: int, base: int = 0
+) -> tuple[DataFrame, int, DataFrame]:
+    """Dense ids base, base+1, ... in the global order of `keys` (column
+    names or (name, ascending) pairs), without a single-partition window:
+    range-repartition, sort within partitions, one n_parts-row count
+    collect, and ids numbered on the JVM. Each row keeps its
+    monotonically_increasing_id (partition index << 33 plus its position in
+    the partition), so its id is that minus the partition's bits plus the
+    partition's offset, given as one literal map: no Python stage.
+
+    The frame is persisted before counting: the ids MUST come from the exact
+    partitions the count saw (repartitionByRange samples its boundaries from
+    upstream row order, which is not deterministic across recomputations
+    after a groupBy). Keys should be unique, or tied rows get ids in an
+    arbitrary (but persisted) order. Returns (df_with_ids, row count,
+    persisted frame); the caller unpersists the last once downstream
+    results are materialized."""
     ks = _norm_keys(keys)
     cols = [F.col(k).asc() if a else F.col(k).desc() for k, a in ks]
-    spark = df.sparkSession
-    n_parts = max(4, spark.sparkContext.defaultParallelism)
     d = (
         df.repartitionByRange(n_parts, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_mid", F.monotonically_increasing_id())
         .persist()
     )
-    counts = {r["_pid"]: r["n"] for r in d.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    boff = spark.sparkContext.broadcast(offsets)
-    schema = StructType(list(df.schema.fields) + [StructField(rank_col, LongType())])
+    counts = dict(d.groupBy("_pid").count().collect())
+    offsets, acc = [], base
+    for pid in range(n_parts):  # empty partitions get an (unused) offset too
+        offsets.append(f"{pid}, {acc}L")
+        acc += counts.get(pid, 0)
+    ids = d.withColumn(
+        id_col,
+        F.expr(f"_mid - shiftleft(CAST(_pid AS BIGINT), 33) + map({', '.join(offsets)})[_pid]"),
+    ).drop("_pid", "_mid")
+    return ids, acc - base, d
 
-    def add_rank(batches):
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = boff.value.get(int(pdf["_pid"].iloc[0]), 0)
-            ranks = np.arange(seen + 1, seen + 1 + len(pdf), dtype=np.int64) + base
-            seen += len(pdf)
-            yield pdf.drop(columns=["_pid"]).assign(**{rank_col: ranks})
 
-    return d.mapInPandas(add_rank, schema)
+def ranked_all(df: DataFrame, keys, rank_col: str = "rank") -> DataFrame:
+    """Global rank (1-based) over ALL rows without a single-partition
+    window: assign_dense_ids from 1. Scales to any row count (the only
+    driver traffic is one count per partition)."""
+    n_parts = max(4, df.sparkSession.sparkContext.defaultParallelism)
+    return assign_dense_ids(df, keys, rank_col, n_parts, base=1)[0]

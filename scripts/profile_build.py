@@ -1,12 +1,17 @@
 """Per-stage build profile at one parallelism level — where does the flat
-(non-scaling) time go? Prints the build meta's stage_s dict as one JSON line.
+(non-scaling) time go? Prints one JSON line: the best build's wall and
+stage_s, and the Spark jobs (one StatusTracker job group per operation) of
+that build, of one 12-page add_segment (n_shards=1, its own stage_s next to
+it), and of opening the index (Index(...)) and reloading it (reload()).
 
 usage: python scripts/profile_build.py <cpus> [n_docs] [n_shards]
-(corpus parquet is generated once under /dev/shm and reused)
+(corpus parquet is generated once under /dev/shm and reused;
+`python scripts/profile_build.py 4 400 2` is the benchmark's set-up build)
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -22,8 +27,25 @@ from blacklab_spark.session import get_spark  # noqa: E402
 CPUS = sys.argv[1] if len(sys.argv) > 1 else "32"
 N_DOCS = int(sys.argv[2]) if len(sys.argv) > 2 else 400_000
 N_SHARDS = int(sys.argv[3]) if len(sys.argv) > 3 else 128
+DELTA_DOCS = 12
 WORK = "/dev/shm/blacklab_profile"
 PAGES = f"{WORK}/pages_{N_DOCS}"
+
+_groups = itertools.count()
+
+
+def timed_jobs(spark, fn):
+    """(Spark jobs run by fn(), wall seconds, fn's result), counted by job group."""
+    sc = spark.sparkContext
+    gid = f"profile-{next(_groups)}"
+    sc.setJobGroup(gid, gid)
+    t0 = time.time()
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("profile-idle", "between profiled operations")
+    wall = round(time.time() - t0, 3)
+    return len(sc.statusTracker().getJobIdsForGroup(gid)), wall, out
 
 
 def main() -> None:
@@ -44,7 +66,11 @@ def main() -> None:
             "spark.driver.memory": "32g",
         },
     )
-    from blacklab_spark.build import build_index
+    import numpy as np
+
+    from blacklab_spark.build import add_segment, build_index
+    from blacklab_spark.fixtures import PAGES_SCHEMA, gen_pages_pdf
+    from blacklab_spark.query import Index
 
     pages = spark.read.parquet(PAGES)
     pages.limit(100).count()  # warm scheduler
@@ -52,12 +78,26 @@ def main() -> None:
     best = None
     for rep in range(int(os.environ.get("PROFILE_REPS", "2"))):
         shutil.rmtree(out, ignore_errors=True)
-        t0 = time.time()
-        meta = build_index(spark, pages, out, n_shards=N_SHARDS)
-        wall = time.time() - t0
+        jobs, wall, meta = timed_jobs(
+            spark, lambda: build_index(spark, pages, out, n_shards=N_SHARDS)
+        )
         if best is None or wall < best["wall_s"]:
-            best = {"wall_s": round(wall, 2), "stage_s": meta["stage_s"]}
-    print(json.dumps({"cpus": CPUS, "n_docs": N_DOCS, "n_shards": N_SHARDS, **best}))
+            best = {"wall_s": wall, "stage_s": meta["stage_s"], "jobs": jobs}
+    n_open, open_s, ix = timed_jobs(spark, lambda: Index(spark, out))
+    delta = spark.createDataFrame(
+        gen_pages_pdf(np.arange(N_DOCS, N_DOCS + DELTA_DOCS), "bench"), PAGES_SCHEMA
+    )
+    n_delta, delta_s, dmeta = timed_jobs(
+        spark, lambda: add_segment(spark, delta, out, "delta", n_shards=1)
+    )
+    n_reload, reload_s, _ = timed_jobs(spark, ix.reload)
+    print(json.dumps({
+        "cpus": CPUS, "n_docs": N_DOCS, "n_shards": N_SHARDS, **best,
+        "delta": {"docs": DELTA_DOCS, "jobs": n_delta, "wall_s": delta_s,
+                  "stage_s": dmeta["stage_s"]},
+        "open": {"jobs": n_open, "wall_s": open_s},
+        "reload": {"jobs": n_reload, "wall_s": reload_s, "segments": len(ix.segments)},
+    }))
     spark.stop()
 
 

@@ -1,7 +1,9 @@
-"""Fixed cost of a ranked query: Spark-job budgets counted with StatusTracker
-job groups, the driver-side terms-dict lookups (no Spark job, pyarrow over
-the segment's terms files) and the (annot, term_fold, term) row order of
-those files that keeps the lookups pruned at any dictionary size."""
+"""Fixed cost of a ranked query and of a segment: Spark-job budgets counted
+with StatusTracker job groups, the driver-side terms-dict lookups (no Spark
+job, pyarrow over the segment's terms files), the (annot, term_fold, term)
+row order of those files that keeps the lookups pruned at any dictionary
+size, footer schemas in place of schema inference, and dense ids numbered
+on the JVM."""
 
 import itertools
 import os
@@ -9,6 +11,8 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 _groups = itertools.count()
 
@@ -165,3 +169,144 @@ def test_reload_after_merge_never_opens_deleted_terms(spark, tmp_path, monkeypat
     assert ix.term_df("aap") == 2
     assert opened and all(os.path.exists(p) for p in opened)
     assert not any(p.startswith(o) for p in opened for o in old)
+
+
+def test_open_and_reload_run_no_spark_job(spark, tiny_index):
+    """Segment tables open with the schema their parquet footers hold."""
+    from blacklab_spark.query import Index
+
+    n_open, ix = jobs_of(spark, lambda: Index(spark, tiny_index.dir))
+    n_reload, _ = jobs_of(spark, ix.reload)
+    assert (n_open, n_reload) == (0, 0)
+    assert ix.segments[0].postings.columns == tiny_index.segments[0].postings.columns
+
+
+def assert_shard_counts(spark, seg_dir):
+    """meta.json's per-shard counts equal an aggregate over the written
+    postings and docs (what the dropped manifest table computed)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    with open(os.path.join(seg_dir, "meta.json")) as f:
+        meta = json.load(f)
+    posts = spark.read.parquet(f"{seg_dir}/postings").groupBy("shard").agg(
+        F.count("*").alias("n_blocks"),
+        F.sum("doc_count").alias("n_postings"),
+        F.countDistinct("term_id").alias("n_terms"),
+    )
+    docs = spark.read.parquet(f"{seg_dir}/docs").groupBy("shard").agg(F.count("*").alias("n_docs"))
+    want = [
+        {k: v or 0 for k, v in r.asDict().items()}
+        for r in docs.join(posts, "shard", "left").orderBy("shard").collect()
+    ]
+    assert meta["shards"] == want
+    assert not os.path.exists(os.path.join(seg_dir, "manifest"))
+
+
+def test_build_and_delta_job_budget(spark, tmp_path):
+    """A segment's fixed cost in Spark jobs: no schema inference, no count
+    job, no stats or manifest job."""
+    import numpy as np
+
+    from blacklab_spark.build import add_segment, build_index
+    from blacklab_spark.fixtures import PAGES_SCHEMA, gen_pages_pdf, pages_df
+    from blacklab_spark.query import Index
+
+    out = str(tmp_path / "ix_budget")
+    n_build, meta = jobs_of(
+        spark, lambda: build_index(spark, pages_df(spark, "tiny"), out, n_shards=2, block_size=4)
+    )
+    delta = spark.createDataFrame(gen_pages_pdf(np.arange(100, 112), "small"), PAGES_SCHEMA)
+    n_delta, dmeta = jobs_of(spark, lambda: add_segment(spark, delta, out, "seg1", n_shards=1))
+    assert n_build <= 22, f"build_index: {n_build} Spark jobs > budget 22"
+    assert n_delta <= 20, f"12-page add_segment: {n_delta} Spark jobs > budget 20"
+    assert (meta["n_docs"], dmeta["n_docs"], dmeta["base_doc_id"]) == (6, 12, 6)
+    for seg in ("seg0", "seg1"):
+        assert_shard_counts(spark, os.path.join(out, "segments", seg))
+    n_open, ix = jobs_of(spark, lambda: Index(spark, out))
+    assert n_open == 0 and len(ix.segments) == 2
+
+
+def _annotated_pages(spark):
+    rows = [
+        ("doc://0", ["The|DOH", "quick", "fox|animal"], ["de", "snelle", "vos"]),
+        ("doc://1", ["animal", "fox", ""], ["dier", "vos"]),
+        ("doc://2", [], ["leeg"]),
+    ]
+    from pyspark.sql import functions as F
+
+    return spark.createDataFrame(
+        rows, "url string, tokens array<string>, tokens_nl array<string>"
+    ).select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit("und").alias("lang"),
+        "tokens",
+        "tokens_nl",
+    )
+
+
+def test_footer_schema_equals_inference(spark, tmp_path, tiny_index):
+    """read_parquet's driver-side footer schema is the schema Spark's
+    inference job returns: for a plain segment, an annotated segment with
+    multi-value positions and a parallel field, a merged segment and a
+    terms file another writer produced."""
+    from blacklab_spark.build import add_segment, build_index, merge_segments
+    from blacklab_spark.storage import footer_schema
+
+    def check(seg_dir):
+        for t in ("docs", "terms", "postings"):
+            p = os.path.join(seg_dir, t)
+            assert footer_schema(p) == spark.read.parquet(p).schema, p
+
+    check(os.path.join(tiny_index.dir, "segments", "seg0"))
+    out = str(tmp_path / "ix_annot")
+    meta = build_index(spark, _annotated_pages(spark), out, n_shards=2, block_size=4)
+    assert meta["multi_value"] and meta["parallel_fields"] == ["nl"]
+    assert meta["sum_dl"] == 6
+    add_segment(spark, _annotated_pages(spark), out, "seg1", n_shards=1, block_size=4)
+    for seg in ("seg0", "seg1"):
+        check(os.path.join(out, "segments", seg))
+    merged = merge_segments(spark, out)
+    seg_dir = os.path.join(out, "segments", "merged")
+    check(seg_dir)
+    assert_shard_counts(spark, seg_dir)
+    assert merged["sum_dl"] == 12 and merged["multi_value"]
+
+    d = tmp_path / "foreign_terms"
+    d.mkdir()
+    src = os.path.join(tiny_index.dir, "segments", "seg0", "terms")
+    t = pa.concat_tables([pq.read_table(f) for f in _terms_files(os.path.dirname(src))])
+    pq.write_table(t.replace_schema_metadata(None), str(d / "part-old.parquet"))
+    assert footer_schema(str(d)) == spark.read.parquet(str(d)).schema
+
+
+@settings(max_examples=15, deadline=None, derandomize=True)
+@given(
+    st.lists(st.one_of(st.none(), st.integers(-3, 3)), max_size=30),
+    st.booleans(),
+    st.booleans(),
+    st.integers(1, 40),
+    st.integers(0, 10**12),
+)
+def test_assign_dense_ids_is_a_dense_rank(spark, a_vals, a_asc, s_asc, n_parts, base):
+    """Ids are base + the row's rank under the sort keys, numbered on the
+    JVM (no Python stage), with n_parts up to above the row count (empty
+    partitions) and any base."""
+    from blacklab_spark.rank import assign_dense_ids
+
+    rows = [(a, f"s{i:03d}") for i, a in enumerate(a_vals)]
+    df = spark.createDataFrame(rows, "a int, s string")
+    ids, n, cached = assign_dense_ids(df, [("a", a_asc), ("s", s_asc)], "id", n_parts, base=base)
+    got = sorted((r["id"], r["a"], r["s"]) for r in ids.collect())
+    plan = ids._jdf.queryExecution().executedPlan().toString()
+    cached.unpersist()
+    # Spark's order: ascending puts nulls first, descending puts them last
+    want = sorted(rows, key=lambda r: r[1], reverse=not s_asc)
+    want = sorted(want, key=lambda r: (r[0] is not None, r[0] or 0), reverse=not a_asc)
+    assert n == len(rows)
+    assert got == [(base + i, a, s) for i, (a, s) in enumerate(want)]
+    assert "Python" not in plan and "Pandas" not in plan

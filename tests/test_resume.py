@@ -5,6 +5,8 @@ import json
 import shutil
 from pathlib import Path
 
+import pytest
+
 from blacklab_spark.build import build_index
 from blacklab_spark.fixtures import pages_df
 from blacklab_spark.query import Index
@@ -60,3 +62,29 @@ def test_resume_param_change_forces_rebuild(spark, tmp_path):
     with open(seg / "build_params.json") as f:
         assert json.load(f)["block_size"] == 8
     assert len(_hits(Index(spark, out))) == 3
+
+
+def test_registry_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A crash while the segment registry is rewritten leaves the previous
+    registry readable and complete (temp file + os.replace), not a
+    truncated file that every later open or add_segment fails to parse."""
+    from blacklab_spark.build import _register_segment
+
+    out = str(tmp_path)
+    _register_segment(out, "seg0")
+    _register_segment(out, "seg1")
+
+    def partial_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:7])
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", partial_dump)
+    with pytest.raises(OSError):
+        _register_segment(out, "seg2")
+    monkeypatch.undo()
+    with open(Path(out) / "segments.json") as f:
+        assert json.load(f) == {"segments": ["seg0", "seg1"]}
+    assert sorted(p.name for p in Path(out).iterdir()) == ["segments.json"]
+    _register_segment(out, "seg2")
+    with open(Path(out) / "segments.json") as f:
+        assert json.load(f)["segments"] == ["seg0", "seg1", "seg2"]
