@@ -5,10 +5,11 @@ IndexerImpl -> BlackLab40PostingsWriter, see SURVEY.md §3.3): where the
 reference inverts term vectors through a two-pass temp file per Lucene segment
 (engine/.../codec/BlackLab40PostingsWriter.java:246-330), we do ONE declarative
 shuffle — docs repartitionByRange(shard) — and a whole-shard Arrow kernel
-(_encode_shard_kernel) that explodes, sorts and bulk-varint-encodes the
-posting blocks C-side. The JVM never materializes the token stream: shipping
-compact doc rows (token arrays as Arrow lists) measured ~3x faster end-to-end
-than posexplode + JVM sort + per-token Arrow transfer.
+(_encode_shard_kernel) that explodes, sorts and bulk-encodes the posting
+blocks in numpy (codec.encode_blocks: every block of a column per pass). The
+JVM never materializes the token stream: shipping compact doc rows (token
+arrays as Arrow lists) measured ~3x faster end-to-end than posexplode + JVM
+sort + per-token Arrow transfer.
 
 The terms dictionary DERIVES from the blocks table (df = sum(doc_count),
 cf = sum(tf_sum) — exact: a doc hits exactly one block per (shard, term) and
@@ -44,14 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import B, K1
-from .codec import (
-    BLOB_VARINT,
-    delta_encode,
-    delta_encode_segmented,
-    encode_ints,
-    varint_encode,
-    varint_lengths,
-)
+from .codec import delta_encode_segmented, encode_blocks
 from .rank import assign_dense_ids
 from .storage import parquet_rows, read_parquet, write_json
 from .tokenize import (
@@ -63,6 +57,11 @@ from .tokenize import (
 )
 
 DEFAULT_BLOCK = 128
+# posting-block rows per encode-kernel output batch, and the most position
+# values one batch encodes (a lone larger block still makes its own batch):
+# bounds the bulk encoder's per-block and per-value temporaries
+EMIT_BLOCKS = 16384
+EMIT_VALUES = 1 << 21
 # bumped on any docs/terms/postings/meta schema change; 11 = `multi_value`
 # meta key REQUIRED (a pre-flag v10 mv index would silently skip the span
 # dedupe — ADVICE r4). 12 = every posting blob leads with a codec tag byte
@@ -438,10 +437,21 @@ def _encode_shard_kernel(
     is — docs and positions are fully sorted before encoding. Every consumer
     keys by (annot, term), never by row order.
 
+    Encoding: per output batch of at most EMIT_BLOCKS blocks, each blob
+    column (doc-id deltas, tfs, dls, position deltas) is encoded by ONE
+    codec.encode_blocks call — a fixed number of numpy passes whatever the
+    block count — and becomes a BinaryArray over its (offsets, bytes); no
+    per-block Python runs on either codec.
+
     Memory contract: one task holds one shard's exploded token codes +
-    positions (~40 B/token/layer-in-flight). n_shards is sized so a shard's
-    token stream fits an executor comfortably (module docstring); the
-    reference's segment writer holds comparable per-segment state when
+    positions (~40 B/token/layer-in-flight). On top of that, encoding one
+    batch holds the encoder's temporaries: 55 x 8 B per block (the
+    bit-width histogram) and ~115 B per value of one column (tracemalloc
+    peak), for at most EMIT_BLOCKS blocks and EMIT_VALUES positions (or
+    block_size x EMIT_BLOCKS doc-level values) — about 250 MB at the
+    default block size, whatever the shard size. n_shards is sized so a
+    shard's token stream fits an executor comfortably (module docstring);
+    the reference's segment writer holds comparable per-segment state when
     inverting term vectors (BlackLab40PostingsWriter.java:246-330).
     """
     import pyarrow as pa
@@ -473,6 +483,16 @@ def _encode_shard_kernel(
         return pa.RecordBatch.from_arrays(
             [pa.array(c, type=f.type) for c, f in zip(cols, out_pa_schema)],
             schema=out_pa_schema,
+        )
+
+    def blobs(values, lens):
+        # one tagged blob per block, all encoded in one numpy pass
+        buf, off = encode_blocks(values, lens, codec)
+        if off[-1] >= 1 << 31:
+            raise ValueError("posting blobs of one batch exceed 2 GiB")
+        return pa.BinaryArray.from_buffers(
+            pa.binary(), len(lens),
+            [None, pa.py_buffer(off.astype(np.int32)), pa.py_buffer(buf)],
         )
 
     def kernel(batches):
@@ -702,7 +722,6 @@ def _encode_shard_kernel(
             g_rank = rank_s[starts]
             g_doc = doc_sorted[g_rank]
             g_dl = dl_sorted[g_rank]
-            pos_ends = np.cumsum(tfs)
             # (shard, term) group boundaries over doc-level runs
             m = len(starts)
             gchange = np.empty(m, dtype=bool)
@@ -710,16 +729,6 @@ def _encode_shard_kernel(
             np.not_equal(g_grp[1:], g_grp[:-1], out=gchange[1:])
             gstarts = np.flatnonzero(gchange)
             gends = np.append(gstarts[1:], m)
-            # ---- vectorized bulk encode: one varint pass per column for the
-            # WHOLE shard, then per-block byte-range slicing. Per-block
-            # varint_encode calls would be ~15 tiny numpy ops x n_blocks x 4
-            # columns — overhead-dominated (measured 70% of kernel time).
-            # codec="pfor" takes the per-block path instead: PForDelta needs
-            # a per-block bit width, so its packing cannot bulk-slice. The
-            # blobs self-describe via the tag byte (codec.py), so readers
-            # and merges never consult this choice.
-            # block boundaries (doc-run level): every gstart + every
-            # block_size docs within a group
             # fold-df correction markers (word layer): a doc holding >1
             # surface variant of a fold (Café/café) is overcounted when
             # variant dfs are summed; emit the exact per-(shard, fold)
@@ -753,6 +762,8 @@ def _encode_shard_kernel(
                                 )
                 if markers:
                     yield emit(markers)
+            # block boundaries (doc-run level): every gstart + every
+            # block_size docs within a group
             gstart_rep = np.repeat(gstarts, gends - gstarts)
             rel = np.arange(m, dtype=np.int64) - gstart_rep
             bstart_mask = (rel % block_size) == 0
@@ -761,24 +772,10 @@ def _encode_shard_kernel(
             # doc ids: delta within block (absolute at block start)
             d_delta = delta_encode_segmented(g_doc, None, seg_starts=bstarts)
             # positions: delta restarts at each doc; blocks align with doc
-            # boundaries so slicing at doc boundaries is safe
+            # boundaries, so block i's positions are one token range
             p_delta = delta_encode_segmented(pos_s, tfs)
-            pos_starts_tok = pos_ends - tfs  # token index of each doc-run start
-            if codec == "varint":
-                d_bytes = varint_encode(d_delta)
-                d_lens = varint_lengths(d_delta)
-                d_off = np.concatenate(([0], np.cumsum(d_lens)))
-                t_bytes = varint_encode(tfs)
-                t_lens = varint_lengths(tfs)
-                t_off = np.concatenate(([0], np.cumsum(t_lens)))
-                l_bytes = varint_encode(g_dl)
-                l_lens = varint_lengths(g_dl)
-                l_off = np.concatenate(([0], np.cumsum(l_lens)))
-                p_bytes = varint_encode(p_delta)
-                p_lens = varint_lengths(p_delta)
-                p_voff = np.concatenate(([0], np.cumsum(p_lens)))  # per token value
             # per-block stats (reduceat over doc-run arrays)
-            doc_count = (bends - bstarts).astype(np.int64)
+            doc_count = bends - bstarts
             first_doc = g_doc[bstarts]
             last_doc = g_doc[bends - 1]
             max_tf = np.maximum.reduceat(tfs, bstarts)
@@ -787,56 +784,46 @@ def _encode_shard_kernel(
             blk_grp = g_grp[bstarts]
             blk_shard = sh_small[blk_grp // n_codes]
             blk_code = blk_grp % n_codes
-            block_id = (rel[bstarts] // block_size).astype(np.int64)
+            block_id = rel[bstarts] // block_size
             blk_at = np.searchsorted(summ_sh, blk_shard)
             np.add.at(tally["n_blocks"], blk_at, 1)
             np.add.at(tally["n_postings"], blk_at, doc_count)
             np.add.at(
                 tally["n_terms"], np.searchsorted(summ_sh, sh_small[g_grp[gstarts] // n_codes]), 1
             )
-            terms_py = vocab.tolist()
+            terms = pa.array(vocab, type=pa.string())
+            annot_s = pa.scalar(annot, pa.string())
+            btok = np.concatenate(([0], np.cumsum(tf_sum)))  # block token starts
+            bstarts_m = np.append(bstarts, m)
             nb = len(bstarts)
-            out: list[tuple] = []
-            tag_v = bytes([BLOB_VARINT])
-            for i in range(nb):
-                a, b_ = int(bstarts[i]), int(bends[i])
-                if codec == "varint":
-                    pb0 = int(p_voff[pos_starts_tok[a]])
-                    pb1 = int(p_voff[pos_ends[b_ - 1]])
-                    d_blob = tag_v + d_bytes[int(d_off[a]) : int(d_off[b_])]
-                    t_blob = tag_v + t_bytes[int(t_off[a]) : int(t_off[b_])]
-                    l_blob = tag_v + l_bytes[int(l_off[a]) : int(l_off[b_])]
-                    p_blob = tag_v + p_bytes[pb0:pb1]
-                else:  # pfor: per-block bit width, packed low bits + patches
-                    tok0 = int(pos_starts_tok[a])
-                    tok1 = int(pos_ends[b_ - 1])
-                    d_blob = encode_ints(d_delta[a:b_], codec)
-                    t_blob = encode_ints(tfs[a:b_], codec)
-                    l_blob = encode_ints(g_dl[a:b_], codec)
-                    p_blob = encode_ints(p_delta[tok0:tok1], codec)
-                out.append(
-                    (
-                        int(blk_shard[i]),
-                        annot,
-                        terms_py[int(blk_code[i])],
-                        int(block_id[i]),
-                        int(doc_count[i]),
-                        int(first_doc[i]),
-                        int(last_doc[i]),
-                        int(max_tf[i]),
-                        int(min_dl[i]),
-                        int(tf_sum[i]),
-                        d_blob,
-                        t_blob,
-                        l_blob,
-                        p_blob,
-                    )
+            c0 = 0
+            while c0 < nb:
+                # at most EMIT_BLOCKS blocks and (unless one block alone is
+                # larger) EMIT_VALUES positions per batch
+                c1 = int(np.searchsorted(btok, btok[c0] + EMIT_VALUES, "right")) - 1
+                c1 = min(max(c1, c0 + 1), c0 + EMIT_BLOCKS, nb)
+                a, z = int(bstarts_m[c0]), int(bstarts_m[c1])
+                lens = doc_count[c0:c1]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(blk_shard[c0:c1].astype(np.int32)),
+                        pa.repeat(annot_s, c1 - c0),
+                        terms.take(pa.array(blk_code[c0:c1])),
+                        pa.array(block_id[c0:c1].astype(np.int32)),
+                        pa.array(lens.astype(np.int32)),
+                        pa.array(first_doc[c0:c1]),
+                        pa.array(last_doc[c0:c1]),
+                        pa.array(max_tf[c0:c1].astype(np.int32)),
+                        pa.array(min_dl[c0:c1].astype(np.int32)),
+                        pa.array(tf_sum[c0:c1]),
+                        blobs(d_delta[a:z], lens),
+                        blobs(tfs[a:z], lens),
+                        blobs(g_dl[a:z], lens),
+                        blobs(p_delta[btok[c0] : btok[c1]], tf_sum[c0:c1]),
+                    ],
+                    schema=out_pa_schema,
                 )
-                if len(out) >= 16384:
-                    yield emit(out)
-                    out = []
-            if out:
-                yield emit(out)
+                c0 = c1
 
         for annot in annotations:
             codes, vocab = layer_codes(annot)
@@ -952,9 +939,13 @@ def build_index(
 
     codec: posting-blob codec — "pfor" (default; PForDelta: per-block
     bit-packed low bits + varint exception patches — 0.66x the posting
-    bytes of varint at sf0.1 with equal build/query walls) or "varint"
-    (delta+LEB128, bulk-encoded per shard). Blobs self-describe via a tag
-    byte, so mixed-codec segments merge and query without configuration.
+    bytes of varint at sf0.1) or "varint" (delta+LEB128). Both encode
+    every block of a column in one numpy pass (codec.encode_blocks):
+    `scripts/profile_build.py 4 400 2` (4-CPU host) measured the `blocks`
+    stage of the 400-page pfor build at 0.30 s and of a 12-page delta at
+    0.19 s, and the encode kernel alone, per 200-doc shard, at 15 ms with
+    pfor and 18 ms with varint. Blobs self-describe via a tag byte, so
+    mixed-codec segments merge and query without configuration.
 
     dict_threshold: docs above which the dictionary is built via the
     distributed two-rank flow instead of the one-task kernel (the path a

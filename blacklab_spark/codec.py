@@ -164,7 +164,8 @@ def _pfor_lanes(b: int) -> int:
 
 
 def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Bit length per value (0 -> 0). float log2 is exact below 2**53; the
+    """Bit length per value (0 -> 0) via float log2, which may round up to
+    54 just below 2**53 — harmless, pfor only compares it with b <= 32. The
     pfor entry points reject wider values (callers fall back to varint)."""
     out = np.zeros(v.shape, dtype=np.int64)
     nz = v > 0
@@ -172,54 +173,150 @@ def _bit_lengths(v: np.ndarray) -> np.ndarray:
     return out
 
 
-def pfor_encode(values: np.ndarray) -> bytes:
-    """Encode a non-negative int64 array as a tagged PForDelta blob:
+def _block_sums(per_value: np.ndarray, blk: np.ndarray, nb: int) -> np.ndarray:
+    """Per-block sums of a small non-negative int array (exact in float64)."""
+    return np.bincount(blk, weights=per_value, minlength=nb).astype(np.int64)
+
+
+def _scatter(parts: list[tuple[np.ndarray, np.ndarray]], nb: int):
+    """Lay out per-block parts block after block: parts[k] = (bytes of part k
+    for every block, concatenated; its per-block byte counts). Block i's
+    output is part 0 of block i, then part 1, ... Returns (bytes, offsets)."""
+    sizes = np.zeros(nb, dtype=np.int64)
+    for _, lens in parts:
+        sizes += lens
+    offsets = np.zeros(nb + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1].copy()  # where each block's next part goes
+    for buf, lens in parts:
+        if buf.size:
+            src = np.zeros(nb, dtype=np.int64)
+            np.cumsum(lens[:-1], out=src[1:])
+            out[np.arange(buf.size) + np.repeat(at - src, lens)] = buf
+        at += lens
+    return out.tobytes(), offsets
+
+
+def encode_blocks(values: np.ndarray, lens: np.ndarray, codec: str = "pfor"):
+    """Encode consecutive blocks of one array, each as its own TAGGED blob,
+    in a fixed number of numpy passes over the whole array. Block i holds
+    values[sum(lens[:i]) : sum(lens[:i+1])]. Returns (bytes, offsets): block
+    i's blob is bytes[offsets[i]:offsets[i+1]], byte for byte what
+    encode_ints(block i, codec) returns.
+
+    pfor blob layout (tag 0x02):
 
         [0x02][b:1][varint n][varint n_exc]
         [packed: ceil(n*b/8) bytes][exc idx deltas varint][exc highs varint]
 
-    b is chosen to minimize total bytes (exact packed cost + ~3 bytes per
-    exception estimate). Values >= 2**53 make float bit-length inexact —
-    callers should use the varint blob for those (encode_ints does)."""
+    Per block, b minimizes total bytes (exact packed cost + ~3 bytes per
+    exception estimate; the smallest b wins a tie). Values >= 2**53 make the
+    float bit length inexact, so a block holding one (or a negative value)
+    is written as the varint blob (tag 0x01) instead, as is every block
+    under codec="varint"."""
+    if codec not in ("varint", "pfor"):
+        raise ValueError(f"unknown codec {codec!r}")
+    v = np.asarray(values, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    nb = lens.size
+    if int(lens.sum()) != v.size:
+        raise ValueError("encode_blocks: lens must sum to len(values)")
+    blk = np.repeat(np.arange(nb, dtype=np.int64), lens)
+    if codec == "varint":
+        fallback = np.ones(nb, dtype=bool)
+    else:
+        fallback = np.zeros(nb, dtype=bool)
+        fallback[blk[(v < 0) | (v >= (1 << 53))]] = True
+    # varint blobs: [0x01][varint stream]
+    vb = fallback[blk]
+    fv = v[vb]
+    parts = [
+        (np.full(int(fallback.sum()), BLOB_VARINT, dtype=np.uint8),
+         fallback.astype(np.int64)),
+        (np.frombuffer(varint_encode(fv), dtype=np.uint8),
+         _block_sums(varint_lengths(fv), blk[vb], nb)),
+    ]
+    if fallback.all():
+        return _scatter(parts, nb)
+    # pfor blobs over the other blocks, renumbered 0..np_-1
+    keep = np.flatnonzero(~fallback)
+    np_ = keep.size
+    u = v[~vb].astype(np.uint64)
+    n = lens[keep]
+    pblk = np.repeat(np.arange(np_, dtype=np.int64), n)
+    starts = np.zeros(np_, dtype=np.int64)
+    np.cumsum(n[:-1], out=starts[1:])
+    within = np.arange(u.size, dtype=np.int64) - starts[pblk]
+    bits = _bit_lengths(u)
+    # cost(b) = n*b/8 packed + ~3 bytes per exception, for every b in 0..32
+    # of every block at once: exceptions per b from a per-block bit-length
+    # histogram. A b above the block's widest value never costs less than
+    # that width, so argmin's first minimum is pfor's choice. (Bit lengths
+    # reach 54: log2 rounds up to 53.0 just below 2**53.)
+    hist = np.bincount(pblk * 55 + bits, minlength=np_ * 55).reshape(np_, 55)
+    exc_at = n[:, None] - np.cumsum(hist[:, : _PFOR_MAX_BITS + 1], axis=1)
+    cand = np.arange(_PFOR_MAX_BITS + 1, dtype=np.int64)
+    cost = (n[:, None] * cand + 7) // 8 + 3 * exc_at
+    b = np.argmin(cost, axis=1).astype(np.int64)
+    packed_len = (n * b + 7) // 8
+    # bit-pack every value's low b bits at its block's packed region; the
+    # bits of different values never overlap, so a byte is the SUM of its
+    # lane contributions (one float64 bincount per lane, exact: <= 255)
+    vbits = b[pblk]
+    pk_start = np.zeros(np_, dtype=np.int64)
+    np.cumsum(packed_len[:-1], out=pk_start[1:])
+    bitpos = within * vbits
+    byte0 = pk_start[pblk] + (bitpos >> 3)
+    low = (u & ((np.uint64(1) << vbits.astype(np.uint64)) - np.uint64(1))) << (
+        (bitpos & 7).astype(np.uint64)
+    )
+    total_packed = int(packed_len.sum())
+    acc = np.zeros(total_packed + 8, dtype=np.float64)
+    for k in range(_pfor_lanes(int(b.max()))):
+        lane = ((low >> np.uint64(8 * k)) & np.uint64(0xFF)).astype(np.float64)
+        acc += np.bincount(byte0 + k, weights=lane, minlength=acc.size)
+    packed = acc[:total_packed].astype(np.uint8)
+    # exceptions: index deltas restart at each block, highs = value >> b
+    exc = np.flatnonzero(bits > vbits)
+    eblk = pblk[exc]
+    ew = within[exc]
+    edelta = ew.copy()
+    same = eblk[1:] == eblk[:-1]
+    edelta[1:][same] -= ew[:-1][same]
+    highs = (u[exc] >> vbits[exc].astype(np.uint64)).astype(np.int64)
+    n_exc = np.bincount(eblk, minlength=np_)
+    head = np.column_stack([n, n_exc]).ravel()
+
+    def spread(x):  # per pfor block -> per block (0 for varint blocks)
+        out = np.zeros(nb, dtype=np.int64)
+        out[keep] = x
+        return out
+
+    # a block's parts are either the two varint ones or these five, so
+    # their order in the list only matters within each family
+    tag = np.column_stack([np.full(np_, BLOB_PFOR), b]).ravel().astype(np.uint8)
+    parts += [
+        (tag, spread(2)),
+        (np.frombuffer(varint_encode(head), dtype=np.uint8),
+         spread(varint_lengths(head).reshape(np_, 2).sum(axis=1))),
+        (packed, spread(packed_len)),
+        (np.frombuffer(varint_encode(edelta), dtype=np.uint8),
+         spread(_block_sums(varint_lengths(edelta), eblk, np_))),
+        (np.frombuffer(varint_encode(highs), dtype=np.uint8),
+         spread(_block_sums(varint_lengths(highs), eblk, np_))),
+    ]
+    return _scatter(parts, nb)
+
+
+def pfor_encode(values: np.ndarray) -> bytes:
+    """Encode a non-negative int64 array as ONE tagged PForDelta blob (the
+    one-block case of encode_blocks, which documents the layout). Values
+    outside [0, 2**53) raise — encode_ints falls back to varint instead."""
     v = np.asarray(values, dtype=np.int64)
     if v.size and (v.min() < 0 or v.max() >= (1 << 53)):
         raise ValueError("pfor_encode: values must be in [0, 2**53)")
-    n = v.size
-    if n == 0:
-        return bytes([BLOB_PFOR, 0]) + varint_encode(np.array([0, 0]))
-    bits = _bit_lengths(v.astype(np.uint64))
-    # cost(b) = n*b/8 packed + ~3 bytes per exception; exceptions per b via
-    # a bit-length histogram suffix sum
-    hist = np.bincount(bits, minlength=54)
-    exc_at = n - np.cumsum(hist)  # exc_at[b] = #values with bits > b
-    cand = np.arange(0, min(int(bits.max()), _PFOR_MAX_BITS) + 1)
-    cost = (n * cand + 7) // 8 + 3 * exc_at[cand]
-    b = int(cand[np.argmin(cost)])
-    mask = np.uint64((1 << b) - 1)
-    u = v.astype(np.uint64)
-    packed_len = (n * b + 7) // 8
-    if b:
-        bitpos = np.arange(n, dtype=np.int64) * b
-        byte0 = bitpos >> 3
-        shift = (bitpos & 7).astype(np.uint64)
-        low = (u & mask) << shift
-        buf = np.zeros(packed_len + 8, dtype=np.uint8)
-        for k in range(_pfor_lanes(b)):
-            np.bitwise_or.at(
-                buf, byte0 + k,
-                ((low >> np.uint64(8 * k)) & np.uint64(0xFF)).astype(np.uint8),
-            )
-        packed = buf[:packed_len].tobytes()
-    else:
-        packed = b""
-    exc_idx = np.flatnonzero(bits > b)
-    highs = u[exc_idx] >> np.uint64(b)
-    head = varint_encode(np.array([n, exc_idx.size], dtype=np.int64))
-    return (
-        bytes([BLOB_PFOR, b]) + head + packed
-        + varint_encode(delta_encode(exc_idx))
-        + varint_encode(highs.astype(np.int64))
-    )
+    return encode_blocks(v, np.array([v.size]), "pfor")[0]
 
 
 def _pfor_decode(mv: memoryview) -> np.ndarray:
@@ -267,11 +364,7 @@ def encode_ints(values: np.ndarray, codec: str = "varint") -> bytes:
     """Encode one array as a TAGGED blob (format_version >= 12). pfor falls
     back to varint for values the packed path can't represent exactly."""
     v = np.asarray(values, dtype=np.int64)
-    if codec == "pfor" and (v.size == 0 or (v.min() >= 0 and v.max() < (1 << 53))):
-        return pfor_encode(v)
-    if codec not in ("varint", "pfor"):
-        raise ValueError(f"unknown codec {codec!r}")
-    return bytes([BLOB_VARINT]) + varint_encode(v)
+    return encode_blocks(v, np.array([v.size]), codec)[0]
 
 
 def decode_ints(blob: bytes) -> np.ndarray:

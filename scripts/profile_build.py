@@ -3,6 +3,10 @@
 stage_s, and the Spark jobs (one StatusTracker job group per operation) of
 that build, of one 12-page add_segment (n_shards=1, its own stage_s next to
 it), and of opening the index (Index(...)) and reloading it (reload()).
+Next to those stage walls it prints the in-process wall of the blocks
+stage's encode kernel (_encode_shard_kernel, no Spark; best of 3) on the
+delta's doc rows and on base shard 0's, for both codecs — the kernel's
+share of the `blocks` stage, apart from Spark's per-stage floor.
 
 usage: python scripts/profile_build.py <cpus> [n_docs] [n_shards]
 (corpus parquet is generated once under /dev/shm and reused;
@@ -48,12 +52,36 @@ def timed_jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(gid)), wall, out
 
 
+def kernel_walls(docs_dir: str, shard: int | None = None) -> dict:
+    """In-process walls of the encode kernel over one segment's doc rows
+    (or one shard's), per codec: best of 3, seconds."""
+    import pyarrow.dataset as pads
+
+    from blacklab_spark.build import DEFAULT_BLOCK, _encode_shard_kernel
+
+    table = pads.dataset(docs_dir, format="parquet").to_table(
+        columns=["shard", "doc_id", "doc_len", "tokens"],
+        filter=None if shard is None else pads.field("shard") == shard,
+    )
+    batches = table.to_batches()
+    out = {"docs": table.num_rows}
+    for codec in ("pfor", "varint"):
+        kernel = _encode_shard_kernel(DEFAULT_BLOCK, codec=codec)
+        walls = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            out["rows"] = sum(b.num_rows for b in kernel(iter(batches)))
+            walls.append(time.perf_counter() - t0)
+        out[f"{codec}_s"] = round(min(walls), 4)
+    return out
+
+
 def main() -> None:
     os.makedirs(WORK, exist_ok=True)
     if not os.path.exists(f"{PAGES}/_SUCCESS"):
         from blacklab_spark.fixtures import pages_df
 
-        spark = get_spark("local[32]", app_name="gen_profile_pages")
+        spark = get_spark(f"local[{CPUS}]", app_name="gen_profile_pages")
         pages_df(spark, "bench", N_DOCS).write.mode("overwrite").parquet(PAGES)
         spark.stop()
 
@@ -91,12 +119,17 @@ def main() -> None:
         spark, lambda: add_segment(spark, delta, out, "delta", n_shards=1)
     )
     n_reload, reload_s, _ = timed_jobs(spark, ix.reload)
+    kernel = {
+        "delta": kernel_walls(f"{out}/segments/delta/docs"),
+        "shard0": kernel_walls(f"{out}/segments/seg0/docs", shard=0),
+    }
     print(json.dumps({
         "cpus": CPUS, "n_docs": N_DOCS, "n_shards": N_SHARDS, **best,
         "delta": {"docs": DELTA_DOCS, "jobs": n_delta, "wall_s": delta_s,
                   "stage_s": dmeta["stage_s"]},
         "open": {"jobs": n_open, "wall_s": open_s},
         "reload": {"jobs": n_reload, "wall_s": reload_s, "segments": len(ix.segments)},
+        "kernel": kernel,
     }))
     spark.stop()
 

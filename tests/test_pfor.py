@@ -108,3 +108,90 @@ def test_mixed_codec_merge(spark, tmp_path_factory):
         lambda ix: ix.phrase_hits(["of", "the"]),
     ):
         assert hs(q(ix_m)) == hs(q(ix_r))
+
+
+@pytest.fixture(scope="module")
+def annotated_pfor_index(spark, tmp_path_factory):
+    """Annotated input with every stream the encode kernel handles: word,
+    input lemma and pos layers, multi-value tokens ("a|b"), a position gap
+    ("") and a parallel field (tokens_nl)."""
+    from blacklab_spark.build import build_index
+
+    words = ["the", "fox", "dog", "runs", "Fox", "a", "cat", "sleeps"]
+    rows = []
+    for d in range(40):
+        n = 3 + (d * 7) % 11
+        toks = [words[(d + 3 * i + i * i) % len(words)] for i in range(n)]
+        if d % 5 == 0:
+            toks[1] = toks[1] + "|animal"
+        if d % 9 == 4:
+            toks[-1] = ""
+        rows.append((
+            f"doc://{d:03d}", toks,
+            [t.split("|")[0].lower() + "_l" if t else "" for t in toks],
+            ["N" if t.startswith(("f", "d", "c")) else "X" for t in toks],
+            [w.upper() for w in toks[: n - d % 3]],
+        ))
+    pages = spark.createDataFrame(
+        rows,
+        "url string, tokens array<string>, tokens_lemma array<string>, "
+        "tokens_pos array<string>, tokens_nl array<string>",
+    )
+    from pyspark.sql import functions as F
+
+    pages = pages.select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit("und").alias("lang"),
+        "tokens", "tokens_lemma", "tokens_pos", "tokens_nl",
+    )
+    out = str(tmp_path_factory.mktemp("ix_pfor_annot"))
+    build_index(
+        spark, pages, out, n_shards=2, block_size=4,
+        annotations=("word", "lemma", "pos"), codec="pfor",
+    )
+    return out
+
+
+def test_pfor_kernel_blocks_consistent(annotated_pfor_index):
+    """Every postings blob of a pfor build re-encodes to itself, and the
+    block's stored stats agree with its decoded arrays: a block sliced at
+    the wrong doc or token range shows up here, where codec-level tests
+    cannot see it."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from blacklab_spark.codec import (
+        decode_ints,
+        delta_decode,
+        delta_decode_segmented,
+        encode_ints,
+    )
+
+    seg = f"{annotated_pfor_index}/segments/seg0"
+    post = pq.read_table(f"{seg}/postings").to_pylist()
+    docs = pq.read_table(f"{seg}/docs", columns=["doc_id", "doc_len"]).to_pydict()
+    doc_len = dict(zip(docs["doc_id"], docs["doc_len"]))
+    assert {r["annot"] for r in post} == {"word", "lemma", "pos", "f_nl"}
+    assert max(r["doc_count"] for r in post) == 4  # terms span several blocks
+    for r in post:
+        dec = {}
+        for col in ("doc_ids", "tfs", "dls", "positions"):
+            blob = r[col]
+            assert blob[0] == 0x02, (col, r["annot"], r["term_id"])
+            dec[col] = decode_ints(blob)
+            assert encode_ints(dec[col], "pfor") == blob, (col, r["annot"], r["term_id"])
+        doc_ids = delta_decode(dec["doc_ids"])
+        tfs, dls = dec["tfs"], dec["dls"]
+        assert r["doc_count"] == len(doc_ids) == len(tfs) == len(dls)
+        assert np.all(np.diff(doc_ids) > 0)
+        assert (r["first_doc"], r["last_doc"]) == (doc_ids[0], doc_ids[-1])
+        assert r["tf_sum"] == tfs.sum() == len(dec["positions"])
+        assert (r["max_tf"], r["min_dl"]) == (tfs.max(), dls.min())
+        positions = delta_decode_segmented(dec["positions"], tfs)
+        assert np.all(positions >= 0)
+        if r["annot"] != "f_nl":  # a parallel field counts its own stream
+            assert list(dls) == [doc_len[d] for d in doc_ids]
+            assert np.all(positions < np.repeat(dls, tfs))
