@@ -419,7 +419,8 @@ def _encode_shard_kernel(
     block_size: int,
     annotations: tuple[str, ...] = DEFAULT_ANNOTATIONS,
     input_layers: frozenset[str] = frozenset(),
-    codec: str = "varint",
+    *,
+    codec: str,
 ):
     """Whole-shard Arrow kernel: doc rows (shard, doc_id, doc_len, tokens) ->
     posting block rows keyed by (annot, term string). Explode, term grouping
@@ -1108,7 +1109,7 @@ def build_index(
             row_cols.append(F.col("mv"))
         rows = docs.select(*row_cols).repartitionByRange(n_shards, "shard")
         blocks = rows.mapInArrow(
-            _encode_shard_kernel(block_size, annotations, input_layers, codec),
+            _encode_shard_kernel(block_size, annotations, input_layers, codec=codec),
             schema=BLOCKS_SCHEMA,
         )
         # parallel-field postings (reference: each parallel version is a
@@ -1127,7 +1128,7 @@ def build_index(
                 ).alias("tokens"),
             ).withColumn("doc_len", F.size("tokens"))
             pblocks = prows.repartitionByRange(n_shards, "shard").mapInArrow(
-                _encode_shard_kernel(block_size, ("word",), frozenset(), codec),
+                _encode_shard_kernel(block_size, ("word",), frozenset(), codec=codec),
                 schema=BLOCKS_SCHEMA,
             ).withColumn("annot", F.lit(f"f_{fld}"))
             blocks = blocks.unionByName(pblocks)

@@ -1,15 +1,16 @@
 """Driver-facing queries + DuckDB oracle SQL (the per-round correctness gate).
 
-Two families over the driver's `documents` table:
+Four families over the driver's `documents` and `events` tables:
 - ix_*  : routed through the real inverted-index engine (build.py/query.py);
           documents are adapted to the pages input shape and indexed once per
           sf_dir (cached on disk under /tmp).
+- rs_*  : the results pipeline (results.py) over engine hits: grouping,
+          sorting, windows, collocations.
 - ft_*  : the declarative forward-index fast path (pure DataFrame ops over
           tokenized arrays — the analog of the reference's
           HitGroupsTokenFrequencies fast path).
-
-Plus training-data pipeline ops over documents/embeddings/events:
-dd_* (dedup), sim_* (similarity search), txt_* (text analysis), ev_* (events).
+- src_* : the engine's input readers (sources.py, iceberg.py): WARC/WET
+          records and Iceberg tables, plain and partition-filtered.
 
 Tokenization here is pinned to: non-empty pieces of lower(text) split on
 [^a-z0-9]+, positions counted over non-empty tokens — expressible identically
@@ -27,11 +28,8 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-K1, B = 1.2, 0.75
-TOPK_STOP = ("a", "the")
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB)
@@ -54,17 +52,6 @@ dl AS (
   SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dl
 )"""
 
-SQL_SH3 = """
-sh AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS s
-    FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-  ) WHERE s IS NOT NULL
-)"""
-
-
-
 SQL_LEMMA = """CASE
   WHEN length(tok)>3 AND tok LIKE '%s' AND tok NOT LIKE '%ss' THEN substr(tok,1,length(tok)-1)
   WHEN length(tok)>5 AND tok LIKE '%ing' THEN substr(tok,1,length(tok)-3)
@@ -76,40 +63,6 @@ SQL_POS = """CASE
   WHEN regexp_matches(tok, '^[0-9]+$') THEN 'num'
   WHEN length(tok)>5 AND tok LIKE '%ing' THEN 'vb'
   ELSE 'nn' END"""
-
-
-
-SQL_HP = """
-e AS (
-  SELECT vec_id, CAST(u.v AS DOUBLE) AS v, u.i AS i FROM (
-    SELECT vec_id, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS i
-    FROM embeddings
-  ) u(vec_id, v, i)
-),
-planes AS (
-  SELECT p.p, d.i,
-         CASE WHEN instr('0123456789abcdef', substr(md5(p.p || '_' || d.i), 1, 1)) - 1 >= 8
-              THEN 1.0 ELSE -1.0 END AS wt
-  FROM (SELECT unnest(range(6)) AS p) p CROSS JOIN (SELECT unnest(range(1, 65)) AS i) d
-),
-proj AS (SELECT e.vec_id, planes.p, sum(e.v * planes.wt) AS sm FROM e JOIN planes USING (i) GROUP BY 1, 2),
-buck AS (SELECT vec_id, sum(CASE WHEN sm > 0 THEN CAST(2 ** p AS BIGINT) ELSE 0 END) AS bucket FROM proj GROUP BY 1)
-"""
-
-SQL_LSH_CAND = """
-mh AS (
-  SELECT doc_id, h.i AS hi, min(md5(s || '#' || h.i)) AS mh
-  FROM sh CROSS JOIN (SELECT unnest(range(4)) AS i) h
-  GROUP BY 1, 2
-),
-okb AS (SELECT hi, mh FROM mh GROUP BY hi, mh HAVING count(*) <= 50),
-capped AS (SELECT mh.doc_id, mh.hi, mh.mh FROM mh JOIN okb USING (hi, mh)),
-cand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.hi) AS shared_bands
-  FROM capped a JOIN capped b ON a.hi = b.hi AND a.mh = b.mh AND b.doc_id > a.doc_id
-  GROUP BY 1, 2
-)
-"""
 
 
 def _sql_topk(terms: list[str], k: int, where: str | None = None) -> str:
@@ -155,95 +108,6 @@ def _toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != "")
     return d.select("doc_id", F.posexplode(arr).alias("pos", "tok")).select(
         "doc_id", "tok", F.col("pos").cast("int").alias("pos")
-    )
-
-
-def _sh3(spark, sf_dir) -> DataFrame:
-    t = _toks(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    s = F.concat_ws(" ", "tok", F.lead("tok", 1).over(w), F.lead("tok", 2).over(w))
-    # concat_ws skips NULLs, so emulate SQL NULL propagation via lead presence
-    return (
-        t.withColumn("t1", F.lead("tok", 1).over(w))
-        .withColumn("t2", F.lead("tok", 2).over(w))
-        .filter(F.col("t1").isNotNull() & F.col("t2").isNotNull())
-        .select("doc_id", F.concat_ws(" ", "tok", "t1", "t2").alias("s"))
-        .distinct()
-    )
-
-
-LSH_BUCKET_CAP = 50  # max docs per (band, minhash) bucket before it is
-# dropped as degenerate (boilerplate-heavy shingles): one hot bucket of m
-# members makes m^2/2 candidate pairs, the classic LSH blow-up at scale.
-
-
-def _lsh_cand(spark, sf_dir) -> DataFrame:
-    """Candidate near-dup pairs from banded min-hash (4 bands over
-    3-shingles), with a per-bucket size cap. (doc_a, doc_b, shared_bands)."""
-    sh = _sh3(spark, sf_dir)
-    h = sh.select(
-        "doc_id", "s", F.explode(F.sequence(F.lit(0), F.lit(3))).alias("hi")
-    )
-    mh = h.groupBy("doc_id", "hi").agg(
-        F.min(F.md5(F.concat(F.col("s"), F.lit("#"), F.col("hi").cast("string")))).alias("mh")
-    )
-    # per-bucket size via a PARTITIONED window (one pass over mh; an
-    # agg + semi-join would recompute the whole minhash subtree twice)
-    wb = Window.partitionBy("hi", "mh")
-    capped = (
-        mh.withColumn("_n", F.count("*").over(wb))
-        .filter(F.col("_n") <= LSH_BUCKET_CAP)
-        .drop("_n")
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    return (
-        a.join(b, (F.col("a.hi") == F.col("b.hi")) & (F.col("a.mh") == F.col("b.mh"))
-               & (F.col("b.doc_id") > F.col("a.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.countDistinct("a.hi").alias("shared_bands"))
-    )
-
-
-def hp_planes_for(n_vectors: int, target_bucket: int = 1000) -> int:
-    """Scaling rule for the hyperplane count: 2^n_planes buckets sized to
-    hold ~target_bucket vectors each, i.e. n_planes ≈ log2(N/target_bucket),
-    floored at 6 (the pinned fixture value the oracle entries verify
-    against). At 10^9 vectors this gives 20 planes (~10^6 buckets), keeping
-    the candidate join's O(Σ bucket²) bounded; a fixed 64-bucket layout
-    would blow up quadratically there."""
-    import math
-
-    if n_vectors <= 0:
-        return 6
-    return max(6, math.ceil(math.log2(max(1, n_vectors / target_bucket))))
-
-
-def _hp_buckets(spark, sf_dir, n_planes: int = 6) -> DataFrame:
-    """Random-hyperplane LSH buckets over the embeddings table: n_planes
-    pinned md5-derived hyperplanes -> (vec_id, bucket). The shared candidate
-    generator for ANN probing and embedding near-dup (bucket-equi join, no
-    crossJoin anywhere). n_planes defaults to the fixture constant 6 the
-    oracle entries are pinned at; size production runs with hp_planes_for(N)."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.posexplode(F.transform("embedding", lambda x: x.cast("double")))
-    ).select("vec_id", (F.col("pos") + 1).alias("i"), F.col("col").alias("v"))
-    # one range, no crossJoin (even a constant-size BNLJ trips plan audits)
-    planes = spark.range(n_planes * 64).select(
-        (F.col("id") / 64).cast("int").alias("p"),
-        (F.col("id") % 64 + 1).cast("int").alias("i"),
-    ).withColumn(
-        "wt",
-        F.when(
-            F.expr("instr('0123456789abcdef', substring(md5(concat(cast(p as string), '_', cast(i as string))),1,1)) - 1") >= 8,
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0)),
-    )
-    proj = (
-        e.join(F.broadcast(planes), "i")
-        .groupBy("vec_id", "p").agg(F.sum(F.col("v") * F.col("wt")).alias("sm"))
-    )
-    return proj.groupBy("vec_id").agg(
-        F.sum(F.when(F.col("sm") > 0, F.expr("cast(pow(2, p) as long)")).otherwise(F.lit(0))).alias("bucket")
     )
 
 
@@ -1043,40 +907,6 @@ def build_queries() -> dict:
 
     q["src_iceberg_part"] = src_iceberg_part
 
-    # ---------------- embedding near-dup (dedup family) ----------------
-    def dd_emb_neardup(s, d):
-        """Nearest same-bucket neighbor per probe vector: candidates come
-        from the shared hyperplane-LSH buckets (bucket-equi join), then exact
-        cosine re-scoring — O(sum bucket^2), never the O(N^2) crossJoin.
-        Probes whose bucket holds no other vector yield no row (the LSH
-        recall trade documented for sim_ann_lsh)."""
-        buck = _hp_buckets(s, d)
-        a = buck.filter(F.col("vec_id") < 50).select(
-            F.col("vec_id").alias("a_id"), "bucket"
-        )
-        cand = a.join(buck.withColumnRenamed("vec_id", "b_id"), "bucket").filter(
-            F.col("a_id") != F.col("b_id")
-        ).select("a_id", "b_id")
-        e = s.read.parquet(f"{d}/embeddings.parquet").select(
-            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-        )
-        j = (
-            cand.join(e.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va")), "a_id")
-            .join(e.select(F.col("vec_id").alias("b_id"), F.col("v").alias("vb")), "b_id")
-        )
-        dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-        na = F.aggregate(F.transform("va", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-        nb = F.aggregate(F.transform("vb", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-        scored = j.select("a_id", "b_id", F.round(dot / F.sqrt(na * nb), 6).alias("cos"))
-        w = Window.partitionBy("a_id").orderBy(F.col("cos").desc(), "b_id")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("a_id").alias("vec_id"), F.col("b_id").alias("nn_id"), "cos")
-        )
-
-    q["dd_emb_neardup"] = dd_emb_neardup
-
     # ---------------- forward-index fast path ----------------
     def ft_termfreq(s, d):
         return (
@@ -1120,755 +950,6 @@ def build_queries() -> dict:
         )
 
     q["ft_doclen_hist"] = ft_doclen_hist
-
-    # ---------------- dedup ----------------
-    def dd_exact(s, d):
-        return (
-            _docs(s, d).select(F.md5("text").alias("h"))
-            .groupBy("h").agg(F.count("*").alias("n"))
-            .orderBy(F.col("n").desc(), "h").limit(20)
-        )
-
-    q["dd_exact"] = dd_exact
-
-    def dd_ngram_jaccard(s, d):
-        """Exact 3-shingle Jaccard over the LSH candidate pairs (the
-        verify stage of the minhash/LSH dedup pipeline — candidates from
-        _lsh_cand, never an all-pairs or adjacent-id comparison)."""
-        from .rank import rank_head
-
-        pairs = _lsh_cand(s, d).select("doc_a", "doc_b")
-        sh = _sh3(s, d)
-        cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-        inter = (
-            pairs.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-            .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s2")), "doc_b")
-            .filter(F.col("s") == F.col("s2"))
-            .groupBy("doc_a", "doc_b").agg(F.count("*").alias("i"))
-        )
-        ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-        cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-        scored = (
-            inter.join(ca, "doc_a").join(cb, "doc_b")
-            .select(
-                "doc_a", "doc_b",
-                F.round(F.col("i") * 1.0 / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
-            )
-        )
-        return rank_head(
-            scored, [("jaccard", False), ("doc_a", True), ("doc_b", True)], 0, 10
-        )
-
-    q["dd_ngram_jaccard"] = dd_ngram_jaccard
-
-    def _mh(s, d, n_hashes):
-        sh = _sh3(s, d)
-        h = sh.select("doc_id", "s", F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("hi"))
-        return h.groupBy("doc_id", "hi").agg(
-            F.min(F.md5(F.concat(F.col("s"), F.lit("#"), F.col("hi").cast("string")))).alias("mh")
-        )
-
-    def dd_minhash_sig(s, d):
-        mh = _mh(s, d, 8)
-        sig = mh.groupBy("doc_id").agg(
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("hi", "mh"))), lambda x: x["mh"]
-                    ),
-                    ",",
-                )
-            ).alias("sig")
-        )
-        return sig.filter(F.col("doc_id") < 50).select("doc_id", "sig")
-
-    q["dd_minhash_sig"] = dd_minhash_sig
-
-    q["dd_lsh_pairs"] = lambda s, d: _lsh_cand(s, d)
-
-    def dd_simhash(s, d):
-        t = _toks(s, d).groupBy("doc_id", "tok").agg(F.count("*").alias("w"))
-        # 16-bit token hash from the first 4 md5 hex chars — portable between
-        # Spark and DuckDB via instr('0123456789abcdef', ch)
-        t = t.withColumn(
-            "h16",
-            F.expr(
-                "(instr('0123456789abcdef', substring(md5(tok),1,1)) - 1) * 4096 + "
-                "(instr('0123456789abcdef', substring(md5(tok),2,1)) - 1) * 256 + "
-                "(instr('0123456789abcdef', substring(md5(tok),3,1)) - 1) * 16 + "
-                "(instr('0123456789abcdef', substring(md5(tok),4,1)) - 1)"
-            ).cast("int"),
-        )
-        bits = (
-            t.select("doc_id", "w", "h16",
-                     F.explode(F.sequence(F.lit(0), F.lit(15))).alias("j"))
-            .withColumn("bit", F.expr("(h16 div cast(pow(2, j) as int)) % 2"))
-            .groupBy("doc_id", "j")
-            .agg(F.sum(F.when(F.col("bit") == 1, F.col("w")).otherwise(-F.col("w"))).alias("v"))
-        )
-        sim = bits.groupBy("doc_id").agg(
-            F.sum(F.when(F.col("v") > 0, F.expr("cast(pow(2, j) as long)")).otherwise(F.lit(0))).alias("simhash")
-        )
-        return sim.filter(F.col("doc_id") < 100).select("doc_id", F.col("simhash").cast("long"))
-
-    q["dd_simhash"] = dd_simhash
-
-    # ---------------- similarity search ----------------
-    def _emb(s, d):
-        return s.read.parquet(f"{d}/embeddings.parquet")
-
-    def sim_cosine_topk(s, d):
-        e = _emb(s, d).select(
-            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-        )
-        qv = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-        j = e.crossJoin(F.broadcast(qv)).filter(F.col("vec_id") != 0)
-        dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
-        nv = F.aggregate(F.transform("v", lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-        nq = F.aggregate(F.transform("qv", lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-        scored = j.select("vec_id", F.round(dot / F.sqrt(nv * nq), 6).alias("cos"))
-        from .rank import rank_head
-
-        return rank_head(
-            scored, [("cos", False), ("vec_id", True)], 0, 10, "rank"
-        ).select(F.col("rank").cast("int"), "vec_id", "cos")
-
-    q["sim_cosine_topk"] = sim_cosine_topk
-
-    def sim_ann_lsh(s, d):
-        buck = _hp_buckets(s, d)
-        qb = buck.filter(F.col("vec_id") == 0).select(F.col("bucket").alias("qbucket"))
-        cand = buck.crossJoin(F.broadcast(qb)).filter(
-            (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != 0)
-        ).select("vec_id")
-        emb = _emb(s, d).select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-        j = cand.join(emb, "vec_id").crossJoin(F.broadcast(qv))
-        dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
-        nv = F.aggregate(F.transform("v", lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-        nq = F.aggregate(F.transform("qv", lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-        scored = j.select("vec_id", F.round(dot / F.sqrt(nv * nq), 6).alias("cos"))
-        from .rank import rank_head
-
-        return rank_head(
-            scored, [("cos", False), ("vec_id", True)], 0, 5, "rank"
-        ).select(F.col("rank").cast("int"), "vec_id", "cos")
-
-    q["sim_ann_lsh"] = sim_ann_lsh
-
-    def sim_ann_multiprobe(s, d):
-        """Multi-probe LSH (recall upgrade over single-bucket probing, the
-        classic multi-probe move): candidates = vectors whose 6-bit
-        hyperplane bucket is within Hamming distance 1 of the query's, then
-        exact cosine re-scoring."""
-        buck = _hp_buckets(s, d)
-        qb = buck.filter(F.col("vec_id") == 0).select(F.col("bucket").alias("qbucket"))
-        cand = buck.crossJoin(F.broadcast(qb)).filter(
-            (F.bit_count(F.col("bucket").bitwiseXOR(F.col("qbucket"))) <= 1)
-            & (F.col("vec_id") != 0)
-        ).select("vec_id")
-        emb = _emb(s, d).select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-        j = cand.join(emb, "vec_id").crossJoin(F.broadcast(qv))
-        dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
-        nv = F.aggregate(F.transform("v", lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-        nq = F.aggregate(F.transform("qv", lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-        scored = j.select("vec_id", F.round(dot / F.sqrt(nv * nq), 6).alias("cos"))
-        from .rank import rank_head
-
-        return rank_head(
-            scored, [("cos", False), ("vec_id", True)], 0, 10, "rank"
-        ).select(F.col("rank").cast("int"), "vec_id", "cos")
-
-    q["sim_ann_multiprobe"] = sim_ann_multiprobe
-
-    def sim_ann_ivf(s, d):
-        """IVF-Flat ANN (ann.py): deterministic k-means coarse quantizer ->
-        probe the nprobe nearest cells -> exact cosine rescore. Run here with
-        nprobe == K (exhaustive), which must EQUAL the brute-force top-k —
-        the oracle is the same SQL as sim_cosine_topk, so any quantizer /
-        assignment / probe bug surfaces as a value-hash mismatch. The
-        recall-vs-nprobe trade at nprobe < K is covered by tests/test_ann.py
-        on separated clusters."""
-        from . import ann
-
-        emb = _emb(s, d)
-        K = 8
-        centroids, assignments = ann.build_ivf(emb, k=K, n_iter=2)
-        return ann.ivf_search(
-            emb, centroids, assignments, query_vec_id=0, nprobe=K, topk=10
-        )
-
-    q["sim_ann_ivf"] = sim_ann_ivf
-
-    # ---------------- text analysis ----------------
-    def txt_tokcount(s, d):
-        """Token counting, both flavors the pipeline brief names:
-        whitespace-ish tokens (the toks split) AND a BPE-ish pretokenizer
-        regex count (GPT-2-style contraction/letters/digits/punct classes,
-        restricted to the RE2-AND-Java-compatible subset so Spark and the
-        DuckDB oracle run the identical pattern)."""
-        bpe = "'(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s']+"
-        ws = (
-            _toks(s, d).filter(F.col("doc_id") < 100)
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_tok"), F.countDistinct("tok").alias("n_uniq"))
-        )
-        bp = (
-            _docs(s, d).filter(F.col("doc_id") < 100)
-            .select(
-                "doc_id",
-                F.regexp_count(F.lower(F.col("text")), F.lit(bpe))
-                .cast("long").alias("n_bpe"),
-            )
-        )
-        return ws.join(bp, "doc_id")
-
-    q["txt_tokcount"] = txt_tokcount
-
-    def txt_quality(s, d):
-        return (
-            _toks(s, d).filter(F.col("doc_id") < 100)
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_tok"),
-                F.round(F.avg(F.length("tok")), 6).alias("avg_len"),
-                F.round(
-                    F.sum(F.when(F.col("tok").isin(*TOPK_STOP), 1.0).otherwise(0.0)) / F.count("*"), 6
-                ).alias("stop_ratio"),
-            )
-        )
-
-    q["txt_quality"] = txt_quality
-
-    def txt_langid(s, d):
-        en = ["the", "a", "of", "and", "to", "in", "is"]
-        de = ["der", "die", "das", "und", "ist", "ein"]
-        t = _toks(s, d).filter(F.col("doc_id") < 100).groupBy("doc_id").agg(
-            F.round(F.sum(F.when(F.col("tok").isin(*en), 1.0).otherwise(0.0)) / F.count("*"), 6).alias("en_score"),
-            F.round(F.sum(F.when(F.col("tok").isin(*de), 1.0).otherwise(0.0)) / F.count("*"), 6).alias("de_score"),
-        )
-        return t.select(
-            "doc_id", "en_score", "de_score",
-            F.when(F.col("en_score") >= F.col("de_score"), "en").otherwise("de").alias("lang_guess"),
-        )
-
-    q["txt_langid"] = txt_langid
-
-    def txt_fingerprint(s, d):
-        t = _toks(s, d)
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        cols = [F.lead("tok", i).over(w).alias(f"t{i}") for i in range(1, 5)]
-        sh5 = (
-            t.select("doc_id", "tok", *cols)
-            .filter(F.col("t4").isNotNull())
-            .select("doc_id", F.concat_ws(" ", "tok", "t1", "t2", "t3", "t4").alias("s"))
-        )
-        return (
-            sh5.filter(F.col("doc_id") < 100)
-            .groupBy("doc_id").agg(F.min(F.md5("s")).alias("fp"))
-        )
-
-    q["txt_fingerprint"] = txt_fingerprint
-
-    def txt_decontam(s, d):
-        """Benchmark decontamination (training-data pipeline): flag
-        training docs sharing any token 3-gram with the held-out eval set
-        (docs with doc_id % 97 == 0 stand in for the benchmark). The
-        standard shape at scale: explode grams, DISTINCT the (small)
-        benchmark gram set, hash equi-join (broadcastable — eval sets are
-        tiny next to the corpus), count distinct shared grams per doc.
-        No cartesian; training docs with zero overlap survive via the
-        left join."""
-        t = _toks(s, d).filter(F.col("doc_id") < 300)
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        g = (
-            t.select(
-                "doc_id", "tok",
-                F.lead("tok", 1).over(w).alias("t1"),
-                F.lead("tok", 2).over(w).alias("t2"),
-            )
-            .filter(F.col("t2").isNotNull())
-            .select("doc_id", F.concat_ws(" ", "tok", "t1", "t2").alias("g"))
-        )
-        bench = (
-            g.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
-        )
-        train = g.filter(F.col("doc_id") % 97 != 0)
-        shared = (
-            train.join(F.broadcast(bench), "g")
-            .groupBy("doc_id")
-            .agg(F.countDistinct("g").alias("n_shared"))
-        )
-        docs = (
-            _docs(s, d)
-            .filter((F.col("doc_id") < 300) & (F.col("doc_id") % 97 != 0))
-            .select("doc_id")
-        )
-        return docs.join(shared, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("n_shared"), F.lit(0)).cast("long").alias("n_shared"),
-            (F.coalesce(F.col("n_shared"), F.lit(0)) > 0).alias("contaminated"),
-        )
-
-    q["txt_decontam"] = txt_decontam
-
-    def txt_pii_scrub(s, d):
-        """PII scrubbing (training-data pipeline): regex redaction of
-        emails / IPv4 addresses with per-doc match counts and the hash of
-        the redacted text. The synthetic corpus carries no PII, so a
-        deterministic per-doc suffix is appended BEFORE scrubbing so the
-        redaction paths actually fire and the oracle hash discriminates a
-        broken pattern. Built-in regexp functions only — JVM-side,
-        whole-stage codegen, no shuffle (one narrow map over docs)."""
-        doc = s.read.parquet(f"{d}/documents.parquet").filter(F.col("doc_id") < 200)
-        email = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-        ip = r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}"
-        t = doc.select(
-            "doc_id",
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"), F.col("doc_id").cast("string"),
-                F.lit("@example.com from 10.0."),
-                (F.col("doc_id") % 256).cast("string"), F.lit(".7"),
-            ).alias("t"),
-        )
-        red = F.regexp_replace(
-            F.regexp_replace(F.col("t"), email, "<EMAIL>"), ip, "<IP>"
-        )
-        return t.select(
-            "doc_id",
-            F.regexp_count("t", F.lit(email)).cast("long").alias("n_email"),
-            F.regexp_count("t", F.lit(ip)).cast("long").alias("n_ip"),
-            F.md5(red).alias("scrub_md5"),
-        )
-
-    q["txt_pii_scrub"] = txt_pii_scrub
-
-    def txt_filter_pipeline(s, d):
-        """C4-style quality filter + exact-dup drop (training-data
-        pipeline): keep docs with >= 20 tokens, mean token length in
-        [2, 10], stopword ratio >= 0.01, then drop exact text duplicates
-        keeping the lowest doc_id. One hash-agg for stats + one window
-        over md5(text) — both doc_id/hash-partitioned, no driver work."""
-        stats = (
-            _toks(s, d)
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_tok"),
-                F.round(F.avg(F.length("tok")), 6).alias("avg_len"),
-                F.round(
-                    F.sum(
-                        F.when(F.col("tok").isin(*TOPK_STOP), 1.0).otherwise(0.0)
-                    )
-                    / F.count("*"),
-                    6,
-                ).alias("stop_ratio"),
-            )
-        )
-        doc = s.read.parquet(f"{d}/documents.parquet").select(
-            "doc_id", F.md5("text").alias("h")
-        )
-        w = Window.partitionBy("h").orderBy("doc_id")
-        first = doc.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") == 1
-        ).select("doc_id")
-        return (
-            stats.join(first, "doc_id")
-            .filter(
-                (F.col("n_tok") >= 20)
-                & (F.col("avg_len") >= 2.0)
-                & (F.col("avg_len") <= 10.0)
-                & (F.col("stop_ratio") >= 0.01)
-            )
-            .select("doc_id", "n_tok", "avg_len", "stop_ratio")
-        )
-
-    q["txt_filter_pipeline"] = txt_filter_pipeline
-
-    def txt_chunk_dedup(s, d):
-        """Cross-document boilerplate removal, CCNet-style (Wenzek et al.
-        2020 dedupe repeated paragraphs across the corpus before LM
-        training): split each doc into non-overlapping 8-token chunks, a
-        chunk whose exact text occurs in >= 2 DISTINCT documents is
-        boilerplate and dropped; per doc report chunk/dup counts plus the
-        md5 of the kept text (chunks re-joined in order) so the oracle
-        hash-checks the reconstruction, not just the counts. Plan: one
-        doc-partitioned agg to form chunks, one global hash-agg for the
-        cross-doc chunk frequency (map-side combine), one shuffle equi-join
-        on the chunk string — at 100 TB the frequency table shards by
-        chunk hash, no broadcast, no skew (chunks are near-unique by
-        construction; the heavy hitters ARE the boilerplate being counted).
-        The synthetic corpus has no shared paragraphs, so a deterministic
-        8-token boilerplate header is prepended to every doc_id%3==0 doc
-        BEFORE chunking (same trick as txt_pii_scrub) so the dup path
-        actually fires and the oracle discriminates a broken frequency
-        join."""
-        bp = "share alike boilerplate footer appears many pages exactly "
-        doc = _docs(s, d).select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 3 == 0, F.concat(F.lit(bp), F.col("text"))
-            ).otherwise(F.col("text")).alias("text"),
-        )
-        arr = F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-        )
-        toks = doc.select(
-            "doc_id", F.posexplode(arr).alias("pos", "tok")
-        ).select("doc_id", "tok", F.col("pos").cast("int").alias("pos"))
-        ch = (
-            toks
-            .withColumn("cid", F.floor(F.col("pos") / F.lit(8)).cast("long"))
-            .groupBy("doc_id", "cid")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                        lambda x: x["tok"],
-                    ),
-                    " ",
-                ).alias("chunk")
-            )
-        )
-        freq = ch.groupBy("chunk").agg(
-            F.countDistinct("doc_id").alias("ndocs")
-        )
-        flagged = ch.join(freq, "chunk").withColumn(
-            "dup", F.col("ndocs") >= 2
-        )
-        return (
-            flagged.filter(F.col("doc_id") < 150)
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").cast("long").alias("n_chunks"),
-                F.sum(F.col("dup").cast("long")).cast("long").alias("n_dup"),
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(
-                                    F.when(
-                                        ~F.col("dup"),
-                                        F.struct("cid", "chunk"),
-                                    )
-                                )
-                            ),
-                            lambda x: x["chunk"],
-                        ),
-                        " ",
-                    )
-                ).alias("kept_md5"),
-            )
-        )
-
-    q["txt_chunk_dedup"] = txt_chunk_dedup
-
-    def txt_gopher_rep(s, d):
-        """Gopher-style within-document repetition signals (Rae et al.
-        2021 Table A1: fraction of tokens in the most common token,
-        fraction of duplicate n-grams): per doc, top_tok_ratio =
-        max token frequency / n_tok and dup3_frac = 1 - distinct
-        3-grams / total 3-grams. Two doc-partitioned hash-aggs + one
-        window for the 3-grams — all narrow per doc, embarrassingly
-        parallel at 100 TB."""
-        t = _toks(s, d).filter(F.col("doc_id") < 150)
-        per_tok = t.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
-        top = per_tok.groupBy("doc_id").agg(
-            F.max("c").alias("top_c"), F.sum("c").alias("n_tok")
-        )
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        g3 = (
-            t.select(
-                "doc_id",
-                F.concat_ws(
-                    " ", "tok", F.lead("tok", 1).over(w), F.lead("tok", 2).over(w)
-                ).alias("g"),
-                F.lead("tok", 2).over(w).alias("_t2"),
-            )
-            .filter(F.col("_t2").isNotNull())
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_g3"),
-                F.countDistinct("g").alias("n_g3_uniq"),
-            )
-        )
-        return top.join(g3, "doc_id").select(
-            "doc_id",
-            F.col("n_tok").cast("long").alias("n_tok"),
-            F.round(F.col("top_c") / F.col("n_tok"), 6).alias("top_tok_ratio"),
-            F.round(
-                F.lit(1.0) - F.col("n_g3_uniq") / F.col("n_g3"), 6
-            ).alias("dup3_frac"),
-        )
-
-    q["txt_gopher_rep"] = txt_gopher_rep
-
-    def dd_url_canon(s, d):
-        """URL canonicalization + canonical-URL dedup (the first dedup
-        pass of every Common-Crawl pipeline runs on normalized URLs
-        before any content hashing). Deterministic messy URLs are
-        synthesized per doc_id (mixed-case scheme/host, www. prefix,
-        explicit :80, utm_* tracking params, unsorted query) so the
-        normalization actually fires; canonicalize = lowercase
-        scheme+host, strip www. and :80, drop utm_* params, sort the
-        remaining query params; then keep the lowest doc_id per canonical
-        URL. Built-in string/array functions only — whole-stage codegen,
-        one window shuffle on the canonical URL (hash-partitioned; at
-        100 TB this is the standard URL-dedup shuffle)."""
-        doc = s.read.parquet(f"{d}/documents.parquet").filter(
-            F.col("doc_id") < 200
-        )
-        m = F.col("doc_id") % 13
-        raw = F.concat(
-            F.lit("HTTP://WWW.Site"), (F.col("doc_id") % 7).cast("string"),
-            F.lit(".COM:80/p/"), m.cast("string"),
-            F.lit("/?utm_source=cc&b=2&id="), m.cast("string"),
-            F.lit("&a=1&utm_medium=web"),
-        )
-        t = doc.select("doc_id", raw.alias("url"))
-        scheme = F.lower(F.regexp_extract("url", r"^([A-Za-z]+)://", 1))
-        host0 = F.lower(F.regexp_extract("url", r"^[A-Za-z]+://([^/?#]+)", 1))
-        host = F.regexp_replace(
-            F.regexp_replace(host0, r":80$", ""), r"^www\.", ""
-        )
-        path = F.regexp_extract("url", r"^[A-Za-z]+://[^/?#]+([^?#]*)", 1)
-        qry = F.regexp_extract("url", r"\?([^#]*)", 1)
-        keep = F.array_sort(
-            F.filter(
-                F.split(qry, "&"),
-                lambda p: (p != "") & ~p.startswith("utm_"),
-            )
-        )
-        canon = F.concat(
-            scheme, F.lit("://"), host, path,
-            F.when(
-                F.size(keep) > 0, F.concat(F.lit("?"), F.array_join(keep, "&"))
-            ).otherwise(F.lit("")),
-        )
-        c = t.select("doc_id", "url", canon.alias("canon_url"), host.alias("host"))
-        w = Window.partitionBy("canon_url").orderBy("doc_id")
-        return c.withColumn(
-            "is_canonical_rep", F.row_number().over(w) == 1
-        ).select("doc_id", "canon_url", "host", "is_canonical_rep")
-
-    q["dd_url_canon"] = dd_url_canon
-
-    def dd_lsh_cluster(s, d):
-        """Near-dup CLUSTERING: LSH candidate pairs -> connected components
-        -> keep the min doc_id per component (the actionable step every
-        production dedup pipeline runs after pair generation — pairs alone
-        don't say which doc to drop). Components via min-label propagation
-        WITH pointer jumping (lbl <- lbl[lbl] each round), so convergence is
-        O(log n) rounds instead of O(component diameter) — the same bound as
-        the published large-star/small-star MapReduce algorithm (Kiveris et
-        al. 2014) with two hash-partitioned equi-joins per round and no
-        driver-side data beyond one convergence scalar. Each round is
-        materialized (localCheckpoint) so plan depth stays linear in rounds,
-        not exponential — at 100 TB the label table is one row per node in
-        a pair (<< corpus) and every join is a plain shuffle join on ids."""
-        pairs = (
-            _lsh_cand(s, d)
-            .filter((F.col("doc_a") < 150) & (F.col("doc_b") < 150))
-            .select("doc_a", "doc_b")
-        )
-        edges = pairs.union(
-            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        ).localCheckpoint(eager=True)
-        lab = (
-            edges.select(F.col("doc_a").alias("node")).distinct()
-            .withColumn("lbl", F.col("node"))
-            .localCheckpoint(eager=True)
-        )
-        prev_sum = None
-        for _ in range(20):  # >= log2(components) rounds; fixture needs ~3
-            nb = (
-                edges.join(lab, edges["doc_b"] == lab["node"])
-                .groupBy("doc_a").agg(F.min("lbl").alias("nb_lbl"))
-            )
-            m1 = (
-                lab.join(nb, lab["node"] == nb["doc_a"], "left")
-                .select(
-                    "node",
-                    F.least(F.col("lbl"), F.coalesce("nb_lbl", "lbl")).alias("lbl"),
-                )
-            )
-            ptr = m1.select(F.col("node").alias("p_node"), F.col("lbl").alias("p_lbl"))
-            lab = (
-                m1.join(ptr, m1["lbl"] == ptr["p_node"], "left")
-                .select("node", F.coalesce("p_lbl", "lbl").alias("lbl"))
-                .localCheckpoint(eager=True)
-            )
-            cur = lab.agg(F.sum("lbl")).collect()[0][0]  # one scalar/round
-            if cur == prev_sum:  # labels only decrease -> stable sum = done
-                break
-            prev_sum = cur
-        docs = _docs(s, d).filter(F.col("doc_id") < 150).select("doc_id")
-        out = docs.join(lab, docs["doc_id"] == lab["node"], "left").select(
-            "doc_id", F.coalesce("lbl", "doc_id").alias("cluster_id")
-        )
-        wc = Window.partitionBy("cluster_id")
-        return out.select(
-            "doc_id",
-            "cluster_id",
-            F.count("*").over(wc).cast("long").alias("cluster_size"),
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_kept"),
-        )
-
-    q["dd_lsh_cluster"] = dd_lsh_cluster
-
-    def txt_substr_dedup(s, d):
-        """Exact-substring dedup with OVERLAPPING windows (Lee et al. 2021,
-        "Deduplicating Training Data Makes Language Models Better": any
-        50-token span shared verbatim across docs is training leakage; here
-        W=12 at fixture scale). Unlike txt_chunk_dedup's non-overlapping
-        chunks, stride-1 windows catch SHIFTED duplicates — the synthetic
-        injection prepends doc_id%4 pad tokens before a fixed 12-token
-        passage on every doc_id%3==0 doc, so chunk alignment differs per doc
-        and ONLY an overlapping-window scan flags them all. Plan: one
-        doc-partitioned running window (sliding frame, no self-join), one
-        corpus-wide hash-agg on the window text for the frequency (this is
-        the suffix-array substitute that actually distributes: the heavy
-        shuffle keys by window hash), one equi-join back."""
-        W = 12
-        doc = _docs(s, d).filter(F.col("doc_id") < 150).select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.expr("repeat('pad ', cast(doc_id % 4 as int))"),
-                    F.lit("common crawl pipelines must remove verbatim repeated passages before training large models "),
-                    F.col("text"),
-                ),
-            ).otherwise(F.col("text")).alias("text"),
-        )
-        arr = F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-        )
-        toks = doc.select(
-            "doc_id", F.posexplode(arr).alias("pos", "tok")
-        )
-        wf = (
-            Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, W - 1)
-        )
-        win = (
-            toks
-            .select(
-                "doc_id", "pos",
-                F.array_join(F.collect_list("tok").over(wf), " ").alias("wtxt"),
-                F.count("tok").over(wf).alias("_n"),
-            )
-            .filter(F.col("_n") == W)
-            .drop("_n")
-        )
-        freq = win.groupBy("wtxt").agg(F.countDistinct("doc_id").alias("nd"))
-        flagged = win.join(freq, "wtxt").withColumn("dup", F.col("nd") >= 2)
-        return flagged.groupBy("doc_id").agg(
-            F.count("*").cast("long").alias("n_windows"),
-            F.sum(F.col("dup").cast("long")).cast("long").alias("n_dup_windows"),
-            F.round(
-                F.sum(F.col("dup").cast("double")) / F.count("*"), 6
-            ).alias("dup_frac"),
-        )
-
-    q["txt_substr_dedup"] = txt_substr_dedup
-
-    def web_pagerank(s, d):
-        """Link-graph extraction + PageRank over the synthesized web corpus:
-        deterministic anchor tags are rendered INTO an html column per doc
-        (doc u links to (7u+j)%100 for j=1..u%3+1, self-links included in
-        the html), the edge list is re-extracted with regexp_extract_all —
-        so the oracle, which generates edges closed-form, actually checks
-        the HTML link extraction — then 5 power iterations of
-        r = 0.15/N + 0.85*sum(r_in/outdeg) (dangling mass dropped; this
-        synth graph has no dangling nodes). Each iteration is one equi-join
-        edges⋈ranks + one hash-agg on dst — the canonical distributed
-        PageRank step; ranks is one row per node, edges pre-joined with
-        outdeg once. Fixed iteration count keeps plan depth bounded; at
-        100 TB you'd localCheckpoint per iteration, here 5 stacked joins
-        stay well under codegen limits."""
-        N, DAMP, ITERS = 100, 0.85, 5
-        doc = _docs(s, d).filter(F.col("doc_id") < N)
-        anchors = F.aggregate(
-            F.filter(
-                F.sequence(F.lit(1), F.lit(3)),
-                lambda j: j <= (F.col("doc_id") % 3 + 1).cast("int"),
-            ),
-            F.lit(""),
-            lambda acc, j: F.concat(
-                acc,
-                F.lit('<a href="/doc/'),
-                ((F.col("doc_id") * 7 + j) % N).cast("string"),
-                F.lit('">link</a>'),
-            ),
-        )
-        html = doc.select(
-            "doc_id",
-            F.concat(
-                F.lit("<html><body><p>"), F.substring("text", 1, 40),
-                F.lit("</p>"), anchors, F.lit("</body></html>"),
-            ).alias("html"),
-        )
-        edges = (
-            html.select(
-                F.col("doc_id").alias("src"),
-                F.explode(
-                    F.regexp_extract_all(
-                        "html", F.lit(r'<a href="/doc/([0-9]+)"'), F.lit(1)
-                    )
-                ).alias("dst_s"),
-            )
-            .select("src", F.col("dst_s").cast("long").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        out = edges.groupBy("src").agg(F.count("*").alias("odeg"))
-        ew = edges.join(out, "src")
-        nodes = doc.select(F.col("doc_id").alias("node"))
-        ranks = nodes.withColumn("r", F.lit(1.0 / N))
-        for _ in range(ITERS):
-            contrib = (
-                ew.join(ranks, ew["src"] == ranks["node"])
-                .groupBy("dst").agg(F.sum(F.col("r") / F.col("odeg")).alias("c"))
-            )
-            ranks = nodes.join(
-                contrib, nodes["node"] == contrib["dst"], "left"
-            ).select(
-                "node",
-                (F.lit((1.0 - DAMP) / N) + F.lit(DAMP) * F.coalesce("c", F.lit(0.0))).alias("r"),
-            )
-        ranked = ranks.select(
-            F.col("node").alias("doc_id"), F.round("r", 6).alias("pagerank")
-        )
-        from .rank import ranked_all
-
-        return ranked_all(
-            ranked, [("pagerank", False), ("doc_id", True)], "pr_rank"
-        ).select(F.col("pr_rank").cast("int"), "doc_id", "pagerank")
-
-    q["web_pagerank"] = web_pagerank
-
-    # ---------------- events ----------------
-    def ev_window_counts(s, d):
-        e = s.read.parquet(f"{d}/events.parquet")
-        return (
-            e.groupBy(F.window("ts", "5 minutes").getField("start").alias("ws"), "event_type")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sv"))
-        )
-
-    q["ev_window_counts"] = ev_window_counts
-
-    def ev_sessionize(s, d):
-        e = s.read.parquet(f"{d}/events.parquet")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        secs = lambda c: c.cast("timestamp").cast("double")  # noqa: E731
-        gap = secs(F.col("ts")) - secs(F.lag("ts").over(w))
-        return (
-            e.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800.0), 1).otherwise(0))
-            .groupBy("user_id").agg(F.sum("new_sess").cast("long").alias("n_sessions"))
-        )
-
-    q["ev_sessionize"] = ev_sessionize
 
     return _rotate_registration(q)
 
@@ -2241,28 +1322,6 @@ SELECT rank, doc_id, start, e AS "end" FROM (
   FROM h
 ) WHERE rank > 10 AND rank <= 30
 """
-    o["txt_decontam"] = f"""
-WITH {SQL_TOKS},
-g AS (
-  SELECT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS g
-  FROM toks a
-  JOIN toks b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-  WHERE a.doc_id < 300
-),
-bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-shared AS (
-  SELECT doc_id, CAST(count(DISTINCT g.g) AS BIGINT) AS n_shared
-  FROM g JOIN bench USING (g)
-  WHERE doc_id % 97 <> 0
-  GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(s.n_shared, 0) AS n_shared,
-       coalesce(s.n_shared, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN shared s USING (doc_id)
-WHERE d.doc_id < 300 AND d.doc_id % 97 <> 0
-"""
     o["src_iceberg_part"] = """
 SELECT event_id, ts, event_type
 FROM events
@@ -2284,25 +1343,6 @@ SELECT 'http://ex.test/' || CAST(doc_id AS VARCHAR) AS url,
                  || ' &amp; text</p><script>x()</script></body></html>')
             END AS html_len
 FROM documents WHERE doc_id < 300 AND doc_id % 7 <> 0
-"""
-    o["dd_emb_neardup"] = f"""
-WITH {SQL_HP},
-a AS (SELECT vec_id AS a_id, bucket FROM buck WHERE vec_id < 50),
-cand AS (
-  SELECT a.a_id, b.vec_id AS b_id FROM a JOIN buck b USING (bucket)
-  WHERE b.vec_id <> a.a_id
-),
-norms AS (SELECT vec_id, sum(v * v) AS n FROM e GROUP BY 1),
-dots AS (
-  SELECT c.a_id, c.b_id, sum(ea.v * eb.v) AS dot
-  FROM cand c JOIN e ea ON ea.vec_id = c.a_id JOIN e eb ON eb.vec_id = c.b_id AND eb.i = ea.i
-  GROUP BY 1, 2
-)
-SELECT a_id AS vec_id, b_id AS nn_id, cos FROM (
-  SELECT a_id, b_id, round(dot / sqrt(na.n * nb.n), 6) AS cos,
-         row_number() OVER (PARTITION BY a_id ORDER BY round(dot / sqrt(na.n * nb.n), 6) DESC, b_id) AS rn
-  FROM dots JOIN norms na ON na.vec_id = a_id JOIN norms nb ON nb.vec_id = b_id
-) WHERE rn = 1
 """
     o["ft_termfreq_top20"] = f"""
 WITH {SQL_TOKS}
@@ -2332,357 +1372,5 @@ WHERE tok = 'table' AND doc_id % 10 = 3
 WITH {SQL_TOKS}
 SELECT CAST((c // 10) * 10 AS BIGINT) AS bucket, CAST(count(*) AS BIGINT) AS n_docs
 FROM (SELECT doc_id, count(*) AS c FROM toks GROUP BY 1) GROUP BY 1
-"""
-
-    o["dd_exact"] = """
-SELECT h, CAST(n AS BIGINT) AS n FROM (
-  SELECT md5(text) AS h, count(*) AS n FROM documents GROUP BY 1
-) ORDER BY n DESC, h LIMIT 20
-"""
-    o["dd_ngram_jaccard"] = f"""
-WITH {SQL_TOKS}, {SQL_SH3}, {SQL_LSH_CAND},
-cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS i
-  FROM cand c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, round(i * 1.0 / (ca.n + cb.n - i), 6) AS jaccard
-FROM inter
-JOIN cnt ca ON ca.doc_id = doc_a
-JOIN cnt cb ON cb.doc_id = doc_b
-ORDER BY jaccard DESC, doc_a, doc_b LIMIT 10
-"""
-    o["dd_minhash_sig"] = f"""
-WITH {SQL_TOKS}, {SQL_SH3},
-mh AS (
-  SELECT doc_id, h.i AS hi, min(md5(s || '#' || h.i)) AS mh
-  FROM sh CROSS JOIN (SELECT unnest(range(8)) AS i) h
-  GROUP BY 1, 2
-)
-SELECT doc_id, md5(string_agg(mh, ',' ORDER BY hi)) AS sig
-FROM mh WHERE doc_id < 50 GROUP BY doc_id
-"""
-    o["dd_lsh_pairs"] = f"""
-WITH {SQL_TOKS}, {SQL_SH3}, {SQL_LSH_CAND}
-SELECT doc_a, doc_b, CAST(shared_bands AS BIGINT) AS shared_bands FROM cand
-"""
-    o["dd_simhash"] = f"""
-WITH {SQL_TOKS},
-tokh AS (
-  SELECT doc_id, tok, count(*) AS w,
-    (instr('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 4096 +
-    (instr('0123456789abcdef', substr(md5(tok), 2, 1)) - 1) * 256 +
-    (instr('0123456789abcdef', substr(md5(tok), 3, 1)) - 1) * 16 +
-    (instr('0123456789abcdef', substr(md5(tok), 4, 1)) - 1) AS h16
-  FROM toks GROUP BY doc_id, tok
-),
-bits AS (
-  SELECT doc_id, b.j AS j,
-         sum(CASE WHEN (h16 // CAST(2 ** b.j AS INT)) % 2 = 1 THEN w ELSE -w END) AS v
-  FROM tokh CROSS JOIN (SELECT unnest(range(16)) AS j) b
-  GROUP BY 1, 2
-)
-SELECT doc_id, CAST(sum(CASE WHEN v > 0 THEN CAST(2 ** j AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-FROM bits WHERE doc_id < 100 GROUP BY doc_id
-"""
-
-    sql_cos_core = """
-e AS (
-  SELECT vec_id, CAST(u.v AS DOUBLE) AS v, u.i AS i FROM (
-    SELECT vec_id, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS i
-    FROM embeddings
-  ) u(vec_id, v, i)
-),
-qv AS (SELECT i, v FROM e WHERE vec_id = 0)
-"""
-    o["sim_cosine_topk"] = f"""
-WITH {sql_cos_core},
-dots AS (
-  SELECT e.vec_id, sum(e.v * qv.v) AS dot, sum(e.v * e.v) AS nv
-  FROM e JOIN qv USING (i) WHERE e.vec_id <> 0 GROUP BY 1
-),
-qn AS (SELECT sum(v * v) AS nq FROM qv)
-SELECT CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INT) AS rank, vec_id, cos FROM (
-  SELECT vec_id, round(dot / sqrt(nv * nq), 6) AS cos FROM dots, qn
-) QUALIFY rank <= 10
-"""
-    # IVF with nprobe == K probes every cell == exhaustive == brute force
-    o["sim_ann_ivf"] = o["sim_cosine_topk"]
-    o["sim_ann_lsh"] = f"""
-WITH {SQL_HP},
-qv AS (SELECT i, v FROM e WHERE vec_id = 0),
-qb AS (SELECT bucket FROM buck WHERE vec_id = 0),
-cand AS (SELECT b.vec_id FROM buck b, qb WHERE b.bucket = qb.bucket AND b.vec_id <> 0),
-dots AS (
-  SELECT e.vec_id, sum(e.v * qv.v) AS dot, sum(e.v * e.v) AS nv
-  FROM e JOIN qv USING (i) WHERE e.vec_id IN (SELECT vec_id FROM cand) GROUP BY 1
-),
-qn AS (SELECT sum(v * v) AS nq FROM qv)
-SELECT CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INT) AS rank, vec_id, cos FROM (
-  SELECT vec_id, round(dot / sqrt(nv * nq), 6) AS cos FROM dots, qn
-) QUALIFY rank <= 5
-"""
-
-    o["sim_ann_multiprobe"] = f"""
-WITH {SQL_HP},
-qv AS (SELECT i, v FROM e WHERE vec_id = 0),
-qb AS (SELECT bucket FROM buck WHERE vec_id = 0),
-cand AS (
-  SELECT b.vec_id FROM buck b, qb
-  WHERE bit_count(xor(b.bucket, qb.bucket)) <= 1 AND b.vec_id <> 0
-),
-dots AS (
-  SELECT e.vec_id, sum(e.v * qv.v) AS dot, sum(e.v * e.v) AS nv
-  FROM e JOIN qv USING (i) WHERE e.vec_id IN (SELECT vec_id FROM cand) GROUP BY 1
-),
-qn AS (SELECT sum(v * v) AS nq FROM qv)
-SELECT CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INT) AS rank, vec_id, cos FROM (
-  SELECT vec_id, round(dot / sqrt(nv * nq), 6) AS cos FROM dots, qn
-) QUALIFY rank <= 10
-"""
-    bpe_sql = "''(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s'']+"
-    o["txt_tokcount"] = f"""
-WITH {SQL_TOKS},
-ws AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
-         CAST(count(DISTINCT tok) AS BIGINT) AS n_uniq
-  FROM toks WHERE doc_id < 100 GROUP BY 1
-)
-SELECT ws.doc_id, ws.n_tok, ws.n_uniq,
-       CAST(length(regexp_extract_all(lower(d.text), '{bpe_sql}')) AS BIGINT) AS n_bpe
-FROM ws JOIN documents d USING (doc_id)
-"""
-    stop_list = ", ".join(f"'{t}'" for t in TOPK_STOP)
-    o["txt_quality"] = f"""
-WITH {SQL_TOKS}
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
-  round(avg(CAST(length(tok) AS DOUBLE)), 6) AS avg_len,
-  round(sum(CASE WHEN tok IN ({stop_list}) THEN 1.0 ELSE 0.0 END) / count(*), 6) AS stop_ratio
-FROM toks WHERE doc_id < 100 GROUP BY 1
-"""
-    o["txt_langid"] = f"""
-WITH {SQL_TOKS},
-t AS (
-  SELECT doc_id,
-    round(sum(CASE WHEN tok IN ('the','a','of','and','to','in','is') THEN 1.0 ELSE 0.0 END) / count(*), 6) AS en_score,
-    round(sum(CASE WHEN tok IN ('der','die','das','und','ist','ein') THEN 1.0 ELSE 0.0 END) / count(*), 6) AS de_score
-  FROM toks WHERE doc_id < 100 GROUP BY 1
-)
-SELECT doc_id, en_score, de_score,
-       CASE WHEN en_score >= de_score THEN 'en' ELSE 'de' END AS lang_guess
-FROM t
-"""
-    o["txt_fingerprint"] = f"""
-WITH {SQL_TOKS},
-sh5 AS (
-  SELECT doc_id, s FROM (
-    SELECT doc_id,
-      tok || ' ' || lead(tok,1) OVER w || ' ' || lead(tok,2) OVER w || ' ' ||
-      lead(tok,3) OVER w || ' ' || lead(tok,4) OVER w AS s
-    FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-  ) WHERE s IS NOT NULL
-)
-SELECT doc_id, min(md5(s)) AS fp FROM sh5 WHERE doc_id < 100 GROUP BY 1
-"""
-
-    o["txt_pii_scrub"] = r"""
-WITH t AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com from 10.0.'
-              || CAST(doc_id % 256 AS VARCHAR) || '.7' AS t
-  FROM documents WHERE doc_id < 200
-)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-  CAST(len(regexp_extract_all(t, '\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}')) AS BIGINT) AS n_ip,
-  md5(regexp_replace(regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                     '\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}', '<IP>', 'g')) AS scrub_md5
-FROM t
-"""
-    stop_list_f = ", ".join(f"'{t}'" for t in TOPK_STOP)
-    o["txt_filter_pipeline"] = f"""
-WITH {SQL_TOKS},
-stats AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
-    round(avg(CAST(length(tok) AS DOUBLE)), 6) AS avg_len,
-    round(sum(CASE WHEN tok IN ({stop_list_f}) THEN 1.0 ELSE 0.0 END) / count(*), 6) AS stop_ratio
-  FROM toks GROUP BY 1
-),
-first AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM documents
-  ) WHERE rn = 1
-)
-SELECT s.doc_id, s.n_tok, s.avg_len, s.stop_ratio
-FROM stats s JOIN first f ON s.doc_id = f.doc_id
-WHERE s.n_tok >= 20 AND s.avg_len BETWEEN 2.0 AND 10.0 AND s.stop_ratio >= 0.01
-"""
-    o["txt_chunk_dedup"] = r"""
-WITH docs2 AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-              THEN 'share alike boilerplate footer appears many pages exactly ' || text
-              ELSE text END AS text
-  FROM documents
-), raw AS (
-  SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS arr FROM docs2
-), tok0 AS (
-  SELECT doc_id, unnest(arr) AS tok, generate_subscripts(arr, 1) AS i FROM raw
-), toks AS (
-  SELECT doc_id, tok, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS INT) AS pos
-  FROM tok0 WHERE tok <> ''
-), ch AS (
-  SELECT doc_id, CAST(floor(pos / 8) AS BIGINT) AS cid,
-         string_agg(tok, ' ' ORDER BY pos) AS chunk
-  FROM toks GROUP BY 1, 2
-), freq AS (
-  SELECT chunk, count(DISTINCT doc_id) AS ndocs FROM ch GROUP BY 1
-), fl AS (
-  SELECT ch.doc_id, ch.cid, ch.chunk, freq.ndocs >= 2 AS dup
-  FROM ch JOIN freq USING (chunk)
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-  CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-  md5(coalesce(string_agg(CASE WHEN NOT dup THEN chunk END, ' ' ORDER BY cid), '')) AS kept_md5
-FROM fl WHERE doc_id < 150 GROUP BY 1
-"""
-    o["txt_gopher_rep"] = f"""
-WITH {SQL_TOKS},
-pt AS (
-  SELECT doc_id, tok, count(*) AS c FROM toks WHERE doc_id < 150 GROUP BY 1, 2
-), top AS (
-  SELECT doc_id, max(c) AS top_c, sum(c) AS n_tok FROM pt GROUP BY 1
-), g AS (
-  SELECT doc_id,
-         tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS g,
-         lead(tok, 2) OVER w AS t2
-  FROM toks WHERE doc_id < 150 WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-), g3 AS (
-  SELECT doc_id, count(*) AS n_g3, count(DISTINCT g) AS n_g3_uniq
-  FROM g WHERE t2 IS NOT NULL GROUP BY 1
-)
-SELECT t.doc_id, CAST(t.n_tok AS BIGINT) AS n_tok,
-  round(CAST(t.top_c AS DOUBLE) / t.n_tok, 6) AS top_tok_ratio,
-  round(1.0 - CAST(g3.n_g3_uniq AS DOUBLE) / g3.n_g3, 6) AS dup3_frac
-FROM top t JOIN g3 USING (doc_id)
-"""
-    o["dd_url_canon"] = r"""
-WITH t AS (
-  SELECT doc_id,
-    'HTTP://WWW.Site' || CAST(doc_id % 7 AS VARCHAR) || '.COM:80/p/' ||
-    CAST(doc_id % 13 AS VARCHAR) || '/?utm_source=cc&b=2&id=' ||
-    CAST(doc_id % 13 AS VARCHAR) || '&a=1&utm_medium=web' AS url
-  FROM documents WHERE doc_id < 200
-), c AS (
-  SELECT doc_id, url,
-    lower(regexp_extract(url, '^([A-Za-z]+)://', 1)) AS scheme,
-    regexp_replace(regexp_replace(
-      lower(regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1)), ':80$', ''),
-      '^www\.', '') AS host,
-    regexp_extract(url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1) AS path,
-    regexp_extract(url, '\?([^#]*)', 1) AS qry
-  FROM t
-), c2 AS (
-  SELECT doc_id, url, host,
-    scheme || '://' || host || path ||
-    CASE WHEN len(keep) > 0 THEN '?' || array_to_string(keep, '&') ELSE '' END AS canon_url
-  FROM (
-    SELECT *, list_sort(list_filter(string_split(qry, '&'),
-                                    x -> x <> '' AND NOT starts_with(x, 'utm_'))) AS keep
-    FROM c
-  )
-)
-SELECT doc_id, canon_url, host,
-  row_number() OVER (PARTITION BY canon_url ORDER BY doc_id) = 1 AS is_canonical_rep
-FROM c2
-"""
-    o["dd_lsh_cluster"] = f"""
-WITH RECURSIVE {SQL_TOKS}, {SQL_SH3}, {SQL_LSH_CAND},
-pairs AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE doc_a < 150 AND doc_b < 150),
-edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-reach(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-comp AS (SELECT a AS doc_id, least(a, min(b)) AS cid FROM reach GROUP BY a),
-asg AS (
-  SELECT d.doc_id, coalesce(c.cid, d.doc_id) AS cluster_id
-  FROM documents d LEFT JOIN comp c USING (doc_id) WHERE d.doc_id < 150
-)
-SELECT doc_id, cluster_id,
-       CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size,
-       doc_id = cluster_id AS is_kept
-FROM asg
-"""
-    o["txt_substr_dedup"] = r"""
-WITH docs2 AS (
-  SELECT doc_id, CASE WHEN doc_id % 3 = 0
-    THEN repeat('pad ', CAST(doc_id % 4 AS INT)) ||
-         'common crawl pipelines must remove verbatim repeated passages before training large models ' || text
-    ELSE text END AS text
-  FROM documents WHERE doc_id < 150
-), raw AS (
-  SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS arr FROM docs2
-), tok0 AS (
-  SELECT doc_id, unnest(arr) AS tok, generate_subscripts(arr, 1) AS i FROM raw
-), toks AS (
-  SELECT doc_id, tok, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS INT) AS pos
-  FROM tok0 WHERE tok <> ''
-), win AS (
-  SELECT doc_id,
-    string_agg(tok, ' ') OVER (PARTITION BY doc_id ORDER BY pos
-                               ROWS BETWEEN CURRENT ROW AND 11 FOLLOWING) AS wtxt,
-    count(*) OVER (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN CURRENT ROW AND 11 FOLLOWING) AS n
-  FROM toks
-), w2 AS (SELECT doc_id, wtxt FROM win WHERE n = 12),
-freq AS (SELECT wtxt, count(DISTINCT doc_id) AS nd FROM w2 GROUP BY 1)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-  CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_windows,
-  round(sum(CASE WHEN nd >= 2 THEN 1.0 ELSE 0.0 END) / count(*), 6) AS dup_frac
-FROM w2 JOIN freq USING (wtxt) GROUP BY 1
-"""
-    pr_sql = """
-WITH doc100 AS (SELECT doc_id FROM documents WHERE doc_id < 100),
-links AS (
-  SELECT d.doc_id AS src, (d.doc_id * 7 + j.j) % 100 AS dst
-  FROM doc100 d CROSS JOIN (SELECT unnest(range(1, 4)) AS j) j
-  WHERE j.j <= d.doc_id % 3 + 1 AND (d.doc_id * 7 + j.j) % 100 <> d.doc_id
-),
-edges AS (SELECT DISTINCT src, dst FROM links),
-outd AS (SELECT src, count(*) AS odeg FROM edges GROUP BY 1),
-r0 AS (SELECT doc_id AS node, 0.01 AS r FROM doc100)"""
-    for _t in range(1, 6):
-        pr_sql += f""",
-r{_t} AS (
-  SELECT n.doc_id AS node,
-         0.0015 + 0.85 * coalesce(sum(r{_t - 1}.r / o.odeg), 0) AS r
-  FROM doc100 n
-  LEFT JOIN edges e ON e.dst = n.doc_id
-  LEFT JOIN r{_t - 1} ON r{_t - 1}.node = e.src
-  LEFT JOIN outd o ON o.src = e.src
-  GROUP BY 1
-)"""
-    o["web_pagerank"] = pr_sql + """
-SELECT CAST(row_number() OVER (ORDER BY round(r, 6) DESC, node) AS INT) AS pr_rank,
-       node AS doc_id, round(r, 6) AS pagerank
-FROM r5
-"""
-    o["ev_window_counts"] = """
-SELECT time_bucket(INTERVAL '5 minutes', ts) AS ws, event_type,
-       CAST(count(*) AS BIGINT) AS n, round(sum(value), 4) AS sv
-FROM events GROUP BY 1, 2
-"""
-    o["ev_sessionize"] = """
-WITH o AS (
-  SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
-  FROM events
-)
-SELECT user_id,
-       CAST(sum(CASE WHEN pts IS NULL OR ts - pts > INTERVAL '30 minutes' THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-FROM o GROUP BY 1
 """
     return o

@@ -16,8 +16,8 @@ the public format spec (RFC 9639) —
 
 The encoder writes CONSTANT/VERBATIM/FIXED/LPC subframes with real Rice
 coding and real CRCs so every decoder path round-trips. Perceptual codecs
-(MP3 audio data, AAC, Vorbis/Opus) need psychoacoustic filterbanks and
-stay the honest boundary (MP3 *frame headers* are parsed in mp3.py).
+(MP3, AAC, Vorbis/Opus) need psychoacoustic filterbanks and stay the
+honest boundary.
 
 The reference engine treats audio as opaque blobs; this codec is part of
 the training-data-pipeline extension surface.

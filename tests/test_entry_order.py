@@ -30,3 +30,9 @@ def test_no_reports_keeps_registration_order(tmp_path, monkeypatch):
 
 def test_every_query_has_an_oracle():
     assert set(E.build_queries()) == set(E.build_oracles())
+
+
+def test_bench_headline_is_registered():
+    import bench
+
+    assert set(bench.HEADLINE) <= set(E.build_queries())

@@ -161,14 +161,3 @@ def test_blocks_doc_sorted_and_stats(spark, tmp_path):
         assert (np.diff(docs) > 0).all(), "docs not strictly ascending"
         assert docs[0] == r["first_doc"] and docs[-1] == r["last_doc"]
 
-
-def test_hp_planes_scaling_rule():
-    # pinned fixture floor; log-scaling above it (r3 verdict item 7)
-    from blacklab_spark.entry_queries import hp_planes_for
-
-    assert hp_planes_for(0) == 6
-    assert hp_planes_for(50_000) == 6
-    assert hp_planes_for(1_000_000) == 10
-    assert hp_planes_for(10**9) == 20
-    # parameterized bucket target
-    assert hp_planes_for(10**9, target_bucket=10_000) == 17
