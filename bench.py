@@ -55,19 +55,11 @@ def main() -> None:
     sf = SF_DIR.rstrip("/").split("sf")[-1]
 
     # ---- timed fresh index build (docs/sec) ----
-    from pyspark.sql import functions as F
-
     from blacklab_spark.build import build_index
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_docs = docs.count()
-    pages = docs.select(
-        F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        "text",
-        F.col("source").alias("lang"),
-    )
+    pages = entry_queries.plain_pages(docs)
     # Untimed warm-up build (100 docs): triggers JVM JIT + codegen for every
     # build stage so the timed reps measure steady-state engine throughput —
     # the quantity that matters at cluster scale — instead of one-time JVM
@@ -92,15 +84,7 @@ def main() -> None:
     # annotations + relations — what get_index and the correctness gate
     # use). Kept separate so build_index stays comparable with r1-r3;
     # the relation headline queries (ix_rel_full) need this index.
-    full_pages = docs.select(
-        F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
-        F.make_date(
-            (F.lit(1970) + F.col("doc_id") % 60).cast("int"), F.lit(1), F.lit(1)
-        ).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        "text",
-        F.col("source").alias("lang"),
-    )
+    full_pages = entry_queries.dated_pages(docs)
     out_full = f"{out}_full"
     full_walls = []
     for _ in range(2):

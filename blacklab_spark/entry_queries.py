@@ -117,6 +117,33 @@ def _toks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IX_CACHE: dict[str, object] = {}
 
 
+def plain_pages(docs: DataFrame) -> DataFrame:
+    """documents -> pages (doc:// urls keep doc_id recoverable as the dense
+    rank; the engine metadata-filter field carries the documents `source`)."""
+    return docs.select(
+        F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+        F.col("source").alias("lang"),
+    )
+
+
+def dated_pages(docs: DataFrame) -> DataFrame:
+    """plain_pages with a deterministic per-doc timestamp: year 1970 +
+    doc_id % 60 (drives the decade grouping key; oracle mirrors the
+    arithmetic)."""
+    return docs.select(
+        F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
+        F.make_date(
+            (F.lit(1970) + F.col("doc_id") % 60).cast("int"), F.lit(1), F.lit(1)
+        ).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+        F.col("source").alias("lang"),
+    )
+
+
 def _cached_index(spark, sf_dir, variant, dir_prefix, meta_ok, make_pages, **build_kw):
     """Shared build-or-reuse scaffolding for the driver-facing indexes: one
     on-disk index per (variant, sf_dir), rebuilt when meta.json is missing
@@ -150,25 +177,11 @@ def _cached_index(spark, sf_dir, variant, dir_prefix, meta_ok, make_pages, **bui
 
 
 def get_index(spark: SparkSession, sf_dir: str):
-    def pages(docs):
-        return docs.select(
-            F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
-            # deterministic per-doc timestamp: year 1970 + doc_id % 60
-            # (drives the decade grouping key; oracle mirrors the arithmetic)
-            F.make_date(
-                (F.lit(1970) + F.col("doc_id") % 60).cast("int"), F.lit(1), F.lit(1)
-            ).cast("timestamp").alias("warc_ts"),
-            F.lit(None).cast("binary").alias("html"),
-            "text",
-            # engine metadata-filter field carries the documents `source`
-            F.col("source").alias("lang"),
-        )
-
     return _cached_index(
         spark, sf_dir, "", "blacklab_ix",
         lambda m: m.get("annotations") == ["word", "lemma", "pos"]
         and m.get("index_relations") is True,
-        pages,
+        dated_pages,
         annotations=("word", "lemma", "pos"), index_relations=True,
     )
 
@@ -326,20 +339,10 @@ def get_merged_index(spark: SparkSession, sf_dir: str):
         import shutil
 
         shutil.rmtree(out, ignore_errors=True)
-
-        def pages(d):
-            return d.select(
-                F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
-                F.lit(None).cast("timestamp").alias("warc_ts"),
-                F.lit(None).cast("binary").alias("html"),
-                "text",
-                F.col("source").alias("lang"),
-            )
-
         h = n // 2
-        build_index(spark, pages(docs.filter(F.col("doc_id") < h)), out, n_shards=4)
+        build_index(spark, plain_pages(docs.filter(F.col("doc_id") < h)), out, n_shards=4)
         add_segment(
-            spark, pages(docs.filter(F.col("doc_id") >= h)), out, "seg1", n_shards=4
+            spark, plain_pages(docs.filter(F.col("doc_id") >= h)), out, "seg1", n_shards=4
         )
         merge_segments(spark, out)
     ix = Index(spark, out)

@@ -129,9 +129,3 @@ def pages_pdf(tier: str, n: int | None = None) -> pd.DataFrame:
     """Local (oracle-side) generation — same per-doc function, so identical."""
     n = n or TIER_N[tier]
     return gen_pages_pdf(np.arange(n), tier)
-
-
-def write_pages(spark, tier: str, out_dir: str, n: int | None = None) -> str:
-    path = f"{out_dir}/pages_{tier}"
-    pages_df(spark, tier, n).write.mode("overwrite").parquet(path)
-    return path

@@ -957,16 +957,6 @@ class Index:
             )
         )
 
-    def seq_hits(self, hit_dfs: list[DataFrame], gap_min: int = 0, gap_max: int = 0) -> DataFrame:
-        """General sequence over arbitrary hit frames (SpanQuerySequence);
-        the term-only fast path is phrase_hits (posting intersection)."""
-        from . import spans as S
-
-        out = hit_dfs[0]
-        for nxt in hit_dfs[1:]:
-            out = S.sequence(out, nxt, gap_min, gap_max)
-        return out
-
     # ---------------------------------------------------- forward-index ops --
     def kwic(self, hits: DataFrame, context: int = 5, col: str = "tokens") -> DataFrame:
         """Keyword-in-context from the docs token arrays — the reference reads
@@ -1327,6 +1317,14 @@ def _term_contribs(qidx, doc, tf, dl, idf: dict, avgdl: float, quantize: bool):
     return {int(q): (doc_g[qidx_g == q], contrib[qidx_g == q]) for q in np.unique(qidx_g)}
 
 
+def _allowed_blocks(pdf: pd.DataFrame, allowed: np.ndarray) -> pd.DataFrame:
+    """The posting blocks whose [first_doc, last_doc] range holds at least
+    one of `allowed` (sorted doc ids)."""
+    fd = pdf["first_doc"].to_numpy(np.int64)
+    ld = pdf["last_doc"].to_numpy(np.int64)
+    return pdf[np.searchsorted(allowed, ld, "right") > np.searchsorted(allowed, fd, "left")]
+
+
 def _wand_multi(
     pdf: pd.DataFrame,
     idf: dict,
@@ -1361,15 +1359,10 @@ def _wand_multi(
     Block bounds stay unmasked — an upper bound over all docs of a block
     upper-bounds its allowed subset."""
     if allowed is not None and len(pdf):
-        fd0 = pdf["first_doc"].to_numpy(np.int64)
-        ld0 = pdf["last_doc"].to_numpy(np.int64)
-        has = np.searchsorted(allowed, ld0, side="right") > np.searchsorted(
-            allowed, fd0, side="left"
-        )
-        pdf = pdf[has]
-        if len(pdf) == 0:
-            z = np.empty(0, np.int64)
-            return z, np.empty(0, np.float64), 0, 0
+        pdf = _allowed_blocks(pdf, allowed)
+    if len(pdf) == 0:
+        z = np.empty(0, np.int64)
+        return z, np.empty(0, np.float64), 0, 0
     qidx = pdf["qidx"].to_numpy(np.int64)
     tids = pdf["term_id"].to_numpy(np.int64)
     mt = pdf["max_tf"].to_numpy(np.float64)
@@ -1536,10 +1529,11 @@ def _score_kernel(idf: dict, avgdl: float, k: int, quantize: bool, n_and: int = 
             dc = [delta_decode(decode_ints(b)) for b in pdf["doc_ids"]]
             and_ids = _and_docs(np.repeat(qx, [len(d) for d in dc]), np.concatenate(dc), n_and)
             allowed = and_ids if allowed is None else np.intersect1d(allowed, and_ids)
+        if len(idf) > 1:
+            d, s, _, _ = _wand_multi(pdf, idf, avgdl, k, quantize, allowed=allowed)
+            return _local_topk(d, s, k)
         if allowed is not None and len(pdf):
-            fd = pdf["first_doc"].to_numpy(np.int64)
-            ld = pdf["last_doc"].to_numpy(np.int64)
-            pdf = pdf[np.searchsorted(allowed, ld, "right") > np.searchsorted(allowed, fd, "left")]
+            pdf = _allowed_blocks(pdf, allowed)
         if len(pdf) == 0:
             return pd.DataFrame(columns=["doc_id", "score"])
 
@@ -1550,9 +1544,6 @@ def _score_kernel(idf: dict, avgdl: float, k: int, quantize: bool, n_and: int = 
                 qx, dc, tf, dl = qx[m], dc[m], tf[m], dl[m]
             return _score_arrays(qx, dc, tf, dl, idf, avgdl, quantize)
 
-        if len(idf) > 1:
-            d, s, _, _ = _wand_multi(pdf, idf, avgdl, k, quantize, allowed=allowed)
-            return _local_topk(d, s, k)
         # block-max skipping is valid only when each doc appears in exactly one
         # block: one query term AND one surface variant (one posting list)
         if pdf["term_id"].nunique() > 1:

@@ -356,16 +356,6 @@ def concordances(
     return out
 
 
-def group_docs_by_decade(ix: Index, doc_ids: DataFrame, ts_field: str = "warc_ts") -> DataFrame:
-    """Doc counts per decade of a timestamp metadata field (reference:
-    DocPropertyDecade.java:11-15)."""
-    d = doc_ids.select("doc_id").dropDuplicates().join(
-        ix.docs.select("doc_id", ts_field), "doc_id"
-    )
-    decade = (F.floor(F.year(ts_field) / 10) * 10).cast("long").alias("decade")
-    return d.groupBy(decade).agg(F.countDistinct("doc_id").alias("n_docs"))
-
-
 def group_hits_by_decade(ix: Index, hits: DataFrame, ts_field: str = "warc_ts") -> DataFrame:
     """Hit counts per decade of the containing document's timestamp field
     (reference: HitPropertyDocumentDecade.java:10-14)."""

@@ -1178,19 +1178,6 @@ def enrich_pages_with_cmdi(
     return out
 
 
-def pages_from_documents_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver's synthetic `documents` table -> pages (doc:// urls keep
-    doc_id recoverable as the dense rank)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        F.format_string("doc://%012d", F.col("doc_id")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        "text",
-        F.col("source").alias("lang"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Input-format registry (reference: DocumentFormats + formats/ resource dir,
 # served by RequestHandlerListInputFormats / ResultListInputFormats)

@@ -182,15 +182,6 @@ def tag_spans_one(html_str: str, tags=DEFAULT_TAGS) -> list[tuple[str, int, int,
     return out
 
 
-def tag_spans_series(html: pd.Series, tags=DEFAULT_TAGS) -> pd.Series:
-    return html.map(
-        lambda b: tag_spans_one(
-            b.decode("utf-8", "replace") if isinstance(b, (bytes, bytearray)) else (b or ""),
-            tags,
-        )
-    )
-
-
 def token_offsets_series(texts: pd.Series) -> pd.Series:
     """Per-doc char start offset of every token (the token->char map the
     reference keeps implicitly in its content store; enables char-exact
