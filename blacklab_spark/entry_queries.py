@@ -23,10 +23,14 @@ ranking orders by the ROUNDED value with a deterministic id tiebreak.
 
 from __future__ import annotations
 
+import ast
 import glob
+import hashlib
+import inspect
 import json
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,12 +148,71 @@ def dated_pages(docs: DataFrame) -> DataFrame:
     )
 
 
-def _cached_index(spark, sf_dir, variant, dir_prefix, meta_ok, make_pages, **build_kw):
+def _imported_sources(module: str) -> tuple[str, ...]:
+    """Files of the package module `module` and of every package module it
+    imports, directly or through others. Imports are read with `ast`, lazy
+    ones inside functions included; a relative import also runs the
+    package's `__init__.py`."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    seen: set[str] = set()
+    todo = [module]
+    while todo:
+        name = todo.pop()
+        path = os.path.join(pkg, f"{name}.py")
+        if name in seen or not os.path.exists(path):
+            continue  # `from . import K1` names an attribute, not a module
+        seen.add(name)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level == 1:
+                todo.append("__init__")
+                todo += [node.module] if node.module else [a.name for a in node.names]
+    return tuple(os.path.join(pkg, f"{n}.py") for n in sorted(seen))
+
+
+# the code that decides what a build writes into an index: build.py and
+# every package module it imports (rank's dense ids, storage's writers, the
+# codecs, the tokenizer, K1/B for meta.json, ...)
+_KEY_SOURCES = _imported_sources("build")
+
+
+def index_key(build_kw: dict, *parts: str) -> str:
+    """Hex digest of what a cached index is built from: the build keyword
+    arguments, the extra `parts` (the source of the page projection or of
+    the build steps, the input's doc count) and the source bytes of the
+    modules that write an index."""
+    h = hashlib.sha256(json.dumps(build_kw, sort_keys=True).encode())
+    for part in parts:
+        h.update(b"\0" + part.encode())
+    for path in _KEY_SOURCES:
+        with open(path, "rb") as f:
+            h.update(b"\0" + f.read())
+    return h.hexdigest()
+
+
+def _reuse_or_build(out: str, key: str, build) -> None:
+    """Run build() into a fresh `out` unless the index there was built
+    under `key` (its build_key.json sidecar). The key is written only
+    after the build returns, so a build that failed part-way is rebuilt."""
+    from .storage import write_json
+
+    key_path = os.path.join(out, "build_key.json")
+    if os.path.exists(key_path):
+        with open(key_path) as f:
+            if json.load(f) == key:
+                return
+    shutil.rmtree(out, ignore_errors=True)
+    build()
+    write_json(key_path, key)
+
+
+def _cached_index(spark, sf_dir, variant, dir_prefix, make_pages, **build_kw):
     """Shared build-or-reuse scaffolding for the driver-facing indexes: one
-    on-disk index per (variant, sf_dir), rebuilt when meta.json is missing
-    or fails `meta_ok(meta, n_docs)` (n_docs/format_version are always
-    checked)."""
-    from .build import FORMAT_VERSION, build_index
+    on-disk index per (variant, sf_dir), rebuilt when the build arguments,
+    the page projection, the doc count or the index-writing code changed
+    (index_key)."""
+    from .build import build_index
     from .query import Index
 
     key = (f"{variant}:" if variant else "") + os.path.abspath(sf_dir)
@@ -158,19 +221,11 @@ def _cached_index(spark, sf_dir, variant, dir_prefix, meta_ok, make_pages, **bui
     tag = os.path.abspath(sf_dir).strip("/").replace("/", "_")
     out = f"/tmp/{dir_prefix}_{tag}"
     docs = _docs(spark, sf_dir)
-    n = docs.count()
-    meta_path = f"{out}/segments/seg0/meta.json"
-    ok = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            m = json.load(f)
-        ok = (
-            m.get("n_docs") == n
-            and m.get("format_version") == FORMAT_VERSION
-            and meta_ok(m)
-        )
-    if not ok:
-        build_index(spark, make_pages(docs), out, n_shards=8, **build_kw)
+    _reuse_or_build(
+        out,
+        index_key(build_kw, inspect.getsource(make_pages), str(docs.count())),
+        lambda: build_index(spark, make_pages(docs), out, n_shards=8, **build_kw),
+    )
     ix = Index(spark, out)
     _IX_CACHE[key] = ix
     return ix
@@ -178,10 +233,7 @@ def _cached_index(spark, sf_dir, variant, dir_prefix, meta_ok, make_pages, **bui
 
 def get_index(spark: SparkSession, sf_dir: str):
     return _cached_index(
-        spark, sf_dir, "", "blacklab_ix",
-        lambda m: m.get("annotations") == ["word", "lemma", "pos"]
-        and m.get("index_relations") is True,
-        dated_pages,
+        spark, sf_dir, "", "blacklab_ix", dated_pages,
         annotations=("word", "lemma", "pos"), index_relations=True,
     )
 
@@ -222,9 +274,7 @@ def get_tagged_index(spark: SparkSession, sf_dir: str):
         )
 
     return _cached_index(
-        spark, sf_dir, "tagged", "blacklab_ixtag",
-        lambda m: m.get("index_tags") == ["sec"],
-        make_pages, index_tags=("sec",),
+        spark, sf_dir, "tagged", "blacklab_ixtag", make_pages, index_tags=("sec",)
     )
 
 
@@ -259,11 +309,7 @@ def get_parallel_index(spark: SparkSession, sf_dir: str):
             ).alias("relations"),
         )
 
-    return _cached_index(
-        spark, sf_dir, "parallel", "blacklab_ixpar",
-        lambda m: m.get("parallel_fields") == ["nl"],
-        make_pages,
-    )
+    return _cached_index(spark, sf_dir, "parallel", "blacklab_ixpar", make_pages)
 
 
 def get_relmulti_index(spark: SparkSession, sf_dir: str):
@@ -304,13 +350,7 @@ def get_relmulti_index(spark: SparkSession, sf_dir: str):
             rels.alias("relations"),
         )
 
-    return _cached_index(
-        spark, sf_dir, "relmulti", "blacklab_ixrm",
-        lambda m: m.get("index_relations") is True
-        and m.get("annotated_input") is True
-        and not m.get("parallel_fields"),
-        make_pages,
-    )
+    return _cached_index(spark, sf_dir, "relmulti", "blacklab_ixrm", make_pages)
 
 
 def get_merged_index(spark: SparkSession, sf_dir: str):
@@ -319,7 +359,7 @@ def get_merged_index(spark: SparkSession, sf_dir: str):
     end-to-end path for segment merging. Engine doc ids equal
     documents.doc_id: segment A holds the url-rank-lower half (ids 0..h-1),
     segment B builds with base_doc_id=h."""
-    from .build import FORMAT_VERSION, add_segment, build_index, merge_segments
+    from .build import add_segment, build_index, merge_segments
     from .query import Index
 
     key = "mergedix:" + os.path.abspath(sf_dir)
@@ -329,22 +369,20 @@ def get_merged_index(spark: SparkSession, sf_dir: str):
     out = f"/tmp/blacklab_ixmg_{tag}"
     docs = _docs(spark, sf_dir)
     n = docs.count()
-    meta_path = f"{out}/segments/merged/meta.json"
-    ok = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            m = json.load(f)
-        ok = m.get("n_docs") == n and m.get("format_version") == FORMAT_VERSION
-    if not ok:
-        import shutil
 
-        shutil.rmtree(out, ignore_errors=True)
+    def build():
         h = n // 2
         build_index(spark, plain_pages(docs.filter(F.col("doc_id") < h)), out, n_shards=4)
         add_segment(
             spark, plain_pages(docs.filter(F.col("doc_id") >= h)), out, "seg1", n_shards=4
         )
         merge_segments(spark, out)
+
+    _reuse_or_build(
+        out,
+        index_key({}, inspect.getsource(plain_pages), inspect.getsource(build), str(n)),
+        build,
+    )
     ix = Index(spark, out)
     _IX_CACHE[key] = ix
     return ix
@@ -388,13 +426,7 @@ def get_sens_index(spark: SparkSession, sf_dir: str):
             toks.alias("tokens"),
         )
 
-    return _cached_index(
-        spark, sf_dir, "sens", "blacklab_ixsens",
-        lambda m: m.get("annotated_input") is True
-        and m.get("annotations") == ["word"]
-        and not m.get("index_relations"),
-        make_pages,
-    )
+    return _cached_index(spark, sf_dir, "sens", "blacklab_ixsens", make_pages)
 
 
 def get_mv_index(spark: SparkSession, sf_dir: str):
@@ -417,17 +449,7 @@ def get_mv_index(spark: SparkSession, sf_dir: str):
             toks.alias("tokens"),
         )
 
-    return _cached_index(
-        spark, sf_dir, "mv", "blacklab_ixmv",
-        # multi_value flag required: pre-flag cached builds must be redone
-        # so queries see meta.multi_value and apply span dedupe
-        lambda m: m.get("annotated_input") is True
-        and m.get("annotations") == ["word"]
-        and m.get("multi_value") is True
-        and not m.get("index_relations")
-        and not m.get("parallel_fields"),
-        make_pages,
-    )
+    return _cached_index(spark, sf_dir, "mv", "blacklab_ixmv", make_pages)
 
 
 # the same variant construction in DuckDB SQL (accent first, then case)

@@ -10,12 +10,15 @@ kernel runs per shard with NO shuffle of posting data. Global top-k is a
 `orderBy().limit(k)` over n_shards × k candidate rows.
 
 The fixed cost of a ranked query is its Spark jobs and Python stages, not its
-data, so nothing on the blocking path of one runs a job or a Python stage
-that does not score postings: query terms resolve on the driver from the
-term-sorted terms files (pyarrow, Segment.lookup), each posting row gets its
-query index from one literal map expression, the head is ranked on the JVM
-(rank.rank_head), and topk_and intersects its AND set inside the scoring
-kernel — one Python stage per ranked term query.
+data. Query terms resolve on the driver from the term-sorted terms files
+(pyarrow, Segment.lookup), which also gives each term's df, so the posting
+blocks a ranked term query (topk, topk_and) will read are known before any
+job runs. A small one — at most DRIVER_BLOCKS blocks — runs no Spark job:
+its postings are read on the driver with pyarrow and scored by the same
+shard kernel, and it returns a local relation. Above the budget it runs one
+Python stage: each posting row gets its query index from one literal map
+expression, topk_and intersects its AND set inside the scoring kernel, and
+the head is ranked on the JVM (rank.rank_head).
 
 Sensitivity: postings are built over surface terms; an insensitive (folded)
 query expands to the OR of its surface variants via the terms dict — the same
@@ -44,6 +47,24 @@ from .tokenize import accent_fold_token, case_fold_token, fold_token
 
 HITS_SCHEMA = "doc_id long, start int, end int"
 SCORE_SCHEMA = "doc_id long, score double"
+RANKED_SCHEMA = "rank int, doc_id long, url string, score double"
+
+# A ranked term query (topk, topk_and) whose estimated posting blocks number
+# at most this runs on the driver (Index._on_driver): pyarrow reads and the
+# same _score_kernel, no Spark job. Above it the Spark plan spreads the
+# decoding over tasks. Measured crossover on a 4-CPU host (local[4], 400k
+# docs in 128 shards, OR and AND of 2-8 head terms of ~2,960 blocks each):
+# the driver path costs about 0.25 ms per block, the Spark plan 2-3.5 s
+# almost flat, and they meet near 8,800 blocks (5,924 blocks: 1.4-2.5 s vs
+# 2.3-3.5 s; 11,846 blocks: 2.7-4.1 s vs 2.1-2.9 s). More executor cores
+# lower the Spark plan's cost, and the crossover with it.
+DRIVER_BLOCKS = 8192
+
+# the posting columns a score kernel reads (no positions)
+_SCORE_COLS = [
+    "shard", "term_id", "doc_count", "first_doc", "last_doc",
+    "max_tf", "min_dl", "doc_ids", "tfs", "dls",
+]
 
 # quantized doc-length lookup (Lucene SmallFloat byte norms, see oracle)
 _QTABLE = np.unique(np.array([byte4_to_int(b) for b in range(256)], dtype=np.int64))
@@ -62,21 +83,29 @@ class Segment:
     docs: DataFrame
     terms: DataFrame
     path: str
-    _terms_ds: object = field(default=None, repr=False)
+    _datasets: dict = field(default_factory=dict, repr=False)
+
+    def read(self, table: str, columns: list[str], flt) -> pd.DataFrame:
+        """Rows of one of the segment's tables ("terms", "postings" or
+        "docs") that match the pyarrow filter `flt`, read on the driver with
+        pyarrow: no Spark job. Each dataset is opened once per Segment
+        (reload() makes new Segments)."""
+        ds = self._datasets.get(table)
+        if ds is None:
+            import pyarrow.dataset as pads
+
+            ds = self._datasets[table] = pads.dataset(f"{self.path}/{table}", format="parquet")
+        return ds.to_table(columns=columns, filter=flt).to_pandas()
 
     def lookup(self, annot: str, col: str, keys, columns: list[str]) -> pd.DataFrame:
-        """Terms-dict rows with `annot` and `col` in `keys`, read on the
-        driver with pyarrow: no Spark job. The files are written in
-        (annot, term_fold, term) order, so row-group statistics prune the
-        read to O(query terms) at any dictionary size; an unsorted file
-        still answers correctly, only with less pruning. The dataset is
-        opened once per Segment (reload() makes new Segments)."""
+        """Terms-dict rows with `annot` and `col` in `keys`. The files are
+        written in (annot, term_fold, term) order, so row-group statistics
+        prune the read to O(query terms) at any dictionary size; an unsorted
+        file still answers correctly, only with less pruning."""
         import pyarrow.dataset as pads
 
-        if self._terms_ds is None:
-            self._terms_ds = pads.dataset(f"{self.path}/terms", format="parquet")
         flt = (pads.field("annot") == annot) & pads.field(col).isin(list(keys))
-        return self._terms_ds.to_table(columns=columns, filter=flt).to_pandas()
+        return self.read("terms", columns, flt)
 
 
 # live Index instances per index dir — segment merges delete source segment
@@ -275,10 +304,7 @@ class Index:
         ]
 
     def _postings_for(self, seg: Segment, tids: pd.DataFrame, need_pos: bool) -> DataFrame:
-        cols = [
-            "shard", "term_id", "doc_count", "first_doc", "last_doc",
-            "max_tf", "min_dl", "doc_ids", "tfs", "dls",
-        ] + (["positions"] if need_pos else [])
+        cols = _SCORE_COLS + (["positions"] if need_pos else [])
         qpos: dict[int, list[int]] = {}
         for t, q in zip(tids["term_id"], tids["qidx"]):
             qpos.setdefault(int(t), []).append(int(q))
@@ -529,12 +555,17 @@ class Index:
         where_lang: str | None = None,
     ) -> DataFrame:
         """BM25 top-k: shard-local scoring kernels (block-max skipping for
-        single-term queries) + global orderBy(score desc, doc_id).limit(k)."""
+        single-term queries) + global (score desc, doc_id) top-k. Runs on
+        the driver when its posting blocks fit DRIVER_BLOCKS (_on_driver)."""
+        scored = [
+            (seg, tids, _score_kernel(self._idf(tids), self.avgdl, k, quantize))
+            for seg, tids in zip(self.segments, self.resolve(terms, fold))
+            if len(tids)
+        ]
+        if self._on_driver(scored, where_lang):
+            return self._driver_topk(scored, k, where_lang)
         parts = []
-        for seg, tids in zip(self.segments, self.resolve(terms, fold)):
-            if len(tids) == 0:
-                continue
-            kern = _score_kernel(self._idf(tids), self.avgdl, k, quantize)
+        for seg, tids, kern in scored:
             p = self._postings_for(seg, tids, False).groupby("shard")
             if where_lang is not None:
                 allowed = seg.docs.filter(F.col("lang") == where_lang).select("shard", "doc_id")
@@ -552,15 +583,20 @@ class Index:
         shard: the scoring kernel intersects it from the postings it was
         handed and walks the blocks restricted to it (the block-max walk
         stays exact under a doc filter — see _score_kernel). One Python
-        stage, no join with docs."""
+        stage, no join with docs; none when it runs on the driver."""
         n_q = len({fold_token(t) if fold else t for t in terms})
-        parts = []
-        for seg, tids in zip(self.segments, self.resolve(terms, fold)):
-            if len(tids) == 0 or tids["qidx"].nunique() < n_q:
-                continue  # a term is absent from this segment: no AND docs
-            kern = _score_kernel(self._idf(tids), self.avgdl, k, quantize, n_and=n_q)
-            p = self._postings_for(seg, tids, False)
-            parts.append(p.groupby("shard").applyInPandas(kern, SCORE_SCHEMA))
+        scored = [
+            (seg, tids, _score_kernel(self._idf(tids), self.avgdl, k, quantize, n_and=n_q))
+            for seg, tids in zip(self.segments, self.resolve(terms, fold))
+            # a term absent from a segment leaves it no AND docs
+            if len(tids) and tids["qidx"].nunique() == n_q
+        ]
+        if self._on_driver(scored, None):
+            return self._driver_topk(scored, k, None)
+        parts = [
+            self._postings_for(seg, tids, False).groupby("shard").applyInPandas(kern, SCORE_SCHEMA)
+            for seg, tids, kern in scored
+        ]
         return self._ranked(self._union(parts, SCORE_SCHEMA), k)
 
     def _idf(self, tids: pd.DataFrame) -> dict:
@@ -569,6 +605,63 @@ class Index:
             q: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5)))
             for q, d in tids.attrs["gdf"].items()
         }
+
+    @staticmethod
+    def _on_driver(scored: list, where_lang: str | None) -> bool:
+        """The cost rule of a ranked term query: its posting blocks,
+        estimated from the resolved terms' df per segment (plus a scan of
+        the segment's docs under a lang filter), fit DRIVER_BLOCKS."""
+        blocks = 0.0
+        for seg, tids, _ in scored:
+            bs = seg.meta["block_size"]
+            blocks += float(np.ceil(tids["df"].to_numpy(np.float64) / bs).sum())
+            if where_lang is not None:
+                blocks += seg.meta["n_docs"] / bs
+        return blocks <= DRIVER_BLOCKS
+
+    def _driver_topk(self, scored: list, k: int, where_lang: str | None) -> DataFrame:
+        """The Spark plan's work done in process: each segment's query
+        postings read with pyarrow, `qidx` attached from the resolve rows,
+        the same _score_kernel called once per shard, then one
+        (score desc, doc_id asc) sort over every shard's candidates (a
+        shard holding <= k rows returns them unsorted) and the url lookup.
+        The result is a local relation: collect() runs no Spark job."""
+        import pyarrow.dataset as pads
+
+        cands = []
+        for si, (seg, tids, kern) in enumerate(scored):
+            tid = tids[["term_id", "qidx"]]
+            post = seg.read(
+                "postings", _SCORE_COLS, pads.field("term_id").isin(tid["term_id"].tolist())
+            ).merge(tid, on="term_id")
+            if where_lang is not None:
+                allowed = seg.read("docs", ["shard", "doc_id"], pads.field("lang") == where_lang)
+                by_shard = dict(tuple(allowed.groupby("shard")))
+            for shard, rows in post.groupby("shard", sort=False):
+                if where_lang is None:
+                    out = kern(rows)
+                else:
+                    out = kern(rows, by_shard.get(shard, allowed.iloc[:0]))
+                if len(out):
+                    cands.append(out.assign(seg=si))
+        if not cands:
+            # an empty pandas frame would become an RDD scan (one job);
+            # limit(0) plans as an empty local relation
+            return self.spark.createDataFrame([], RANKED_SCHEMA).limit(0)
+        top = pd.concat(cands)
+        order = np.lexsort((top["doc_id"].to_numpy(np.int64), -top["score"].to_numpy(np.float64)))
+        top = top.iloc[order[:k]]
+        top = top.assign(rank=np.arange(1, len(top) + 1, dtype=np.int32))
+        url = pd.concat([
+            scored[si][0].read(
+                "docs", ["doc_id", "url"], pads.field("doc_id").isin(grp["doc_id"].tolist())
+            )
+            for si, grp in top.groupby("seg")
+        ])
+        pdf = top.merge(url, on="doc_id")
+        return self.spark.createDataFrame(
+            pdf.sort_values("rank")[["rank", "doc_id", "url", "score"]], RANKED_SCHEMA
+        )
 
     def _ranked(self, scored: DataFrame, k: int) -> DataFrame:
         """The ranked-query tail: global (score desc, doc_id) top-k ranked

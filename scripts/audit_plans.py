@@ -12,6 +12,11 @@ Asserts:
    CartesianProduct (BroadcastNestedLoopJoin only for a 1-row broadcast)
 6. ranked term queries (topk, topk_and): exactly one Python stage, the
    shard scoring kernel, and none above TakeOrderedAndProject
+7. a ranked term query under the driver budget (query.DRIVER_BLOCKS) is a
+   local relation: no parquet scan, no Python stage
+
+Checks 1, 2, 5c and 6 audit the Spark plan of a ranked term query, so they
+build their frames with that plan forced (DRIVER_BLOCKS = 0).
 """
 
 from __future__ import annotations
@@ -23,7 +28,9 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 import re  # noqa: E402
+from contextlib import contextmanager  # noqa: E402
 
+from blacklab_spark import query as Q  # noqa: E402
 from blacklab_spark.session import get_spark  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -31,6 +38,16 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+@contextmanager
+def spark_path():
+    """Ranked term queries built inside take the Spark plan at any size."""
+    budget, Q.DRIVER_BLOCKS = Q.DRIVER_BLOCKS, 0
+    try:
+        yield
+    finally:
+        Q.DRIVER_BLOCKS = budget
 
 
 def one_python_stage_below_topk(plan: str) -> bool:
@@ -68,7 +85,8 @@ def main() -> None:
             failures.append((name, detail))
 
     # 1. pushdown + column pruning on the scoring path
-    p = plan_of(ix.topk(["table"], k=10))
+    with spark_path():
+        p = plan_of(ix.topk(["table"], k=10))
     check("topk term_id pushdown", "PushedFilters: [" in p and "term_id" in p.split("PushedFilters:")[1][:200], p[:500])
     scan = [seg for seg in p.split("Scan parquet") if "postings" in seg[:300]]
     check("topk positions pruned", all("positions" not in s.split("ReadSchema")[1][:400] for s in scan if "ReadSchema" in s))
@@ -79,9 +97,11 @@ def main() -> None:
     from blacklab_spark import results as R
 
     hits = ix.term_hits("table")
+    with spark_path():
+        topk = ix.topk(["table", "vector"], k=10)
     for nm, df in (
         ("window_hits", R.window_hits(hits, 20, 20)),
-        ("topk", ix.topk(["table", "vector"], k=10)),
+        ("topk", topk),
         ("sorted_window", qs["rs_sorted_window"](spark, SF)),
     ):
         p = plan_of(df)
@@ -131,7 +151,8 @@ def main() -> None:
         and n_bnlj <= 1,
         p[:800],
     )
-    p = plan_of(ix.topk_and(["table", "vector"], k=10))
+    with spark_path():
+        p = plan_of(ix.topk_and(["table", "vector"], k=10))
     check(
         "topk_and no cartesian, no global window",
         "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
@@ -141,14 +162,26 @@ def main() -> None:
 
     # 6. ranked term queries: ONE Python stage (the shard scoring kernel;
     #    topk_and's AND set is computed inside it), ranks numbered on the JVM
-    for nm, df in (
-        ("topk", ix.topk(["table"], k=10)),
-        ("topk multi-term", ix.topk(["table", "vector"], k=10)),
-        ("topk where_lang", ix.topk(["table"], k=10, where_lang="en")),
-        ("topk_and", ix.topk_and(["table", "vector"], k=10)),
-    ):
+    with spark_path():
+        frames = (
+            ("topk", ix.topk(["table"], k=10)),
+            ("topk multi-term", ix.topk(["table", "vector"], k=10)),
+            ("topk where_lang", ix.topk(["table"], k=10, where_lang="en")),
+            ("topk_and", ix.topk_and(["table", "vector"], k=10)),
+        )
+    for nm, df in frames:
         p = plan_of(df)
         check(f"{nm} one Python stage, below the top-k", one_python_stage_below_topk(p), p[:1200])
+
+    # 7. the default path of a small ranked term query: the k rows scored on
+    #    the driver, wrapped as a local relation
+    p = plan_of(ix.topk(["table"], k=10))
+    check(
+        "topk under the driver budget: local relation, no Python stage",
+        "LocalTableScan" in p and "Scan parquet" not in p
+        and "Python" not in p and "Pandas" not in p,
+        p[:600],
+    )
 
     print(f"\n{len(failures)} failures")
     spark.stop()

@@ -65,3 +65,19 @@ def tiny_index_annot(spark, tmp_path_factory):
         annotations=("word", "lemma", "pos"),
     )
     return Index(spark, out)
+
+
+@pytest.fixture
+def ranked_paths(monkeypatch):
+    """Iterate `for path in ranked_paths():` to run a test body once on each
+    ranked term query path: "driver" (query.DRIVER_BLOCKS huge: pyarrow
+    reads, no Spark job) and "spark" (DRIVER_BLOCKS = 0: the Spark plan
+    for any query that reads a posting block)."""
+    from blacklab_spark import query
+
+    def each():
+        for name, budget in (("driver", 10**18), ("spark", 0)):
+            monkeypatch.setattr(query, "DRIVER_BLOCKS", budget)
+            yield name
+
+    return each

@@ -47,7 +47,7 @@ QUERIES = [
 ]
 
 
-def test_merge_matches_multisegment(spark, two_seg_dir, tmp_path_factory):
+def test_merge_matches_multisegment(spark, two_seg_dir, tmp_path_factory, ranked_paths):
     from blacklab_spark.build import merge_segments
     from blacklab_spark.query import Index
 
@@ -65,6 +65,9 @@ def test_merge_matches_multisegment(spark, two_seg_dir, tmp_path_factory):
     assert meta["n_shards"] == 4
     for q, want in zip(QUERIES, before):
         assert hs(q(ix)) == want
+    topk = QUERIES[4]
+    for path in ranked_paths():
+        assert hs(topk(multi)) == hs(topk(ix)) == before[4], path
     # every terms file, built or merged, is in (annot, term_fold, term) order
     for seg_dir in [f"{two_seg_dir}/segments/{s.name}" for s in multi.segments] + [
         f"{merged_dir}/segments/{ix.segments[0].name}"

@@ -52,19 +52,64 @@ def test_term_lookups_run_no_spark_job(spark, tiny_index):
     assert sum(len(x) for x in rci) > 0
 
 
+RANKED = {
+    "topk": lambda ix: ix.topk(["aap"], k=3),
+    "topk_or": lambda ix: ix.topk(["aap", "fox"], k=3),
+    "topk_and": lambda ix: ix.topk_and(["aap", "noot"], k=3),
+    "topk_lang": lambda ix: ix.topk(["aap"], k=3, where_lang="en"),
+}
+
+
 @pytest.mark.parametrize(
     "name,call,budget",
     [
-        ("topk", lambda ix: ix.topk(["aap"], k=3), 3),
-        ("topk_or", lambda ix: ix.topk(["aap", "fox"], k=3), 3),
-        ("topk_and", lambda ix: ix.topk_and(["aap", "noot"], k=3), 3),
-        ("topk_lang", lambda ix: ix.topk(["aap"], k=3, where_lang="en"), 4),
+        ("topk", RANKED["topk"], 3),
+        ("topk_or", RANKED["topk_or"], 3),
+        ("topk_and", RANKED["topk_and"], 3),
+        ("topk_lang", RANKED["topk_lang"], 4),
     ],
 )
-def test_ranked_query_job_budget(spark, tiny_index, name, call, budget):
+def test_ranked_query_job_budget(spark, tiny_index, monkeypatch, name, call, budget):
+    """Above the driver budget, the Spark plan's jobs."""
+    from blacklab_spark import query
+
+    monkeypatch.setattr(query, "DRIVER_BLOCKS", 0)
     n, rows = jobs_of(spark, lambda: call(tiny_index).collect())
     assert rows, name
     assert n <= budget, f"{name}: {n} Spark jobs > budget {budget}"
+
+
+@pytest.fixture(scope="module")
+def tiny_two_segments(spark, tmp_path_factory):
+    from blacklab_spark.build import add_segment, build_index
+    from blacklab_spark.fixtures import pages_df
+    from blacklab_spark.query import Index
+
+    out = str(tmp_path_factory.mktemp("ix_tiny_two"))
+    pages = pages_df(spark, "tiny")
+    build_index(spark, pages.filter(pages.url < "https://site3"), out, n_shards=2, block_size=4)
+    add_segment(
+        spark, pages.filter(pages.url >= "https://site3"), out, "seg1", n_shards=1, block_size=4
+    )
+    return Index(spark, out)
+
+
+@pytest.mark.parametrize("segments", [1, 2])
+@pytest.mark.parametrize("name", list(RANKED))
+def test_small_ranked_query_runs_no_spark_job(
+    spark, tiny_index, tiny_two_segments, monkeypatch, segments, name
+):
+    """Under the driver budget a ranked term query reads and scores its
+    postings in process and returns a local relation: collect() runs no
+    Spark job, and the rows equal the Spark plan's."""
+    from blacklab_spark import query
+
+    ix = tiny_index if segments == 1 else tiny_two_segments
+    assert len(ix.segments) == segments
+    n, rows = jobs_of(spark, lambda: RANKED[name](ix).collect())
+    assert rows and n == 0, f"{name}: {n} Spark jobs"
+    monkeypatch.setattr(query, "DRIVER_BLOCKS", 0)
+    assert sorted(rows) == sorted(RANKED[name](ix).collect())
 
 
 def test_topk_and_scores_only_docs_with_every_term(tiny_index):

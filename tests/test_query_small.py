@@ -71,26 +71,28 @@ def test_q10_near(small_index, small_oracle):
 
 
 @pytest.mark.parametrize("quantize", [True, False])
-def test_q11_topk_single(small_index, small_oracle, quantize):
-    got = ranks(small_index.topk(["w00010"], k=10, quantize=quantize))
-    assert_rank_identical(got, small_oracle.topk(["w00010"], k=10, quantize=quantize))
+def test_q11_topk_single(small_index, small_oracle, quantize, ranked_paths):
+    want = small_oracle.topk(["w00010"], k=10, quantize=quantize)
+    for _ in ranked_paths():
+        assert_rank_identical(ranks(small_index.topk(["w00010"], k=10, quantize=quantize)), want)
 
 
-def test_q12_topk_multi(small_index, small_oracle):
+def test_q12_topk_multi(small_index, small_oracle, ranked_paths):
     q = ["w00003", "w00010", "w00100"]
-    got = ranks(small_index.topk(q, k=10))
-    assert_rank_identical(got, small_oracle.topk(q, k=10))
+    for _ in ranked_paths():
+        assert_rank_identical(ranks(small_index.topk(q, k=10)), small_oracle.topk(q, k=10))
 
 
-def test_q13_topk_head_tail(small_index, small_oracle):
+def test_q13_topk_head_tail(small_index, small_oracle, ranked_paths):
     q = ["the", "w04997"]
-    got = ranks(small_index.topk(q, k=100))
-    assert_rank_identical(got, small_oracle.topk(q, k=100))
+    for _ in ranked_paths():
+        assert_rank_identical(ranks(small_index.topk(q, k=100)), small_oracle.topk(q, k=100))
 
 
-def test_q14_topk_filtered(small_index, small_oracle):
-    got = ranks(small_index.topk(["w00010"], k=10, where_lang="en"))
-    assert_rank_identical(got, small_oracle.topk(["w00010"], k=10, where_lang="en"))
+def test_q14_topk_filtered(small_index, small_oracle, ranked_paths):
+    want = small_oracle.topk(["w00010"], k=10, where_lang="en")
+    for _ in ranked_paths():
+        assert_rank_identical(ranks(small_index.topk(["w00010"], k=10, where_lang="en")), want)
 
 
 def test_q15_count(small_index, small_oracle):
@@ -165,7 +167,7 @@ def test_topk_spans_accepts_bcql(small_index):
     assert all(r["score"] > 0 for r in top)
 
 
-def test_topk_and_conjunctive_vs_numpy(small_index):
+def test_topk_and_conjunctive_vs_numpy(small_index, ranked_paths):
     """AND-ranked top-k: only docs containing ALL terms rank; scores equal
     an independent numpy BM25 sum with global per-term idf."""
     import numpy as np
@@ -173,10 +175,7 @@ def test_topk_and_conjunctive_vs_numpy(small_index):
 
     ix = small_index
     terms = ["the", "click"]
-    got = ix.topk_and(terms, k=10, quantize=False).orderBy("rank").collect()
     allowed = {r.doc_id for r in ix.and_docs(terms).collect()}
-    assert 0 < len(got) <= 10
-    assert all(r.doc_id in allowed for r in got)
 
     dl = {r.doc_id: r.doc_len for r in ix.docs.select("doc_id", "doc_len").collect()}
     n, avgdl = ix.n_docs, ix.avgdl
@@ -192,9 +191,13 @@ def test_topk_and_conjunctive_vs_numpy(small_index):
                     c + K1 * (1 - B + B * dl[d] / avgdl)
                 )
     exp = sorted(((-s, d) for d, s in score.items()))[:10]
-    assert [r.doc_id for r in got] == [d for _, d in exp]
-    for r, (neg_s, _) in zip(got, exp):
-        assert abs(r.score - (-neg_s)) < 1e-9
+    for path in ranked_paths():
+        got = ix.topk_and(terms, k=10, quantize=False).orderBy("rank").collect()
+        assert 0 < len(got) <= 10, path
+        assert all(r.doc_id in allowed for r in got), path
+        assert [r.doc_id for r in got] == [d for _, d in exp], path
+        for r, (neg_s, _) in zip(got, exp):
+            assert abs(r.score - (-neg_s)) < 1e-9, path
 
 
 def test_find_ranked_bcql(small_index):
